@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.RunStamps
 import graft.schema.{BankSchema, Thresholds}
 
 /** Single-pass error-channel design (SURVEY.md §4.3a).
@@ -22,6 +23,11 @@ object Stage {
   val Raw = "_raw"
   /** No error recorded by any stage so far. */
   def ok: Column = col(ErrType).isNull
+  /** The run's one instant. Parse stamps it as `_ingestion_timestamp`;
+    * every later stamp copies that column, so all stamps of one pipeline
+    * build agree, in both sinks.
+    */
+  def runInstant: Column = col("_ingestion_timestamp")
   /** Compute `value` only for not-yet-errored rows (exception short-circuit). */
   def guarded(value: Column): Column = when(ok, value)
 }
@@ -58,7 +64,7 @@ object Parse {
       keep.map(col) ++ Seq(col(Stage.Raw)) ++
         BankSchema.inputColumns.map(c => col(s"_p.$c").as(c)) ++
         Seq(
-          current_timestamp().as("_ingestion_timestamp"),
+          RunStamps.runTimestamp().as("_ingestion_timestamp"),
           col("_p._error_type").as(Stage.ErrType),
           col("_p._error_message").as(Stage.ErrMsg)): _*)
   }
@@ -70,7 +76,7 @@ object Parse {
     val raw = to_json(struct(df.columns.map(col): _*))
     df.select(
       Seq(raw.as(Stage.Raw)) ++ df.columns.map(col) ++ Seq(
-        current_timestamp().as("_ingestion_timestamp"),
+        RunStamps.runTimestamp().as("_ingestion_timestamp"),
         lit(null).cast(StringType).as(Stage.ErrType),
         lit(null).cast(StringType).as(Stage.ErrMsg)): _*)
   }
@@ -114,7 +120,7 @@ object Segment {
     val f = BankExprs.frequencyScore(col("previous"))
     val m = BankExprs.monetaryScore(col("balance"))
     staged
-      .withColumn("_processing_timestamp", current_timestamp())
+      .withColumn("_processing_timestamp", Stage.runInstant)
       .withColumn("rfm_scores", Stage.guarded(BankExprs.rfmScoresJson(r, f, m)))
       .withColumn("customer_segment",
         Stage.guarded(BankExprs.customerSegment(r, f, m)))
@@ -128,7 +134,7 @@ object Segment {
 object Prepare {
   def apply(staged: DataFrame): DataFrame =
     staged
-      .withColumn("processing_timestamp", current_timestamp())
-      .withColumn("_batch_id", Stage.guarded(expr("uuid()")))
+      .withColumn("processing_timestamp", Stage.runInstant)
+      .withColumn("_batch_id", Stage.guarded(RunStamps.runUuid()))
       .withColumn("_pipeline_version", lit(Thresholds.PipelineVersion))
 }

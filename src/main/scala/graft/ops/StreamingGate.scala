@@ -395,6 +395,11 @@ object StreamingGate {
               tmp, i)
           }
         }
+        // One file would be a single batch, not a watermark progression:
+        // fail loudly rather than gate a vacuous witness.
+        val files = root.list().count(_.startsWith("replay_"))
+        require(files >= 2,
+          s"q278 replay has $files data file(s) at group=$group; need >= 2")
         runReplay(s, root, AppendSinkName, OutputMode.Append(),
           batch.schema)
       },

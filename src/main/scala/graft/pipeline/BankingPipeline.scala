@@ -47,10 +47,12 @@ object BankingPipeline {
   def stagesAfterParse(staged: DataFrame, minAge: Int, maxAge: Int): DataFrame =
     Prepare(Segment(ValidateEnrich(staged, minAge, maxAge)))
 
-  /** Read the reference's native input: semicolon CSV file, 1 header line
-    * (bp.py:345). Kept as a raw-text read so malformed lines reach the
-    * parse stage's error channel instead of being dropped by the reader.
-    */
+  private val headerShape: String =
+    BankSchema.inputFields.map(_.name).mkString(";")
+
+  /** `"` plus exactly the characters of Java's `\s`. */
+  private val quoteOrSpace = "\" \t\n\u000B\f\r"
+
   /** A header line, identified structurally: the full 17-column header
     * shape — all column names in order, case-insensitive, tolerating the
     * UCI distribution's "-quoting and stray whitespace. Matching the
@@ -59,13 +61,20 @@ object BankingPipeline {
     * the parsing_error channel, like the reference's positional
     * skip_header_lines=1 would. Shared by the batch reader and the
     * streaming ingest path so the rule cannot drift between them.
+    *
+    * The regex runs behind a cheap necessary condition: the first
+    * character that is not a quote or whitespace must lowercase to the
+    * header's leading `a`. Data lines fail that test, so only candidate
+    * headers pay for the regex (`&&` short-circuits in generated code).
     */
-  private val headerShape: String =
-    BankSchema.inputFields.map(_.name).mkString(";")
-
   def isHeaderLine(line: Column): Column =
-    lower(regexp_replace(line, "[\"\\s]", "")) === headerShape
+    lower(substring(ltrim(line, quoteOrSpace), 1, 1)) === headerShape.take(1) &&
+      lower(regexp_replace(line, "[\"\\s]", "")) === headerShape
 
+  /** Read the reference's native input: semicolon CSV file, 1 header line
+    * (bp.py:345). Kept as a raw-text read so malformed lines reach the
+    * parse stage's error channel instead of being dropped by the reader.
+    */
   def readCsvLines(spark: SparkSession, path: String): DataFrame = {
     // Drop headers by predicate, not position: no ordering assumption
     // (limit(1) on a multi-split read can return an arbitrary row), one
@@ -90,7 +99,7 @@ object BankingPipeline {
         .as("raw_data"),
       col(Stage.ErrMsg).as("error_message"),
       col(Stage.ErrType).as("error_type"),
-      current_timestamp().as("timestamp")): _*)
+      Stage.runInstant.as("timestamp")): _*)
     EtlResult(processed, errors)
   }
 

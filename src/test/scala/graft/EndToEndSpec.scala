@@ -54,6 +54,34 @@ class EndToEndSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/processed").count() == 88)
   }
 
+  private def runFixture(input: String): Seq[String] = {
+    val out = Files.createTempDirectory("graft-e2e").toString
+    RunBankingEtl.run(spark, EtlConfig(input, s"$out/processed", s"$out/errors"))
+    spark.read.parquet(s"$out/processed").select("_batch_id")
+      .collect().map(_.getString(0)).toSeq
+  }
+
+  test("K3: two runs write disjoint _batch_id sets") {
+    val a = runFixture(fixturePath)
+    val b = runFixture(fixturePath)
+    assert(a.size == 44 && b.size == 44)
+    assert(a.toSet.intersect(b.toSet).isEmpty)
+  }
+
+  test("K3: _batch_id is distinct within a run spanning partitions") {
+    // Two copies of the same file: identical rows in two partitions,
+    // each partition's generator seeded apart.
+    val dir = Files.createTempDirectory("graft-e2e-parts")
+    Seq("a.csv", "b.csv").foreach(n =>
+      Files.copy(java.nio.file.Paths.get(fixturePath), dir.resolve(n)))
+    assert(BankingPipeline.readCsvLines(spark, dir.toString)
+      .rdd.getNumPartitions >= 2)
+    val ids = runFixture(dir.toString)
+    assert(ids.size == 88)
+    assert(ids.distinct.size == ids.size,
+      s"${ids.size - ids.distinct.size} duplicate _batch_id values")
+  }
+
   test("S2: custom age bounds are honored") {
     val res = BankingPipeline.fromLines(
       BankingPipeline.readCsvLines(spark, fixturePath),

@@ -91,6 +91,13 @@ class PipelineSpec extends SparkSpec {
     assert(lines.count() == 3) // both headers gone, all data rows kept
     val res = BankingPipeline.fromLines(lines)
     assert(res.processed.count() == 3 && res.errors.count() == 0)
+    // Hadoop's line reader strips a leading UTF-8 BOM, so a BOM-prefixed
+    // header reaches the predicate as a plain header and is dropped too.
+    val bom = dir.resolve("part-2.csv")
+    java.nio.file.Files.write(bom, ("\uFEFF" + header + "\n" + valid + "\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    assert(spark.read.text(bom.toString).head().getString(0).head == 'a')
+    assert(BankingPipeline.readCsvLines(spark, dir.toString).count() == 4)
   }
 
   test("a data row starting with 'age' is NOT silently dropped as a header") {
@@ -139,6 +146,29 @@ class PipelineSpec extends SparkSpec {
     val rows = res.processed.select("_batch_id", "_pipeline_version").collect()
     assert(rows.map(_.getString(0)).distinct.length == 2) // fresh uuid each
     assert(rows.forall(_.getString(1) == "1.2"))
+  }
+
+  test("all stamps of one pipeline build carry one instant") {
+    val res = BankingPipeline.fromLines(Seq(valid, "a;b;c").toDF("value"))
+    val stamps = res.processed.select("_ingestion_timestamp",
+      "_processing_timestamp", "processing_timestamp").head()
+    assert(stamps.getTimestamp(0) == stamps.getTimestamp(1) &&
+      stamps.getTimestamp(1) == stamps.getTimestamp(2))
+    assert(res.errors.select("timestamp").head().getTimestamp(0) ==
+      stamps.getTimestamp(0))
+  }
+
+  test("the ETL generates identical code from build to build") {
+    // Stamps inlined as literals would make every build's source unique,
+    // so each run would recompile and start cold in the JIT.
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    val lines = Seq(valid, "a;b;c").toDF("value")
+    def code(): Seq[String] = codegenStringSeq(
+      BankingPipeline.fromLines(lines).processed.queryExecution.executedPlan)
+      .map(_._2).sorted
+    val first = code()
+    Thread.sleep(5)
+    assert(first.nonEmpty && first == code())
   }
 
   test("error rows from stage k are not enriched by stage k+1 (short-circuit)") {

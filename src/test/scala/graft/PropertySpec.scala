@@ -116,6 +116,62 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("guarded isHeaderLine agrees with the unguarded full-shape regex") {
+    val names = graft.schema.BankSchema.inputFields.map(_.name)
+    // The rule as it stood before the first-character guard: the oracle.
+    def unguarded(line: org.apache.spark.sql.Column) =
+      lower(regexp_replace(line, "[\"\\s]", "")) === names.mkString(";")
+    val ws = Gen.oneOf(" ", "\t", "\n", "\r", "\u000B", "\f")
+    val pad = Gen.frequency(3 -> Gen.const(""), 2 -> ws,
+      1 -> Gen.listOfN(3, ws).map(_.mkString), 1 -> Gen.const("\""))
+    // Line ends may also carry characters outside `\s`, which neither
+    // rule strips.
+    val edge = Gen.frequency(6 -> pad,
+      1 -> Gen.oneOf("\u00A0", "\uFEFF", "\u2003"))
+    def mixCase(s: String): Gen[String] =
+      Gen.listOfN(s.length, Gen.oneOf(true, false)).map(up =>
+        s.zip(up).map { case (c, u) => if (u) c.toUpper else c }.mkString)
+    def padInside(s: String): Gen[String] = for {
+      at <- Gen.chooseNum(0, s.length); p <- pad
+    } yield s.take(at) + p + s.drop(at)
+    val token: String => Gen[String] = name => for {
+      cased <- Gen.frequency(2 -> Gen.const(name), 1 -> mixCase(name))
+      inner <- Gen.frequency(3 -> Gen.const(cased), 1 -> padInside(cased))
+      q <- Gen.oneOf("", "\"")
+      before <- pad; after <- pad
+    } yield before + q + inner + q + after
+    val header: Gen[String] = for {
+      toks <- Gen.sequence[List[String], String](names.map(token))
+      lead <- edge; trail <- edge
+    } yield lead + toks.mkString(";") + trail
+    val dataAge: Gen[String] = for {
+      rest <- Gen.oneOf("oops;truncated", "job;marital",
+        names.tail.map(_ + "x").mkString(";"), "42;admin;married")
+      t <- token("age")
+    } yield t + ";" + rest
+    val nearMiss: Gen[String] = for {
+      h <- header; drop <- Gen.chooseNum(0, h.length - 1)
+    } yield h.patch(drop, "", 1)
+    val lineGen: Gen[String] = Gen.frequency(
+      6 -> header, 3 -> nearMiss, 3 -> dataAge,
+      1 -> Gen.const(""), 1 -> Gen.listOfN(2, ws).map(_.mkString),
+      1 -> Gen.const("42;admin;married;tertiary;no;1500.5;yes;no;cellular;5;may;300;2;-1;0;unknown;no"),
+      1 -> edge.flatMap(p => Gen.alphaStr.map(p + _)))
+    val lines = sample(lineGen, 800)
+    // Interpreted (local relation) and generated-code (RDD scan) paths.
+    Seq(lines.toDF("value"), spark.sparkContext.parallelize(lines, 2).toDF("value"))
+      .foreach { df =>
+        val got = df.select(col("value"),
+          BankingPipeline.isHeaderLine(col("value")), unguarded(col("value")))
+          .collect().map(r => (r.getString(0), r.getBoolean(1), r.getBoolean(2)))
+        got.foreach { case (l, guarded, oracle) =>
+          assert(guarded == oracle, s"rules disagree on ${l.map(_.toInt)}")
+        }
+        // Not vacuous: both outcomes occur often.
+        assert(got.count(_._3) > 100 && got.count(!_._3) > 100)
+      }
+  }
+
   test("engagement score bounded in [-0.075, 1] on the natural domain") {
     val gen = for {
       p <- Gen.chooseNum(-1, 1000); c <- Gen.chooseNum(0, 1000)
