@@ -2,29 +2,23 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Strict parsing for the two-state A/B lever configs. A lever is
-  * either unset (the shipped branch) or set to EXACTLY its documented
-  * fallback value; any other value is a loud error. Before this, the
-  * string levers were read with `contains(fallback)`, so a typo'd
-  * value ("agh", "of") silently selected the SHIPPED branch — in an
-  * A/B probe that turns the comparison into A/A and silently
-  * invalidates the measurement. Same error discipline as
-  * SPARK_GRAFT_CTL_WINDOW, graft.q278_group, and
-  * graft.graph_edge_prepartition (ADVICE r12 class).
+/** Strict parsing for the `graft.*` session options: unset = the
+  * default; a set value that does not parse is an error naming the key,
+  * never a silent fallback to the default or a bare parse exception
+  * that does not say which option was bad (ADVICE r12 class).
   */
 object Levers {
-  /** True iff `key` is set to `fallback`; false iff unset; throws on
-    * anything else (including the never-documented "defaults" like
-    * "scalar" or "on" — unset IS the default spelling).
+  /** Boolean option (graft.broadcast_graph_frames,
+    * graft.graph_edge_prepartition): exactly true/false, any case.
     */
-  private[graft] def isSet(s: SparkSession, key: String,
-                           fallback: String): Boolean =
-    s.conf.getOption(key) match {
-      case None => false
-      case Some(v) if v == fallback => true
-      case Some(v) => throw new IllegalArgumentException(
-        s"$key must be unset or '$fallback', got '$v'")
-    }
+  private[graft] def bool(s: SparkSession, key: String,
+                          default: Boolean): Boolean =
+    s.conf.getOption(key).map {
+      case v if v.equalsIgnoreCase("true") => true
+      case v if v.equalsIgnoreCase("false") => false
+      case v => throw new IllegalArgumentException(
+        s"$key must be true/false, got '$v'")
+    }.getOrElse(default)
 
   /** Positive-integer scale knob (graft.tiles, graft.kmeans.k, ...):
     * unset = default; set = a named parse + range error instead of a

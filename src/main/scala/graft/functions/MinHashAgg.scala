@@ -30,6 +30,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * buffer, digests the shingle bytes once, and shuffles one fixed-width
   * array per group — the shape that matters when the group count is
   * billions.
+  *
+  * No catalog query calls it: it is the law oracle of the scalar
+  * [[MinHashSignature]] in PropertySpec, and it owns the hash family
+  * ([[MinHashAgg.As]], [[MinHashAgg.Bs]], [[MinHashAgg.P]]).
   */
 case class MinHashAgg(
     child: Expression,

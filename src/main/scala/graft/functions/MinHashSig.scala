@@ -14,8 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * codegen'd scalar expression: ARRAY<BIGINT> of `numHashes` minima of
   * the md5-head32 affine family ([[MinHashAgg.As]]/[[MinHashAgg.Bs]]
   * mod [[MinHashAgg.P]]) over the document's word 3-grams. Bit-identical
-  * to the shipped explode -> groupBy(doc_id) -> [[MinHashAgg]] pipeline
-  * (law-tested in PropertySpec), and to the DuckDB oracle replay of the
+  * to the explode -> groupBy(doc_id) -> [[MinHashAgg]] pipeline (the
+  * law's oracle in PropertySpec), and to the DuckDB oracle replay of the
   * same family — q25/q139/LSH oracles are unchanged by construction.
   *
   * Why a scalar beats the aggregate here: doc_id is UNIQUE per input

@@ -206,30 +206,14 @@ object SortedIntersect {
     Bridge.column(SortedIntersectArray(
       Bridge.expression(a), Bridge.expression(b)))
 
-  /** `array_intersect(a, b)` via the two-pointer merge; same
-    * `graft.sorted_inter = builtin` fallback lever as [[interCountBig]].
-    */
-  def interArray(s: org.apache.spark.sql.SparkSession,
-                 a: Column, b: Column): Column =
-    if (graft.Levers.isSet(s, "graft.sorted_inter", "builtin"))
-      org.apache.spark.sql.functions.array_intersect(a, b)
-    else array(a, b)
-
   /** Distinct-intersection count of two SORTED ARRAY<BIGINT> columns. */
   def count(a: Column, b: Column): Column =
     Bridge.column(SortedIntersectCount(
       Bridge.expression(a), Bridge.expression(b)))
 
-  /** `size(array_intersect(a, b))` as BIGINT via the two-pointer merge;
-    * `graft.sorted_inter = builtin` falls back to the builtin — the A/B
-    * lever the adoption measurements used (same pattern as
-    * `graft.pair_source`). Values are law-equal (PropertySpec), so the
-    * flag can never change results, only the physical loop.
+  /** `size(array_intersect(a, b))` as BIGINT via the two-pointer merge
+    * (value-equal to the builtin, law-tested in PropertySpec).
     */
-  def interCountBig(s: org.apache.spark.sql.SparkSession,
-                    a: Column, b: Column): Column =
-    if (graft.Levers.isSet(s, "graft.sorted_inter", "builtin"))
-      org.apache.spark.sql.functions.size(
-        org.apache.spark.sql.functions.array_intersect(a, b)).cast("long")
-    else count(a, b).cast("long")
+  def interCountBig(a: Column, b: Column): Column =
+    count(a, b).cast("long")
 }

@@ -60,19 +60,14 @@ object DedupOps {
     * scalar [[graft.functions.ShingleHashArray]] expression and then
     * exploded. Shared by the Jaccard pair join, decontamination, and
     * the composed curation pipeline. Row-identical to the explode ->
-    * md5 -> distinct() pipeline it replaces (law-tested), but with zero
-    * exchanges: doc_id is unique in every caller's frame, so that
-    * corpus-wide distinct's only effect was within-document dedup — an
-    * in-row sort — while shuffling the corpus's whole shingle volume.
-    * `graft.shingle_hashes=explode` reverts to the old shape for A/B.
+    * md5 -> distinct() pipeline (the law's oracle in PropertySpec), but
+    * with zero exchanges: doc_id is unique in every caller's frame, so
+    * that corpus-wide distinct's only effect was within-document dedup
+    * — an in-row sort — while shuffling the corpus's whole shingle
+    * volume.
     */
   private[graft] def hashedShingles(docs: DataFrame): DataFrame =
-    if (graft.Levers.isSet(docs.sparkSession, "graft.shingle_hashes",
-        "explode"))
-      rawShingles(docs)
-        .select(col("doc_id"), md5Long60(col("s")).as("s"))
-        .distinct()
-    else docs.select(col("doc_id"),
+    docs.select(col("doc_id"),
       explode(graft.functions.ShingleHashes.hashesCol(col("text"))).as("s"))
 
   /** (doc_id, arr): each document's sorted-distinct hashed-shingle
@@ -164,8 +159,9 @@ object DedupOps {
     // turned the signature joins into sort-merge). The checkpoint keeps
     // plain row blocks, costs one job, and truncates the plan the three
     // consumers re-optimize. Array grain was probed here too
-    // (ProbeArrayGrain2): checkpointing the per-doc ARRAYS and deriving
-    // the join sides by explode re-pays the explode once per side and
+    // (ProbeArrayGrain2; PLANS.md, probe code at commit 9916828):
+    // checkpointing the per-doc ARRAYS and deriving the join sides by
+    // explode re-pays the explode once per side and
     // LOSES 1-7% to the pre-exploded checkpoint — the count exchange it
     // removes is cheaper than the double re-explode. Exploded grain
     // stands for this source; array grain is for consumers that need
@@ -227,8 +223,9 @@ object DedupOps {
     // spark.sql.shuffle.partitions (the cluster-scaled conf, exempt
     // from AQE coalescing by contract) spreads the explosion across
     // the configured parallelism: ProbeR15Par 3/3 pairwise, 1.22 ->
-    // 0.97 s at sf0.1, identical pair sets. At corpus scale the
-    // exchange is above the coalescing floor anyway, so the pin is
+    // 0.97 s at sf0.1, identical pair sets (PLANS.md,
+    // OPTIMIZATION_r15.md; probe code at commit 9916828). At corpus
+    // scale the exchange is above the coalescing floor anyway, so the pin is
     // neutral there. (The same treatment on coPurchasePairs' order
     // self-join was probed and REJECTED 0/3 — its per-key fanout is
     // bounded by order width, no explosion to spread.)
@@ -281,7 +278,8 @@ object DedupOps {
     // c = v; the min-aggregate costs the same exchange and starts every
     // label one hop ahead, so shallow graphs (the near-dup clusters the
     // dedup family feeds in) converge a whole iteration earlier
-    // (ProbeR15CC: q64's graph 2 iters -> 1).
+    // (ProbeR15CC: q64's graph 2 iters -> 1; OPTIMIZATION_r15.md,
+    // probe code at commit 9916828).
     var comp = edges.groupBy(col("d1").as("v"))
       .agg(least(min(col("d2")), col("d1")).as("c"))
       .select(col("v"), col("c"))
@@ -294,12 +292,14 @@ object DedupOps {
       // the r15 union formulation drops the old per-round left-join
       // (message frame -> groupBy -> join-back was 2 joins + 1
       // aggregate; this is 1 join + 1 aggregate for the same labels,
-      // measured q121's CC 2.50 -> 1.99 s alone, ProbeR15CC C).
+      // measured q121's CC 2.50 -> 1.99 s alone, ProbeR15CC C;
+      // OPTIMIZATION_r15.md, probe code at commit 9916828).
       // The SECOND round also path-halves (pointer jump). Jumping
       // every other round keeps the O(log d) chain guard at half the
       // per-round join cost (ProbeR15CC2 H: q121 1.99 -> 1.68 s,
-      // identical labels; flooding-only needs O(d) rounds and loses
-      // at depth — 6 iters vs 4 on q121's graph — so the jump stays).
+      // identical labels, OPTIMIZATION_r15.md, probe code at commit
+      // 9916828; flooding-only needs O(d) rounds and loses at depth —
+      // 6 iters vs 4 on q121's graph — so the jump stays).
       // `cL` carries the label ENTERING the final round, so the
       // convergence observe reads the LAST ROUND's delta during the
       // checkpoint job: a no-change final round certifies neighbor-min
@@ -390,7 +390,8 @@ object DedupOps {
       // drops the old per-round deg join-back. Row set unchanged:
       // every vertex of the symmetric graph has deg >= 1 and receives
       // >= 1 contribution (ProbeR15PR: identical output, 2/3 pairwise,
-      // avg 1.42 -> 1.06 s on q118's graph at sf0.1).
+      // avg 1.42 -> 1.06 s on q118's graph at sf0.1; OPTIMIZATION_r15.md,
+      // probe code at commit 9916828).
       val msgs = edges.join(ranks, edges("src") === ranks("v"))
         .select(col("dst").as("v"), expr("r div deg").as("c"),
           lit(null).cast("long").as("dg"))
@@ -428,72 +429,44 @@ object DedupOps {
 
   private[graft] val jaccardCte = jaccardCteOn("documents")
 
-  /** MinHash signature (ARRAY<BIGINT> of NumHashes seeded-hash minima) per
-    * doc, via the one-pass [[graft.functions.MinHashAgg]] aggregate.
-    */
-  private[graft] def minhashSignatures(sh: DataFrame): DataFrame =
-    sh.groupBy("doc_id").agg(
-      graft.functions.MinHashAgg.minhashSig(col("s"), NumHashes).as("sig"))
-
-  /** Per-document MinHash signatures straight from the text column, via
-    * the scalar [[graft.functions.MinHashSignature]] expression —
-    * bit-identical to `minhashSignatures(rawShingles(docs))` (law-tested)
-    * but a pure map: no shingle Generate, no per-group aggregate state,
-    * no exchange (doc_id is unique, so the aggregate path's partial
-    * aggregation could never combine anything anyway). At corpus scale
-    * the signature stage becomes embarrassingly parallel; the only
-    * shuffle left in LSH is the band-bucket join itself.
-    * `graft.minhash=agg` reverts to the aggregate pipeline for A/B.
+  /** Per-document MinHash signatures (ARRAY<BIGINT> of NumHashes
+    * seeded-hash minima) straight from the text column, via the scalar
+    * [[graft.functions.MinHashSignature]] expression — bit-identical to
+    * the [[graft.functions.MinHashAgg]] aggregate over the doc's raw
+    * shingles (the law's oracle in PropertySpec) but a pure map: no
+    * shingle Generate, no per-group aggregate state, no exchange
+    * (doc_id is unique, so an aggregate's partial aggregation could
+    * never combine anything anyway). At corpus scale the signature
+    * stage is embarrassingly parallel; the only shuffle left in LSH is
+    * the band-bucket join itself.
     */
   private[graft] def docSignatures(docs: DataFrame): DataFrame =
-    if (graft.Levers.isSet(docs.sparkSession, "graft.minhash", "agg"))
-      minhashSignatures(rawShingles(docs))
-    else docs
+    docs
       .select(col("doc_id"),
         graft.functions.MinHashSig.sigCol(col("text"), NumHashes).as("sig"))
       .where(col("sig").isNotNull)
 
   /** (doc_id, sig) per-document TF-weighted SimHash signatures over the
     * leading `bits` bits of md5(word), via the scalar
-    * [[graft.functions.SimHashSignature]] expression — a pure map
-    * (bit-identity with the exploded bit-sum aggregate law-tested in
-    * PropertySpec). `graft.simhash=agg` reverts to the explode ->
-    * groupBy(doc_id) -> `bits`-column bit-majority aggregate for A/B.
-    * Shared by q26 (bits=32) and q163 (bits=60).
+    * [[graft.functions.SimHashSignature]] expression — a pure map,
+    * bit-identical to the explode -> groupBy(doc_id) -> bit-majority
+    * aggregate (the law's oracle in PropertySpec). Shared by q26
+    * (bits=32) and q163 (bits=60).
     */
   private[graft] def simhashSignatures(docs: DataFrame,
                                        bits: Int): DataFrame = {
-    // Only the two shipped widths have verified scalar/agg A/B identity
-    // (the agg fallback picks its hash by width: head-32 vs md5Long60).
-    // Any other width must be a loud error, not a silently divergent A/B
+    // 32 and 60 are the widths the law and its oracle cover (the oracle
+    // picks its word hash by width: md5 head-32 vs md5Long60). Any
+    // other width is a loud error, not an unverified signature
     // (ADVICE r13).
     require(bits == 32 || bits == 60,
       s"simhashSignatures supports bits = 32 or 60, got $bits")
-    if (graft.Levers.isSet(docs.sparkSession, "graft.simhash", "agg")) {
-      val hashCol =
-        if (bits == 32)
-          conv(substring(md5(col("word")), 1, 8), 16, 10).cast("long")
-        else md5Long60(col("word"))
-      val wordHash = docs
-        .select(col("doc_id"),
-          explode(split(col("text"), " ")).as("word"))
-        .select(col("doc_id"), hashCol.as("h"))
-      val bitSums = wordHash.groupBy("doc_id").agg(
-        sum(when(shiftright(col("h"), 0).bitwiseAND(1L) === 1L, 1)
-          .otherwise(-1)).as("b0"),
-        (1 until bits).map(j =>
-          sum(when(shiftright(col("h"), j).bitwiseAND(1L) === 1L, 1)
-            .otherwise(-1)).as(s"b$j")): _*)
-      val sigExpr = (0 until bits)
-        .map(j => when(col(s"b$j") > 0, lit(1L << j)).otherwise(0L))
-        .reduce(_ + _)
-      bitSums.select(col("doc_id"), sigExpr.as("sig"))
-    } else docs.select(col("doc_id"),
+    docs.select(col("doc_id"),
       graft.functions.SimHashSig.sigCol(col("text"), bits).as("sig"))
-      // Null-text docs must vanish, matching the agg branch (whose
-      // explode of split(NULL) emits no rows) and the DuckDB oracle —
-      // the scalar expression is null exactly when text is null, so
-      // this filter is a no-op on non-null corpora (ADVICE r13).
+      // Null-text docs must vanish, matching the exploded aggregate
+      // (whose explode of split(NULL) emits no rows) and the DuckDB
+      // oracle — the scalar expression is null exactly when text is
+      // null, so this filter is a no-op on non-null corpora (ADVICE r13).
       .where(col("sig").isNotNull)
   }
 
@@ -585,7 +558,7 @@ object DedupOps {
       .join(da.select(col("doc_id").as("d2"), col("arr").as("sb")), "d2")
       .select(col("d1"), col("d2"),
         graft.functions.SortedIntersect
-          .interCountBig(da.sparkSession, col("sa"), col("sb")).as("inter"),
+          .interCountBig(col("sa"), col("sb")).as("inter"),
         size(col("sa")).cast("long").as("na"),
         size(col("sb")).cast("long").as("nb"))
       .select(col("d1"), col("d2"), col("inter"),
@@ -595,8 +568,8 @@ object DedupOps {
   /** (d1, d2) pairs with (exact) jaccard >= threshold, produced by the
     * selected source. `shOpt` lets callers share an already-checkpointed
     * hashed-shingle frame (the exact source's grain; the LSH source
-    * builds its own array frame — see ProbeArrayGrain2 for why the two
-    * sources want different grains).
+    * builds its own array frame — ProbeArrayGrain2 in PLANS.md, code at
+    * commit 9916828, measured why the two sources want different grains).
     */
   private[graft] def nearDupPairs(docs: DataFrame, source: String,
                                   shOpt: Option[DataFrame] = None,
@@ -708,7 +681,7 @@ object DedupOps {
             "d2")
           .select(col("d1"), col("d2"),
             graft.functions.SortedIntersect
-              .interCountBig(s, col("sa"), col("sb")).as("inter"))
+              .interCountBig(col("sa"), col("sb")).as("inter"))
         inter
           .join(cnt.as("ca"), col("d1") === col("ca.doc_id"))
           .join(cnt.as("cb"), col("d2") === col("cb.doc_id"))
@@ -793,7 +766,7 @@ object DedupOps {
             size(col("sa")).cast("bigint").as("na"),
             size(col("sb")).cast("bigint").as("nb"),
             graft.functions.SortedIntersect
-              .interCountBig(s, col("sa"), col("sb")).as("inter"))
+              .interCountBig(col("sa"), col("sb")).as("inter"))
           .where(col("inter") * 4 >= col("na") * 3)
           .select(col("da"), col("db"), col("na"), col("nb"), col("inter"),
             expr("inter * 10000 div na").as("containment_bps"))
@@ -1246,7 +1219,7 @@ object DedupOps {
             "d2")
           .select(agree.as("agree"),
             graft.functions.SortedIntersect
-              .interCountBig(s, col("aa"), col("ab")).as("inter"),
+              .interCountBig(col("aa"), col("ab")).as("inter"),
             (size(col("aa")) + size(col("ab"))).cast("long").as("nn"))
           .select(col("agree"), col("inter"),
             (col("nn") - col("inter")).as("uni"))

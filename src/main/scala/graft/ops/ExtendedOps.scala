@@ -43,9 +43,9 @@ object ExtendedOps {
     * include a row-unique key (every caller carries the entity key),
     * so cross-row duplicates cannot exist. Hash VALUES are
     * bit-identical to the old form (same xxhash64 seed over the same
-    * variant bytes, law-tested in PropertySpec), so candidate sets are
-    * unchanged. `graft.del_variants = explode` restores the chained
-    * Generate pipeline (the A/B lever; measurements in PLANS.md).
+    * variant bytes; PropertySpec's law checks every neighborhood
+    * against a plain enumeration hashed by the builtin xxhash64), so
+    * candidate sets are unchanged; measurements in PLANS.md.
     *
     * Hashing is xxhash64, not the md5-60-bit bridge: the variant hash
     * never reaches the oracle (DuckDB verifies with the full quadratic
@@ -54,39 +54,9 @@ object ExtendedOps {
     * the verifier discards — so the cheapest codegen'd hash wins.
     */
   private[graft] def deletionVariants(rows: DataFrame, name: String,
-      carry: Seq[String]): DataFrame = {
-    val cs = carry.map(col)
-    if (graft.Levers.isSet(rows.sparkSession, "graft.del_variants",
-        "explode")) {
-      val base = rows.select(cs :+ col(name).as("s0"): _*)
-      val v0 = base.select(cs :+ col("s0").as("v"): _*)
-      // one deletion at position i; keep (s1, i) so the second deletion
-      // can restrict to original positions j > i
-      val d1x = base.where(length(col("s0")) >= 1)
-        .select(cs :+ col("s0") :+
-          explode(sequence(lit(1), length(col("s0")))).as("i"): _*)
-        .select(cs :+ col("i") :+
-          concat(col("s0").substr(lit(1), col("i") - 1),
-            col("s0").substr(col("i") + 1, lit(Int.MaxValue))).as("s1"): _*)
-      val d1 = d1x.select(cs :+ col("s1").as("v"): _*)
-      // deleting position j' of s1 for j' in [i, len(s1)] removes
-      // original position j = j'+1 > i — each unordered {i, j} once
-      val d2 = d1x.where(length(col("s1")) >= col("i"))
-        .select(cs :+ col("s1") :+
-          explode(sequence(col("i"), length(col("s1")))).as("j"): _*)
-        .select(cs :+
-          concat(col("s1").substr(lit(1), col("j") - 1),
-            col("s1").substr(col("j") + 1, lit(Int.MaxValue))).as("v"): _*)
-      // distinct: equal variants of one entity ("aab" losing position 1
-      // or 2 both yield "ab") would otherwise multiply candidate-join
-      // output before ITS distinct
-      v0.unionAll(d1).unionAll(d2)
-        .select(cs :+ xxhash64(col("v")).as("vh"): _*)
-        .distinct()
-    } else
-      rows.select(cs :+ explode(graft.functions.DeletionVariants
-        .hashesCol(col(name))).as("vh"): _*)
-  }
+      carry: Seq[String]): DataFrame =
+    rows.select(carry.map(col) :+ explode(graft.functions.DeletionVariants
+      .hashesCol(col(name))).as("vh"): _*)
 
   private def base: Map[String, Q] = Map(
 
@@ -1069,7 +1039,8 @@ object ExtendedOps {
         // The variant frame is SLIM — (vh, block keys, custkey), no
         // c_name (VERDICT r11 #5, adopted on a ProbeQ121Slim A/B x3 win
         // at sf0.1: B < A in all three alternating pairs, best 3.15 ->
-        // 2.99 s, identical 32,527-pair sets): the corpus-scale variant
+        // 2.99 s, identical 32,527-pair sets; PLANS.md, probe code at
+        // commit 9916828): the corpus-scale variant
         // self-join — the heaviest shuffle here — sheds ~18 name bytes
         // of ~48 per row on BOTH sides, and the name fetch moves to the
         // candidate grain. This supersedes the r6 verify-inside-join

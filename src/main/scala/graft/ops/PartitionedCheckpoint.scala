@@ -76,13 +76,8 @@ object PartitionedCheckpoint {
     }
 
   private[graft] def enabled(df: DataFrame): Boolean =
-    df.sparkSession.conf.getOption("graft.graph_edge_prepartition")
-      .exists {
-        case v if v.equalsIgnoreCase("true") => true
-        case v if v.equalsIgnoreCase("false") => false
-        case v => throw new IllegalArgumentException(
-          s"graft.graph_edge_prepartition must be true/false, got '$v'")
-      }
+    graft.Levers.bool(df.sparkSession, "graft.graph_edge_prepartition",
+      default = false)
 
   private[graft] def byKeys(df: DataFrame, keyCols: String*): DataFrame =
     if (enabled(df)) {

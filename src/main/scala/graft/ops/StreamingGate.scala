@@ -122,19 +122,18 @@ object StreamingGate {
     * work, and lowering 32 -> 8 -> 4 measured 45-55% then another
     * ~5-8% off every gate wall at sf0.1 (ProbeStreamPartitions:
     * 12/12 + 6/6 pairwise wins, byte-identical outputs — hash
-    * aggregation and keyed state are partition-count-independent).
-    * Gate plumbing only, not posture: a production deployment sizes
-    * stream partitions to the data; these queries replay bounded
-    * fixtures. The lever is output-invariant, so unlike q280's
-    * grouping it is safe as a runtime conf (loud on a bad value).
+    * aggregation and keyed state are partition-count-independent;
+    * numbers in PLANS.md and OPTIMIZATION_r15.md, probe code at commit
+    * 9916828). Gate plumbing only, not posture: a production deployment
+    * sizes stream partitions to the data; these queries replay bounded
+    * fixtures.
     */
-  private def streamParts(s: SparkSession): Int =
-    graft.Levers.posInt(s, "graft.stream_parts", 4)
+  private val StreamParts = 4
 
   private def withStreamParts[A](s: SparkSession)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val old = s.conf.get(key)
-    s.conf.set(key, streamParts(s).toString)
+    s.conf.set(key, StreamParts.toString)
     try body finally s.conf.set(key, old)
   }
 
@@ -170,17 +169,16 @@ object StreamingGate {
       .orderBy("hour_epoch", "event_type")
   }
 
-  /** q280's bucket-per-file grouping. UNLIKE q278's lever, this is a
-    * compile-time constant, not a runtime conf: the emission multiset
-    * of a mapGroupsWithState replay DEPENDS on the batch partition, so
-    * the DuckDB oracle's `// N` must move in lockstep — a runtime lever
-    * would let a typo silently diverge gate and oracle. ProbeQ280Files
-    * measures alternative groupings through [[sessionReplay]] directly.
-    * grouped(3) (3 data batches at the testdata's 30-day span) adopted
-    * over grouped(2) (4 batches) on a ProbeQ280Files 3/3 pairwise win,
-    * best 3.66 vs 4.66 s at sf0.1 — the cost is per-batch planning,
-    * and witness health stays real (13/126 carry witnesses, all users
-    * multi-session at sf0.001/sf0.01).
+  /** q280's bucket-per-file grouping. Unlike q278's grouping it is not
+    * output-invariant: the emission multiset of a mapGroupsWithState
+    * replay DEPENDS on the batch partition, so the DuckDB oracle's
+    * `// N` must move in lockstep with this constant. grouped(3) (3
+    * data batches at the testdata's 30-day span) adopted over
+    * grouped(2) (4 batches) on a ProbeQ280Files 3/3 pairwise win, best
+    * 3.66 vs 4.66 s at sf0.1 (PLANS.md, OPTIMIZATION_r15.md; the probe
+    * drove [[sessionReplay]] directly, code at commit 9916828) — the
+    * cost is per-batch planning, and witness health stays real (13/126
+    * carry witnesses, all users multi-session at sf0.001/sf0.01).
     */
   private[graft] val SessionGroup = 3
 
@@ -366,24 +364,25 @@ object StreamingGate {
       (s, dir) => {
         val batch = normalizedBatch(s, dir)
           .select("ts", "event_type", "value")
-        // graft.q278_group: consecutive 5-day buckets per replay file
+        // Consecutive 5-day buckets per replay file, `group` at a time
         // (any grouping >= 2 files is a real multi-batch watermark
         // progression with the SAME gated output, since the final
-        // watermark and row totals are grouping-independent; the lever
-        // trades per-batch planning cost against batch count).
-        // Default 4 (2 files / 2 data batches at the testdata's 7-bucket
-        // span), adopted round 16 on a ProbeQ278Files A/B x3 win over
-        // the r14 default 3: 3/3 pairwise, best 2.09 vs 2.37 s,
-        // identical 3585-row gated output — the last rung of the
-        // ladder (r13: 1 -> 2, r14: 2 -> 3), since < 2 files is no
-        // longer a multi-batch stream at all. Witness health measured
-        // per batch (ProbeR16Wm, sink rows by micro-batch): at group=4
-        // the run is b0:0, b1:2025, b2:1560 — 2025 rows emitted
-        // MID-STREAM under a watermark advanced by batch 0, and the
-        // trailing no-data batch flushes the final-watermark remainder
-        // — so the incremental-append witness stays non-vacuous with
-        // one fewer stateful batch to plan and commit.
-        val group = graft.Levers.posInt(s, "graft.q278_group", 4)
+        // watermark and row totals are grouping-independent; the
+        // grouping trades per-batch planning cost against batch count).
+        // 4 (2 files / 2 data batches at the testdata's 7-bucket span)
+        // adopted round 16 on a ProbeQ278Files A/B x3 win over the r14
+        // value 3: 3/3 pairwise, best 2.09 vs 2.37 s, identical
+        // 3585-row gated output — the last rung of the ladder (r13:
+        // 1 -> 2, r14: 2 -> 3), since < 2 files is no longer a
+        // multi-batch stream at all. Witness health measured per batch
+        // (ProbeR16Wm, sink rows by micro-batch): at group=4 the run is
+        // b0:0, b1:2025, b2:1560 — 2025 rows emitted MID-STREAM under a
+        // watermark advanced by batch 0, and the trailing no-data batch
+        // flushes the final-watermark remainder — so the
+        // incremental-append witness stays non-vacuous with one fewer
+        // stateful batch to plan and commit. Numbers in PLANS.md and
+        // OPTIMIZATION_r16.md; both probes' code at commit 9916828.
+        val group = 4
         val root = replayFixture(s"q278g$group", dir) { tmp =>
           val bucketed = batch.withColumn("bucket",
             expr("unix_timestamp(ts) div 432000"))

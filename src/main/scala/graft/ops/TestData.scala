@@ -24,9 +24,8 @@ object TestData {
     * once per session. The cached value is an immutable LOGICAL
     * PLAN — downstream queries still build fresh physical plans (no
     * AQE/stage reuse across queries), and the testdata dir is
-    * read-only by contract. `graft.table_cache=off` restores the
-    * uncached read (the A/B lever; also the escape hatch if a
-    * mutable-source deployment ever hosts this catalog).
+    * read-only by contract (a mutable-source deployment would need an
+    * uncached read instead).
     *
     * Plain map with LAZY EVICTION of stopped sessions (ADVICE r12:
     * the previous WeakHashMap[SparkSession, _] could never collect an
@@ -44,17 +43,14 @@ object TestData {
     new java.util.concurrent.ConcurrentHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]()
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    if (graft.Levers.isSet(spark, "graft.table_cache", "off"))
-      build(spark, sfDir, name)
-    else {
-      relationCache.forEach((session, _) =>
-        if (session.sparkContext.isStopped) relationCache.remove(session))
-      val perSession = relationCache.computeIfAbsent(spark,
-        _ => new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
-      perSession.computeIfAbsent((sfDir, name),
-        _ => build(spark, sfDir, name))
-    }
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    relationCache.forEach((session, _) =>
+      if (session.sparkContext.isStopped) relationCache.remove(session))
+    val perSession = relationCache.computeIfAbsent(spark,
+      _ => new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
+    perSession.computeIfAbsent((sfDir, name),
+      _ => build(spark, sfDir, name))
+  }
 
   private def build(spark: SparkSession, sfDir: String,
                     name: String): DataFrame =

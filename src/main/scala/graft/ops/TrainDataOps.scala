@@ -351,7 +351,8 @@ object TrainDataOps {
     graft.Levers.posInt(s, "graft.kmeans.k", 8)
 
   /** The IVF probe assignment shared by q199, q274 and the hot-cell
-    * measurement probe (ProbeQ274Cells): each query's 2 nearest cells
+    * measurement probe (ProbeQ274Cells: numbers in PLANS.md, probe code
+    * at commit 9916828): each query's 2 nearest cells
     * by exact L2 against the broadcast k-row centroid frame. A single
     * definition so the probe rule can never silently diverge between
     * the queries and the posture measurement recorded in PLANS.md.
@@ -644,9 +645,9 @@ object TrainDataOps {
         // q24/q110/q121, and the same checkpoint the q148 site above
         // already had. Adopted round 13 on a ProbeQ111Ckpt A/B x3 win
         // at sf0.1 (B < A in all three pairs, best 0.93 vs 1.57 s,
-        // identical top-20). The (doc_id, fp) frame is 16 bytes/row —
-        // at corpus scale the checkpoint is fingerprint-sized, never
-        // text-sized.
+        // identical top-20; PLANS.md, probe code at commit 9916828).
+        // The (doc_id, fp) frame is 16 bytes/row — at corpus scale the
+        // checkpoint is fingerprint-sized, never text-sized.
         val f = winnowFingerprints(table(s, dir, "documents"))
           .localCheckpoint(eager = true)
         f.as("a").join(f.as("b"),

@@ -30,7 +30,7 @@ object WarehouseOps {
     * making, not a hardcoded hint.
     */
   private[graft] def graphBroadcastOn(s: SparkSession): Boolean =
-    s.conf.getOption("graft.broadcast_graph_frames").forall(_.toBoolean)
+    graft.Levers.bool(s, "graft.broadcast_graph_frames", default = true)
 
   private[graft] def graphHint(df: DataFrame): DataFrame =
     if (graphBroadcastOn(df.sparkSession)) broadcast(df) else df
@@ -56,7 +56,8 @@ object WarehouseOps {
   private[graft] def coPurchasePairsPlan(s: SparkSession, dir: String): DataFrame = {
     // ONE exchange serves the dedup AND the self-join (r16, ProbeR16CoP
     // 3/3 pairwise, ~-22%, identical pair sets; initial-plan Exchange
-    // 5 -> 3): repartition on `o` first — HashPartitioning(o) satisfies
+    // 5 -> 3; OPTIMIZATION_r16.md, probe code at commit 9916828):
+    // repartition on `o` first — HashPartitioning(o) satisfies
     // the distinct's ClusteredDistribution(o, p) (same o => same
     // partition), and the self-join on `o` then reuses the same layout
     // on both sides. The old shape paid Exchange(o, p) for the distinct
@@ -192,7 +193,8 @@ object WarehouseOps {
   private[graft] def repeatCoPurchasePairs(s: SparkSession,
       dir: String): DataFrame = {
     // Same fused single-exchange dedup+join layout as
-    // coPurchasePairsPlan (r16, ProbeR16CoP 3/3 pairwise, ~-11%).
+    // coPurchasePairsPlan (r16, ProbeR16CoP 3/3 pairwise, ~-11%;
+    // OPTIMIZATION_r16.md, probe code at commit 9916828).
     val li = PartitionedCheckpoint.repartitionByConf(
       table(s, dir, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
@@ -216,7 +218,8 @@ object WarehouseOps {
     * rows (one per order) BEFORE the support-cut aggregate. The
     * (p1, p2) frequent-pair semi-join gates the third basket join —
     * textbook A-priori placement; see the q234 comment below for the
-    * ProbeQ234Prune measurement that makes the placement load-bearing.
+    * ProbeQ234Prune measurement that makes the placement load-bearing
+    * (PLANS.md, probe code at commit 9916828).
     */
   private[graft] def aprioriTripleParts(s: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
@@ -464,7 +467,8 @@ object WarehouseOps {
         // materialized leaf (q110/q118 discipline).
         val pairs = coPurchasePairs(s, dir)
         // deg is CHECKPOINTED (r16, ProbeR16Tri B, 3/3 pairwise vs the
-        // old shape, ~2.7-3.5 -> ~2.1 s): it used to be a lazy aggregate
+        // old shape, ~2.7-3.5 -> ~2.1 s; OPTIMIZATION_r16.md, probe code
+        // at commit 9916828): it used to be a lazy aggregate
         // recomputed from the pairs checkpoint inside the FINAL plan's
         // deg join — one whole extra 2E-row exchange per invocation.
         // It is a |V|-row long/long frame, the same node-grain size
@@ -474,11 +478,12 @@ object WarehouseOps {
           .groupBy("n").agg(count(lit(1)).as("deg"))
           .localCheckpoint(eager = true)
         // The oriented edge list stays LAZY under the default gate
-        // (r16/ProbeR16Tri): its orientation joins are broadcasts of
-        // the deg checkpoint over the pairs checkpoint — pure map work
-        // — so materializing it bought nothing but a blocking barrier;
-        // its two consumers (adjacency build, probe side of the closing
-        // join) each re-run the map over the same materialized leaves.
+        // (r16/ProbeR16Tri, same record): its orientation joins are
+        // broadcasts of the deg checkpoint over the pairs checkpoint —
+        // pure map work — so materializing it bought nothing but a
+        // blocking barrier; its two consumers (adjacency build, probe
+        // side of the closing join) each re-run the map over the same
+        // materialized leaves.
         // With graft.broadcast_graph_frames=false the orientation joins
         // degrade to SHUFFLED joins, and re-running those twice is
         // O(E) shuffle traffic — so the degraded mode checkpoints e
@@ -519,7 +524,7 @@ object WarehouseOps {
             col("dst") === col("jv"))
           .select(col("src").as("ta"), col("dst").as("tb"),
             explode(graft.functions.SortedIntersect
-              .interArray(s, col("nu"), col("nv"))).as("tc"))
+              .array(col("nu"), col("nv"))).as("tc"))
         // LIMIT before the deg join (r16): the join is 1:1 on part —
         // every triangle vertex is a graph node — and the top-20 order
         // keys (triangles, part) exist before it, so selecting the 20
@@ -1445,7 +1450,7 @@ object WarehouseOps {
           .where(col("du") >= 3 && col("dv") >= 3)
           .select(col("u"), col("v"), col("du"), col("dv"),
             graft.functions.SortedIntersect
-              .interCountBig(s, col("nu"), col("nv")).as("common"))
+              .interCountBig(col("nu"), col("nv")).as("common"))
           .where(col("common") >= 1)
           .withColumn("jaccard_bps",
             expr("common * 10000 div (du + dv - common)"))
@@ -1604,7 +1609,8 @@ object WarehouseOps {
     "q174_assoc_rules" -> Q(
       (s, dir) => {
         // Fused single-exchange dedup (r16, ProbeR16Cf 3/3 pairwise,
-        // 1.5-1.7 -> 1.2-1.5 s): repartition(conf, o) + distinct, NO
+        // 1.5-1.7 -> 1.2-1.5 s; OPTIMIZATION_r16.md, probe code at
+        // commit 9916828): repartition(conf, o) + distinct, NO
         // checkpoint — the one pinned exchange is reused by both
         // self-join sides (the checkpointed frame carried no
         // partitioning, so the join re-exchanged BOTH sides and the
@@ -1948,7 +1954,8 @@ object WarehouseOps {
     // in the order| instead of C(width, 3). The placement is
     // load-bearing: Catalyst does NOT push a left-semi below the
     // third basket join here (ProbeQ234Prune: canonicalized plans
-    // differ), so a post-join semi would materialize every a<b<c
+    // differ; PLANS.md, probe code at commit 9916828), so a post-join
+    // semi would materialize every a<b<c
     // triple first — fatal on wide baskets at 100 TB. At sf0.1 the
     // two placements are a measured wash (best 1.94 vs 1.97 s,
     // identical pre-cut candidate counts); the early prune is adopted

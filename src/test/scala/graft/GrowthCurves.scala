@@ -51,9 +51,10 @@ object GrowthCurves {
   // array-grain adoption carries a curve measured on its SHIPPED shape.
   // Round 14 adds q234: its A-priori placement was reshaped (the
   // frequent-pair semi-join now gates the third basket join —
-  // ProbeQ234Prune), so it carries a curve measured on the SHIPPED
-  // shape, plus the structural count the bound predicts grows ~ r
-  // (apriori_triple_candidates: the fully-pruned candidate rows).
+  // ProbeQ234Prune, PLANS.md; probe code at commit 9916828), so it
+  // carries a curve measured on the SHIPPED shape, plus the structural
+  // count the bound predicts grows ~ r (apriori_triple_candidates: the
+  // fully-pruned candidate rows).
   private val AllHeavies = Seq("q110_full_dedup", "q121_entity_resolution",
     "q129_triangle_count", "q158_neighbor_similarity",
     "q275_labelprop_settle",

@@ -66,7 +66,8 @@ class LateCatalogLawSpec extends SparkSpec {
 
   test("q234 early A-priori prune equals the post-join prune") {
     // The shipped shape semi-joins (p1, p2) against the frequent-pair
-    // list BEFORE extending with the third item (ProbeQ234Prune:
+    // list BEFORE extending with the third item (ProbeQ234Prune in
+    // PLANS.md, probe code at commit 9916828:
     // Catalyst does not push a left-semi below the basket join, so the
     // placement is load-bearing for the C(width, 3) bound). This pins
     // that the placement is a pure optimization: the naive shape that

@@ -17,8 +17,8 @@ class OpsSpec extends SparkSpec {
   }
 
   test("minhash signatures identical for identical shingle sets") {
-    val sig = DedupOps.minhashSignatures(DedupOps.shingles(docs(
-      (1L, "a b c d e"), (2L, "a b c d e"), (3L, "x y z w v"))))
+    val sig = DedupOps.docSignatures(docs(
+      (1L, "a b c d e"), (2L, "a b c d e"), (3L, "x y z w v")))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(sig(1L) == sig(2L))
     assert(sig(1L) != sig(3L))

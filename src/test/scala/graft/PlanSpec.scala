@@ -296,7 +296,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q234's frequent-pair semi-join sits BELOW the third basket join") {
-    // The r14 A-priori placement (ProbeQ234Prune): the (p1, p2)
+    // The r14 A-priori placement (ProbeQ234Prune in PLANS.md, probe
+    // code at commit 9916828): the (p1, p2)
     // left-semi must gate the third basket join's input, not prune
     // after the full a<b<c fanout. Catalyst does not move it either
     // way, so the logical shape is load-bearing — this pins it: some
@@ -350,7 +351,8 @@ class PlanSpec extends SparkSpec {
   test("q139 exact side verifies via sorted-intersect arrays (r13 adoption)") {
     // The calibration's exact Jaccard must come from the array-grain
     // sorted merge, not a candidate x shingle equi-join + count
-    // exchange (ProbeArrayGrain2: wins every block).
+    // exchange (ProbeArrayGrain2: wins every block; PLANS.md, probe
+    // code at commit 9916828).
     val plan = executed("q139_minhash_calibration")
     assert(plan.contains("graft_sorted_inter_count"),
       s"sorted-intersect expression not in q139 plan:\n$plan")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -16,6 +17,54 @@ class PropertySpec extends SparkSpec {
 
   private def sample[A](g: Gen[A], n: Int, seed: Long = 42L): List[A] =
     Gen.listOfN(n, g)(Gen.Parameters.default, Seed(seed)).get
+
+  // Oracles for the sketch laws: the exploded pipelines each scalar
+  // expression replaced, written out here independently of DedupOps.
+
+  /** (doc_id, s): every word 3-gram of split(text, ' '), duplicates kept. */
+  private def oracleShingles(docs: DataFrame): DataFrame = docs
+    .select(col("doc_id"), split(col("text"), " ").as("w"))
+    .where(size(col("w")) >= 3)
+    .select(col("doc_id"), explode(expr(
+      "transform(sequence(1, size(w) - 2), " +
+        "i -> concat(element_at(w, i), ' ', element_at(w, i + 1), " +
+        "' ', element_at(w, i + 2)))")).as("s"))
+
+  /** (doc_id, sig): the 16-hash MinHash aggregate over the raw shingles. */
+  private def minhashAggOracle(docs: DataFrame): DataFrame =
+    oracleShingles(docs).groupBy("doc_id")
+      .agg(graft.functions.MinHashAgg.minhashSig(col("s"), 16).as("sig"))
+
+  /** (doc_id, s): explode + md5Long60 + distinct hashed shingles. */
+  private def shingleHashOracle(docs: DataFrame): DataFrame =
+    oracleShingles(docs)
+      .select(col("doc_id"),
+        conv(substring(md5(col("s")), 1, 15), 16, 10).cast("long").as("s"))
+      .distinct()
+
+  /** (doc_id, sig): explode words -> groupBy(doc_id) -> `bits`-column
+    * bit-sum -> strict-majority assembly, hashing each word by its
+    * leading `bits` md5 bits (32 = 8 hex chars, 60 = md5Long60).
+    */
+  private def simhashAggOracle(docs: DataFrame, bits: Int): DataFrame = {
+    val hashCol =
+      if (bits == 32)
+        conv(substring(md5(col("word")), 1, 8), 16, 10).cast("long")
+      else conv(substring(md5(col("word")), 1, 15), 16, 10).cast("long")
+    val bitSums = docs
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
+      .select(col("doc_id"), hashCol.as("h"))
+      .groupBy("doc_id").agg(
+        sum(when(shiftright(col("h"), 0).bitwiseAND(1L) === 1L, 1)
+          .otherwise(-1)).as("b0"),
+        (1 until bits).map(j =>
+          sum(when(shiftright(col("h"), j).bitwiseAND(1L) === 1L, 1)
+            .otherwise(-1)).as(s"b$j")): _*)
+    val sigExpr = (0 until bits)
+      .map(j => when(col(s"b$j") > 0, lit(1L << j)).otherwise(0L))
+      .reduce(_ + _)
+    bitSums.select(col("doc_id"), sigExpr.as("sig"))
+  }
 
   test("scoring functions are total: every int maps to one score in 1..5") {
     val vs = sample(Gen.chooseNum(-100000, 100000), 500) ++
@@ -314,7 +363,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("graft_minhash_sig equals the explode + graft_minhash aggregate") {
-    // The scalar signature must be BIT-identical to the shipped
+    // The scalar signature must be BIT-identical to the
     // rawShingles -> groupBy(doc_id) -> MinHashAgg pipeline on every
     // text shape split(' ') can produce: multi-byte UTF-8 words,
     // consecutive/leading/trailing spaces (empty words), single-char
@@ -334,15 +383,7 @@ class PropertySpec extends SparkSpec {
       "x  y  z", "é中 ß naïve é中")).distinct
     val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
-    val agg = docs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .where(size(col("w")) >= 3)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(w) - 2), " +
-          "i -> concat(element_at(w, i), ' ', element_at(w, i + 1), " +
-          "' ', element_at(w, i + 2)))")).as("s"))
-      .groupBy("doc_id")
-      .agg(graft.functions.MinHashAgg.minhashSig(col("s"), 16).as("sig"))
+    val agg = minhashAggOracle(docs)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val scalar = docs
       .select(col("doc_id"),
@@ -387,16 +428,7 @@ class PropertySpec extends SparkSpec {
       "x x x x", "é中 ß naïve é中 ß naïve")).distinct
     val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
-    val old = docs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .where(size(col("w")) >= 3)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(w) - 2), " +
-          "i -> concat(element_at(w, i), ' ', element_at(w, i + 1), " +
-          "' ', element_at(w, i + 2)))")).as("s0"))
-      .select(col("doc_id"),
-        conv(substring(md5(col("s0")), 1, 15), 16, 10).cast("long").as("s"))
-      .distinct()
+    val old = shingleHashOracle(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val arrs = docs
       .select(col("doc_id"),
@@ -412,74 +444,49 @@ class PropertySpec extends SparkSpec {
         s"old-only=${(old -- flat).take(5)}")
   }
 
-  test("sketch A/B levers agree on a degenerate corpus (null/empty/short)") {
-    // ADVICE r13 found the ONE place where the scalar branch and its
-    // agg/explode fallback diverged — on a null text, which the shipped
-    // testdata never contains. This pins the whole lever family on the
-    // corpus that would expose that class: null, empty, 1/2/3-word,
-    // repeated-word, and unicode texts. For each lever, frame equality
-    // (same doc_ids, same values) between the default scalar branch and
-    // the flagged fallback.
+  test("sketch entry points match their oracles on a degenerate corpus") {
+    // ADVICE r13 found the ONE place where a scalar sketch and its
+    // exploded form diverged — on a null text, which the shipped
+    // testdata never contains. This pins the shipped DedupOps entry
+    // points (including their null-signature filters) against the law
+    // oracles on the corpus that would expose that class: null, empty,
+    // 1/2/3-word, repeated-word, and unicode texts. Frame equality:
+    // same doc_ids, same values.
     val rows = Seq[(Long, String)](
       (1L, null), (2L, ""), (3L, "a"), (4L, "a b"), (5L, "a b c"),
       (6L, "a a a a"), (7L, "naïve café 日本 語 テスト"),
       (8L, "the quick brown fox jumps over the lazy dog"))
     val docs = rows.toDF("doc_id", "text")
-    def withFlag[A](k: String, v: String)(f: => A): A =
-      try { spark.conf.set(k, v); f } finally spark.conf.unset(k)
 
-    def sigSet(df: org.apache.spark.sql.DataFrame) = df
+    def sigSet(df: DataFrame) = df
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
-    val mhScalar = sigSet(graft.ops.DedupOps.docSignatures(docs))
-    val mhAgg = withFlag("graft.minhash", "agg")(
-      sigSet(graft.ops.DedupOps.docSignatures(docs)))
-    assert(mhScalar == mhAgg,
-      s"minhash lever diverged: scalar=${mhScalar.map(_._1)} " +
-        s"agg=${mhAgg.map(_._1)}")
+    val mh = sigSet(graft.ops.DedupOps.docSignatures(docs))
+    val mhOracle = sigSet(minhashAggOracle(docs))
+    assert(mh == mhOracle,
+      s"minhash diverged: shipped=${mh.map(_._1)} " +
+        s"oracle=${mhOracle.map(_._1)}")
 
+    def rowSet(df: DataFrame) = df
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     Seq(32, 60).foreach { bits =>
-      def shSet(df: org.apache.spark.sql.DataFrame) = df
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val scalar = shSet(graft.ops.DedupOps.simhashSignatures(docs, bits))
-      val agg = withFlag("graft.simhash", "agg")(
-        shSet(graft.ops.DedupOps.simhashSignatures(docs, bits)))
-      assert(scalar == agg, s"simhash($bits) lever diverged")
+      assert(rowSet(graft.ops.DedupOps.simhashSignatures(docs, bits)) ==
+        rowSet(simhashAggOracle(docs, bits)), s"simhash($bits) diverged")
     }
 
-    def rowSet(df: org.apache.spark.sql.DataFrame) = df
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val shScalar = rowSet(graft.ops.DedupOps.hashedShingles(docs))
-    val shExplode = withFlag("graft.shingle_hashes", "explode")(
-      rowSet(graft.ops.DedupOps.hashedShingles(docs)))
-    assert(shScalar == shExplode, "shingle-hash lever diverged")
+    assert(rowSet(graft.ops.DedupOps.hashedShingles(docs)) ==
+      rowSet(shingleHashOracle(docs)), "hashed shingles diverged")
   }
 
-  test("a typo'd A/B lever value is a loud error, not a silent A/A") {
-    // contains(fallback) parsing would select the shipped branch for
-    // any unrecognized value — in an A/B probe that measures A vs A
-    // and silently invalidates the result. Levers.isSet is strict.
-    val docs = Seq((1L, "a b c d")).toDF("doc_id", "text")
+  test("a bad graft.* option value is a loud error naming the key") {
+    // A bare NumberFormatException or "For input string" doesn't say
+    // which option was bad; every parse names its key.
     def withFlag[A](k: String, v: String)(f: => A): A =
       try { spark.conf.set(k, v); f } finally spark.conf.unset(k)
-    val e = intercept[IllegalArgumentException] {
-      withFlag("graft.minhash", "agh")(
-        graft.ops.DedupOps.docSignatures(docs).count())
+    val e1 = intercept[IllegalArgumentException] {
+      withFlag("graft.broadcast_graph_frames", "yes")(
+        graft.ops.WarehouseOps.graphBroadcastOn(spark))
     }
-    assert(e.getMessage.contains("graft.minhash") &&
-      e.getMessage.contains("agg"))
-    // The documented value still selects the fallback branch, and the
-    // never-documented "default spelling" is an error too (unset IS
-    // the default).
-    withFlag("graft.minhash", "agg")(
-      assert(graft.ops.DedupOps.docSignatures(docs).count() == 1L))
-    intercept[IllegalArgumentException] {
-      withFlag("graft.sorted_inter", "scalar")(
-        graft.functions.SortedIntersect.interCountBig(spark,
-          org.apache.spark.sql.functions.col("a"),
-          org.apache.spark.sql.functions.col("b")))
-    }
-    // Numeric knobs get the same named-error discipline (a bare
-    // NumberFormatException doesn't say which knob was bad).
+    assert(e1.getMessage.contains("graft.broadcast_graph_frames"))
     val e2 = intercept[IllegalArgumentException] {
       withFlag("graft.tiles", "eight")(graft.ops.DedupOps.tileCount(spark))
     }
@@ -511,23 +518,7 @@ class PropertySpec extends SparkSpec {
     val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
     for (bits <- Seq(32, 60)) {
-      val hashCol =
-        if (bits == 32)
-          conv(substring(md5(col("word")), 1, 8), 16, 10).cast("long")
-        else conv(substring(md5(col("word")), 1, 15), 16, 10).cast("long")
-      val bitSums = docs
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-        .select(col("doc_id"), hashCol.as("h"))
-        .groupBy("doc_id").agg(
-          sum(when(shiftright(col("h"), 0).bitwiseAND(1L) === 1L, 1)
-            .otherwise(-1)).as("b0"),
-          (1 until bits).map(j =>
-            sum(when(shiftright(col("h"), j).bitwiseAND(1L) === 1L, 1)
-              .otherwise(-1)).as(s"b$j")): _*)
-      val sigExpr = (0 until bits)
-        .map(j => when(col(s"b$j") > 0, lit(1L << j)).otherwise(0L))
-        .reduce(_ + _)
-      val agg = bitSums.select(col("doc_id"), sigExpr.as("sig"))
+      val agg = simhashAggOracle(docs, bits)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val scalar = docs.select(col("doc_id"),
           graft.functions.SimHashSig.sigCol(col("text"), bits).as("sig"))

@@ -240,7 +240,8 @@ object ScaleLint {
     * value domain, the calendar span, or query config — each entry's
     * justification is backed by a MEASURED input bound in
     * globalWindowBound (same discipline as cartesianBound). Inputs
-    * measured by ProbeGlobalWindow at sf0.001/sf0.01.
+    * measured by ProbeGlobalWindow at sf0.001/sf0.01 (PLANS.md; probe
+    * code at commit 9916828).
     */
   val globalWindowAllow: Map[String, String] = Map(
     "q141_filter_funnel[<global>]" ->

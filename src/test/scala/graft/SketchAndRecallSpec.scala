@@ -98,7 +98,7 @@ class SketchAndRecallSpec extends SparkSpec {
     // every banded candidate pair is scored exactly once
     val docs = TestData.table(spark, sf, "documents")
     val cand = DedupOps.bandedCandidates(
-      DedupOps.minhashSignatures(DedupOps.shingles(docs)), 4).count()
+      DedupOps.docSignatures(docs), 4).count()
     assert(rows.map(_._2).sum == cand,
       s"scored ${rows.map(_._2).sum} pairs, banding yields $cand")
   }
