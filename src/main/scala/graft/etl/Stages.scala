@@ -30,6 +30,15 @@ object Stage {
   def runInstant: Column = col("_ingestion_timestamp")
   /** Compute `value` only for not-yet-errored rows (exception short-circuit). */
   def guarded(value: Column): Column = when(ok, value)
+
+  /** An error row's message, re-derived by the stage that raised it from
+    * the row's `_raw` line and typed fields. Equal to `_error_message` on
+    * every error row, so a consumer that needs the message only for error
+    * rows can drop `_error_message` from the shared per-row work.
+    */
+  def errorMessage: Column =
+    when(col(ErrType) === "parsing_error", Parse.message(col(Raw)))
+      .when(col(ErrType) === "data_validation", ValidateEnrich.message(col("age")))
 }
 
 /** Stage 1 — `ParseCSVFn` (bp.py:109-156): semicolon CSV with RFC-4180
@@ -69,6 +78,10 @@ object Parse {
           col("_p._error_message").as(Stage.ErrMsg)): _*)
   }
 
+  /** The parsing_error message of a line: what parsing it again reports. */
+  def message(line: Column): Column =
+    graft.functions.ParseBankLine.parseBankLine(line).getField("_error_message")
+
   /** Adapter for already-typed rows (e.g. testdata-hosted frames): attach
     * the raw/error channel so the downstream stages apply unchanged.
     */
@@ -90,9 +103,7 @@ object ValidateEnrich {
             minAge: Int = Thresholds.MinValidAge,
             maxAge: Int = Thresholds.MaxValidAge): DataFrame = {
     val ageBad = !col("age").between(minAge, maxAge)
-    val valErr = when(Stage.ok && ageBad,
-      concat(lit("ValidationError: Age "), col("age").cast(StringType),
-        lit(" outside valid range")))
+    val valErr = when(Stage.ok && ageBad, message(col("age")))
     staged
       .withColumn(Stage.ErrMsg, coalesce(col(Stage.ErrMsg), valErr))
       .withColumn(Stage.ErrType,
@@ -109,6 +120,11 @@ object ValidateEnrich {
         Stage.guarded(BankExprs.engagementScore(
           col("previous"), col("campaign"), col("duration"), col("y"))))
   }
+
+  /** The data_validation message for an out-of-range age. */
+  def message(age: Column): Column =
+    concat(lit("ValidationError: Age "), age.cast(StringType),
+      lit(" outside valid range"))
 }
 
 /** Stage 3 — `CustomerSegmentationFn` (bp.py:217-269): RFM piecewise

@@ -3,7 +3,7 @@ package graft.functions
 import java.time.Instant
 import java.util.concurrent.ThreadLocalRandom
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{LeafExpression, Nondeterministic}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
@@ -73,6 +73,11 @@ object RunStamps {
   /** Column API: the current instant, fixed when the column is built. */
   def runTimestamp(): Column =
     Bridge.column(RunTimestamp(DateTimeUtils.instantToMicros(Instant.now())))
+
+  /** The instant `df`'s plan was stamped with by [[runTimestamp]], if any. */
+  def timestampOf(df: DataFrame): Option[Long] =
+    df.queryExecution.analyzed.flatMap(_.expressions.flatMap(
+      _.collectFirst { case RunTimestamp(micros) => micros })).headOption
 
   /** Column API: per-record uuids under a seed drawn when the column is built. */
   def runUuid(): Column =

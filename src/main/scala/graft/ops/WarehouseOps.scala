@@ -528,13 +528,13 @@ object WarehouseOps {
         // LIMIT before the deg join (r16): the join is 1:1 on part —
         // every triangle vertex is a graph node — and the top-20 order
         // keys (triangles, part) exist before it, so selecting the 20
-        // first turns a |V|-row join into a 20-row join.
+        // first turns a |V|-row join into a 20-row join. The |V|-row deg
+        // frame takes no hint: the planner broadcasts the 20-row side.
         tri.select(explode(array(col("ta"), col("tb"), col("tc"))).as("part"))
           .groupBy("part").agg(count(lit(1)).as("triangles"))
           .orderBy(col("triangles").desc, col("part"))
           .limit(20)
-          .join(graphHint(deg.select(col("n").as("part"), col("deg"))),
-            "part")
+          .join(deg.select(col("n").as("part"), col("deg")), "part")
           .select(col("part"), col("triangles"), col("deg"))
           .orderBy(col("triangles").desc, col("part"))
       },

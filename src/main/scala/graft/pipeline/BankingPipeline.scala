@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{DualSinkWrite, Sink, SinkCounts}
 import graft.etl._
 import graft.schema.{BankSchema, Thresholds}
 
@@ -89,19 +90,43 @@ object BankingPipeline {
   def split(staged: DataFrame, keep: Seq[String] = Nil): EtlResult = {
     val processed = staged.where(Stage.ok)
       .select((keep ++ BankSchema.outputColumns).map(col): _*)
-    val errors = staged.where(!Stage.ok).select(
-      keep.map(col) ++ Seq(
-      // Parse errors carry the raw line (bp.py:151); later stages carry the
-      // record rendered as JSON (documented divergence from Python dict-repr,
-      // SURVEY.md §2.3 V3).
-      when(col(Stage.ErrType) === "parsing_error", col(Stage.Raw))
-        .otherwise(to_json(struct(BankSchema.inputColumns.map(col): _*)))
-        .as("raw_data"),
-      col(Stage.ErrMsg).as("error_message"),
-      col(Stage.ErrType).as("error_type"),
-      Stage.runInstant.as("timestamp")): _*)
+    val errors = staged.where(!Stage.ok)
+      .select(keep.map(col) ++ errorRecord(col(Stage.ErrMsg)): _*)
     EtlResult(processed, errors)
   }
+
+  /** An error row as the error sink stores it (ERROR_RECORDS_SCHEMA,
+    * bp.py:80-85), given the row's message.
+    */
+  def errorRecord(message: Column): Seq[Column] = Seq(
+    // Parse errors carry the raw line (bp.py:151); later stages carry the
+    // record rendered as JSON (documented divergence from Python dict-repr,
+    // SURVEY.md §2.3 V3).
+    when(col(Stage.ErrType) === "parsing_error", col(Stage.Raw))
+      .otherwise(to_json(struct(BankSchema.inputColumns.map(col): _*)))
+      .as("raw_data"),
+    message.as("error_message"),
+    col(Stage.ErrType).as("error_type"),
+    Stage.runInstant.as("timestamp"))
+
+  /** What the one-scan write reads per row: the processed columns plus
+    * `_error_type` and `_raw`. The error sink's message and JSON render
+    * are built from these on error rows only, so the fused stage stays
+    * under HotSpot's 8000-byte `DontCompileHugeMethods` limit.
+    */
+  def sinkRows(staged: DataFrame): DataFrame =
+    staged.select((BankSchema.outputColumns :+ Stage.ErrType :+ Stage.Raw).map(col): _*)
+
+  /** Both sinks from one scan (K3, bp.py:341-383): one Spark job routes
+    * each staged row to the processed or the error table, each appended
+    * as parquet like [[writeTable]]. Returns the rows written per
+    * `customer_segment` (processed) and per `error_type` (errors).
+    */
+  def writeSinks(staged: DataFrame, outputTable: String,
+                 errorTable: String): (SinkCounts, SinkCounts) =
+    DualSinkWrite(sinkRows(staged), Stage.ErrType,
+      main = Sink(outputTable, BankSchema.outputColumns.map(col), "customer_segment"),
+      side = Sink(errorTable, errorRecord(Stage.errorMessage), "error_type"))
 
   /** U1 union-all of error streams (bag semantics, bp.py:368-372). */
   def unionErrors(streams: Seq[DataFrame]): DataFrame =

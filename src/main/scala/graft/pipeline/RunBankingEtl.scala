@@ -1,12 +1,18 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-import graft.schema.Thresholds
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import graft.etl.Parse
+import graft.functions.RunStamps
+import graft.schema.{BankSchema, Thresholds}
 
 /** CLI options contract of the reference (`BankingBatchOptions`,
   * bp.py:87-96): required --input_path/--output_table/--error_table,
-  * optional --stats_table (accepted, unused — vestigial in the reference
-  * too, bp.py:94), --min_age/--max_age with the reference defaults.
+  * optional --stats_table (vestigial in the reference, bp.py:94; here the
+  * run's row counts, [[graft.schema.BankSchema.statsSchema]]),
+  * --min_age/--max_age with the reference defaults.
   *
   * Divergence by design (SURVEY.md §3.1): the reference silently REWRITES
   * gs:// paths to a developer-machine path (bp.py:336-339); we reject
@@ -45,7 +51,8 @@ object EtlConfig {
 
 /** Batch entry point: the reference's `run_pipeline` (bp.py:318-385) as a
   * spark-submit main. Reads the semicolon CSV, runs the 4-stage pipeline,
-  * writes processed + flattened error streams.
+  * writes processed + flattened error streams in one Spark job, and, when
+  * --stats_table is given, appends that job's row counts there.
   */
 object RunBankingEtl {
   def main(args: Array[String]): Unit = {
@@ -62,12 +69,23 @@ object RunBankingEtl {
     spark.stop()
   }
 
+  /** Runs the job; returns the (unexecuted) split of the same staged
+    * frame the sinks were written from.
+    */
   def run(spark: SparkSession, cfg: EtlConfig): EtlResult = {
     val lines = BankingPipeline.readCsvLines(spark, cfg.inputPath)
-    val res = BankingPipeline.fromLines(lines,
-      minAge = cfg.minAge, maxAge = cfg.maxAge)
-    BankingPipeline.writeTable(res.processed, cfg.outputTable)
-    BankingPipeline.writeTable(res.errors, cfg.errorTable)
-    res
+    val staged = BankingPipeline.stagesAfterParse(Parse(lines), cfg.minAge, cfg.maxAge)
+    val (processed, errors) =
+      BankingPipeline.writeSinks(staged, cfg.outputTable, cfg.errorTable)
+    cfg.statsTable.foreach { table =>
+      val at = RunStamps.timestampOf(staged).map(DateTimeUtils.toJavaTimestamp).orNull
+      def row(stat: String, key: String, n: Long) = Row(stat, key, n, at)
+      val rows = row("rows_processed", null, processed.rows) +:
+        (errors.byKey.toSeq.sorted.map { case (k, n) => row("rows_error", k, n) } ++
+          processed.byKey.toSeq.sorted.map { case (k, n) => row("rows_segment", k, n) })
+      BankingPipeline.writeTable(
+        spark.createDataFrame(rows.asJava, BankSchema.statsSchema), table)
+    }
+    BankingPipeline.split(staged)
   }
 }

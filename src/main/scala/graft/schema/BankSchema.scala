@@ -95,4 +95,15 @@ object BankSchema {
     StructField("error_type", StringType),
     StructField("timestamp", TimestampType)
   ))
+
+  /** The `--stats_table` rows of one run: `rows_processed` (key null),
+    * `rows_error` per error_type, `rows_segment` per customer_segment;
+    * `timestamp` is the run's instant, as in both sinks.
+    */
+  val statsSchema: StructType = StructType(Seq(
+    StructField("stat", StringType, nullable = false),
+    StructField("key", StringType),
+    StructField("rows", LongType, nullable = false),
+    StructField("timestamp", TimestampType)
+  ))
 }

@@ -1,8 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.pipeline.{BankingPipeline, EtlConfig, RunBankingEtl}
+import graft.schema.{BankSchema, Thresholds}
 
 /** File-in/file-out end-to-end over the checked-in boundary fixture:
   * covers S1 (text source + header skip), S2 (CLI options), the full
@@ -80,6 +83,108 @@ class EndToEndSpec extends SparkSpec {
     assert(ids.size == 88)
     assert(ids.distinct.size == ids.size,
       s"${ids.size - ids.distinct.size} duplicate _batch_id values")
+  }
+
+  private val header = Files.readAllLines(Paths.get(fixturePath)).get(0)
+  private val valid =
+    "42;admin;married;tertiary;no;1500.5;yes;no;cellular;5;may;300;2;-1;0;unknown;no"
+  private val parseErrors = Seq("a;b;c", valid.replace("42;admin", "4x2;admin"))
+  private val validationErrors = Seq(valid.replaceFirst("^42", "150"))
+
+  private def csv(dir: Path, name: String, lines: Seq[String]): Path =
+    Files.write(dir.resolve(name), (header +: lines).asJava)
+
+  /** Rows as a multiset, without the per-record uuid and run-instant stamps. */
+  private def bag(df: DataFrame): Map[Row, Int] =
+    df.drop("_batch_id", "_ingestion_timestamp", "_processing_timestamp",
+      "processing_timestamp", "timestamp")
+      .collect().groupBy(identity).map { case (r, rs) => r -> rs.length }
+
+  private def assertSinksMatchSplit(input: String): Unit = {
+    val out = Files.createTempDirectory("graft-e2e-sinks").toString
+    RunBankingEtl.run(spark, EtlConfig(input, s"$out/processed", s"$out/errors"))
+    val want = BankingPipeline.fromLines(BankingPipeline.readCsvLines(spark, input))
+    val processed = spark.read.parquet(s"$out/processed")
+    val errors = spark.read.parquet(s"$out/errors")
+    assert(processed.columns.toSeq == BankSchema.outputColumns)
+    assert(errors.schema == BankSchema.errorSchema)
+    assert(bag(processed) == bag(want.processed), input)
+    assert(bag(errors) == bag(want.errors), input)
+  }
+
+  test("K1-K3: the one-job dual-sink write equals split's processed/errors") {
+    val dir = Files.createTempDirectory("graft-e2e-inputs")
+    val multi = Files.createDirectory(dir.resolve("multi"))
+    Files.copy(Paths.get(fixturePath), multi.resolve("a.csv"))
+    csv(multi, "b.csv", Seq.fill(20)(valid) ++ parseErrors ++ validationErrors)
+    csv(multi, "c.csv", validationErrors ++ Seq.fill(5)(valid) ++ parseErrors)
+    assert(BankingPipeline.readCsvLines(spark, multi.toString)
+      .rdd.getNumPartitions >= 2)
+    Seq(fixturePath, multi.toString,
+      csv(dir, "valid.csv", Seq.fill(30)(valid)).toString,
+      csv(dir, "errors.csv", parseErrors ++ validationErrors).toString)
+      .foreach(assertSinksMatchSplit)
+  }
+
+  test("--stats_table holds the counts read back from both sinks") {
+    val out = Files.createTempDirectory("graft-e2e-stats").toString
+    RunBankingEtl.run(spark, EtlConfig(fixturePath, s"$out/processed",
+      s"$out/errors", statsTable = Some(s"$out/stats")))
+    val processed = spark.read.parquet(s"$out/processed")
+    val errors = spark.read.parquet(s"$out/errors")
+    def counts(df: DataFrame, by: String) = df.groupBy(by).count().collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    val stats = spark.read.parquet(s"$out/stats")
+    def stat(name: String) = stats.where(col("stat") === name)
+      .select("key", "rows").collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(stat("rows_processed") == Set((null, processed.count())))
+    assert(stat("rows_error") == counts(errors, "error_type"))
+    assert(stat("rows_segment") == counts(processed, "customer_segment"))
+    assert(stats.select("timestamp").distinct().collect().toSeq ==
+      processed.select("_ingestion_timestamp").distinct().collect().toSeq)
+  }
+
+  private def partFiles(p: Path): Long =
+    if (!Files.isDirectory(p)) 0
+    else Files.walk(p).iterator().asScala
+      .count(_.getFileName.toString.startsWith("part-")).toLong
+
+  test("a failed dual-sink job leaves no part file in either sink; a re-run writes once") {
+    val out = Files.createTempDirectory("graft-e2e-fail")
+    val processedDir = out.resolve("processed")
+    val errorsPath = out.resolve("errors")
+    Files.write(errorsPath, "a file where the error table should go".getBytes)
+    val cfg = EtlConfig(fixturePath, processedDir.toString, errorsPath.toString)
+    intercept[Exception](RunBankingEtl.run(spark, cfg))
+    assert(partFiles(processedDir) == 0 && Files.isRegularFile(errorsPath))
+    Files.delete(errorsPath)
+    RunBankingEtl.run(spark, cfg)
+    assert(spark.read.parquet(processedDir.toString).count() == 44)
+    assert(spark.read.parquet(errorsPath.toString).count() == 6)
+  }
+
+  test("a write task failing after it wrote processed rows leaves no part file") {
+    import org.apache.spark.sql.graftbridge.{DualSinkWrite, Sink}
+    // Two partitions: one whose task commits its processed rows, and one
+    // whose task fails at its last row, after many processed rows.
+    val dir = Files.createTempDirectory("graft-e2e-task-fail")
+    csv(dir, "a.csv", Seq(valid))
+    csv(dir, "b.csv", Seq.fill(2000)(valid) ++ validationErrors)
+    val out = Files.createTempDirectory("graft-e2e-task-fail-out")
+    val (processedDir, errorsDir) = (out.resolve("processed"), out.resolve("errors"))
+    val staged = BankingPipeline.stagesAfterParse(graft.etl.Parse(
+      BankingPipeline.readCsvLines(spark, dir.toString)),
+      Thresholds.MinValidAge, Thresholds.MaxValidAge)
+    val e = intercept[Exception](DualSinkWrite(BankingPipeline.sinkRows(staged),
+      graft.etl.Stage.ErrType,
+      Sink(processedDir.toString, BankSchema.outputColumns.map(col), "customer_segment"),
+      Sink(errorsDir.toString, Seq(raise_error(lit("boom")).cast("string").as("error_type")),
+        "error_type")))
+    assert(e.getMessage.contains("boom"))
+    assert(partFiles(processedDir) == 0 && partFiles(errorsDir) == 0)
+    RunBankingEtl.run(spark, EtlConfig(dir.toString, processedDir.toString, errorsDir.toString))
+    assert(spark.read.parquet(processedDir.toString).count() == 2001)
+    assert(spark.read.parquet(errorsDir.toString).count() == 1)
   }
 
   test("S2: custom age bounds are honored") {

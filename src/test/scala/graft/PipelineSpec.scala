@@ -171,6 +171,24 @@ class PipelineSpec extends SparkSpec {
     assert(first.nonEmpty && first == code())
   }
 
+  test("the one-scan stage and both split branches stay under HotSpot's 8000-byte limit") {
+    // A generated method over DontCompileHugeMethods' 8000 bytecode bytes
+    // is never JIT-compiled: the fused ETL loop would run interpreted.
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    val lines = BankingPipeline.readCsvLines(spark,
+      getClass.getResource("/bank_fixture.csv").getPath)
+    val staged = BankingPipeline.stagesAfterParse(graft.etl.Parse(lines),
+      graft.schema.Thresholds.MinValidAge, graft.schema.Thresholds.MaxValidAge)
+    val split = BankingPipeline.split(staged)
+    Seq("one scan" -> BankingPipeline.sinkRows(staged),
+      "processed" -> split.processed, "errors" -> split.errors).foreach {
+      case (name, df) =>
+        val sizes = codegenStringSeq(df.queryExecution.executedPlan)
+          .map(_._3.maxMethodCodeSize)
+        assert(sizes.nonEmpty && sizes.max < 8000, s"$name: $sizes")
+    }
+  }
+
   test("error rows from stage k are not enriched by stage k+1 (short-circuit)") {
     val staged = graft.etl.Segment(graft.etl.ValidateEnrich(
       graft.etl.Parse(Seq(valid.replaceFirst("^42", "150")).toDF("value"))))
