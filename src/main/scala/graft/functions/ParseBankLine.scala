@@ -179,6 +179,19 @@ object ParseBankLine {
     java.lang.Double.valueOf(java.lang.Double.parseDouble(s))
   }
 
+  /** `tok.toLowerCase`, but `tok` itself when it is lower-case ASCII
+    * already, as almost every token is: no copy of its bytes.
+    */
+  private def lowerCase(tok: UTF8String): UTF8String = {
+    var i = 0
+    while (i < tok.numBytes) {
+      val b = tok.getByte(i)
+      if (b < 0 || (b >= 'A' && b <= 'Z')) return tok.toLowerCase
+      i += 1
+    }
+    tok
+  }
+
   /** Static entry point shared by interpreted eval and generated code. */
   def parse(line: UTF8String): InternalRow = {
     val toks: ArrayData = CsvTokenize.tokenize(line)
@@ -203,7 +216,7 @@ object ParseBankLine {
           else return err(row,
             s"ParseError: could not convert string to float: '$tok'")
         case _ =>
-          row.update(i, tok.trim().toLowerCase)
+          row.update(i, lowerCase(tok.trim()))
       }
       i += 1
     }

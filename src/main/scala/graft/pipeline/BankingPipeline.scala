@@ -2,7 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{DualSinkWrite, Sink, SinkCounts}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, InputAdapter, SparkPlan}
+import org.apache.spark.sql.graftbridge.{Bridge, DualSinkWrite, Sink, SinkCounts}
 import graft.etl._
 import graft.schema.{BankSchema, Thresholds}
 
@@ -20,6 +21,14 @@ final case class EtlResult(processed: DataFrame, errors: DataFrame) {
       "preparation_error")
       .map(t => t -> errors.where(col("error_type") === t)).toMap
 }
+
+/** What one [[BankingPipeline.writeSinks]] job read and wrote: the lines
+  * its text scan read, the header lines among them, and the rows each
+  * sink received (processed per `customer_segment`, errors per
+  * `error_type`).
+  */
+final case class EtlCounts(linesRead: Long, headersDropped: Long,
+                           processed: SinkCounts, errors: SinkCounts)
 
 /** End-to-end composition of the four stages over raw CSV lines or an
   * already-typed frame, plus the single split into (processed, errors).
@@ -72,17 +81,43 @@ object BankingPipeline {
     lower(substring(ltrim(line, quoteOrSpace), 1, 1)) === headerShape.take(1) &&
       lower(regexp_replace(line, "[\"\\s]", "")) === headerShape
 
+  /** The per-file open cost the text scan's splits are sized with.
+    * Spark sizes a split as `max(openCost, (bytes + files * openCost) /
+    * cores)`; with the 4 MiB default, one 14 MB file splits 4.4, 4.4,
+    * 4.4 and 0.4 MB over four cores, and a file under 4 MiB is a single
+    * task. A small constant gives every core an equal byte range of any
+    * input over a few hundred KB.
+    */
+  val SplitOpenCostBytes: Long = 64 * 1024
+
   /** Read the reference's native input: semicolon CSV file, 1 header line
     * (bp.py:345). Kept as a raw-text read so malformed lines reach the
     * parse stage's error channel instead of being dropped by the reader.
+    * The scan is split with [[SplitOpenCostBytes]]; the caller's session
+    * conf is not changed.
     */
   def readCsvLines(spark: SparkSession, path: String): DataFrame = {
     // Drop headers by predicate, not position: no ordering assumption
     // (limit(1) on a multi-split read can return an arbitrary row), one
     // header per file part is handled (Beam's skip_header_lines=1 is per
     // file), and the read stays a single shuffle-free stage.
-    spark.read.text(path).where(!isHeaderLine(col("value")))
+    Bridge.readWithConf(spark,
+      Map("spark.sql.files.openCostInBytes" -> SplitOpenCostBytes.toString))(_.read.text(path))
+      .where(!isHeaderLine(col("value")))
   }
+
+  /** Lines the text scan of [[readCsvLines]] read, and header lines it
+    * dropped, from the SQL metrics of an executed plan over that read.
+    */
+  private def lineCounts(plan: SparkPlan): (Long, Long) =
+    plan.collectFirst {
+      case header @ FilterExec(_, InputAdapter(scan: FileSourceScanExec)) => (scan, header)
+      case header @ FilterExec(_, scan: FileSourceScanExec) => (scan, header)
+    }.map { case (scan, header) =>
+      val read = scan.metrics("numOutputRows").value
+      (read, read - header.metrics("numOutputRows").value)
+    }.getOrElse(throw new IllegalStateException(
+      s"no header filter over a text scan in:\n$plan"))
 
   /** One split at the very end (SURVEY.md §4.3a): both branches share the
     * same narrow plan; Catalyst collapses each side to scan+project+filter.
@@ -109,24 +144,31 @@ object BankingPipeline {
     col(Stage.ErrType).as("error_type"),
     Stage.runInstant.as("timestamp"))
 
-  /** What the one-scan write reads per row: the processed columns plus
-    * `_error_type` and `_raw`. The error sink's message and JSON render
-    * are built from these on error rows only, so the fused stage stays
-    * under HotSpot's 8000-byte `DontCompileHugeMethods` limit.
+  /** What the one-scan write reads per row: the processed columns, in
+    * order, then `_error_type` and `_raw`. The error sink's message and
+    * JSON render are built from these on error rows only, so the fused
+    * stage stays under HotSpot's 8000-byte `DontCompileHugeMethods`
+    * limit. `_raw` is kept only on parsing_error rows, the only ones that
+    * read it (`raw_data`, [[Stage.errorMessage]]), so other rows do not
+    * copy their line.
     */
   def sinkRows(staged: DataFrame): DataFrame =
-    staged.select((BankSchema.outputColumns :+ Stage.ErrType :+ Stage.Raw).map(col): _*)
+    staged.select((BankSchema.outputColumns.map(col) :+ col(Stage.ErrType) :+
+      when(col(Stage.ErrType) === "parsing_error", col(Stage.Raw)).as(Stage.Raw)): _*)
 
   /** Both sinks from one scan (K3, bp.py:341-383): one Spark job routes
     * each staged row to the processed or the error table, each appended
-    * as parquet like [[writeTable]]. Returns the rows written per
-    * `customer_segment` (processed) and per `error_type` (errors).
+    * as parquet like [[writeTable]]. `staged` is built on
+    * [[readCsvLines]], whose line counts come from the same job.
     */
-  def writeSinks(staged: DataFrame, outputTable: String,
-                 errorTable: String): (SinkCounts, SinkCounts) =
-    DualSinkWrite(sinkRows(staged), Stage.ErrType,
+  def writeSinks(staged: DataFrame, outputTable: String, errorTable: String): EtlCounts = {
+    val rows = sinkRows(staged)
+    val (processed, errors) = DualSinkWrite(rows, Stage.ErrType,
       main = Sink(outputTable, BankSchema.outputColumns.map(col), "customer_segment"),
       side = Sink(errorTable, errorRecord(Stage.errorMessage), "error_type"))
+    val (linesRead, headersDropped) = lineCounts(rows.queryExecution.executedPlan)
+    EtlCounts(linesRead, headersDropped, processed, errors)
+  }
 
   /** U1 union-all of error streams (bag semantics, bp.py:368-372). */
   def unionErrors(streams: Seq[DataFrame]): DataFrame =

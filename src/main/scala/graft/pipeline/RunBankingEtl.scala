@@ -27,21 +27,33 @@ final case class EtlConfig(
   maxAge: Int = Thresholds.MaxValidAge)
 
 object EtlConfig {
+  /** `--flag value` pairs. Like the reference's argparse options, a flag
+    * with no value or an int option that is not an int fails with a
+    * message naming the flag.
+    */
   def parse(args: Seq[String]): EtlConfig = {
-    val kv = args.grouped(2).collect {
-      case Seq(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
+    def bad(flag: String, why: String) =
+      new IllegalArgumentException(s"argument --$flag: $why")
+    def pairs(rest: List[String]): List[(String, String)] = rest match {
+      case Nil => Nil
+      case f :: v :: more if f.startsWith("--") && !v.startsWith("--") =>
+        (f.drop(2) -> v) :: pairs(more)
+      case f :: _ if f.startsWith("--") => throw bad(f.drop(2), "expected one argument")
+      case other :: _ => throw new IllegalArgumentException(
+        s"unrecognized argument: '$other'")
+    }
+    val kv = pairs(args.toList).toMap
     def req(k: String) = kv.getOrElse(k,
       throw new IllegalArgumentException(s"--$k is required"))
+    def int(k: String, default: Int) = kv.get(k).fold(default)(v =>
+      v.toIntOption.getOrElse(throw bad(k, s"invalid int value: '$v'")))
     val cfg = EtlConfig(
       inputPath = req("input_path"),
       outputTable = req("output_table"),
       errorTable = req("error_table"),
       statsTable = kv.get("stats_table"),
-      minAge = kv.get("min_age").map(_.toInt)
-        .getOrElse(Thresholds.MinValidAge),
-      maxAge = kv.get("max_age").map(_.toInt)
-        .getOrElse(Thresholds.MaxValidAge))
+      minAge = int("min_age", Thresholds.MinValidAge),
+      maxAge = int("max_age", Thresholds.MaxValidAge))
     require(!cfg.inputPath.startsWith("gs://"),
       "gs:// input paths are not supported (the reference silently " +
         "rewrote them to a local developer path; we reject instead)")
@@ -75,14 +87,15 @@ object RunBankingEtl {
   def run(spark: SparkSession, cfg: EtlConfig): EtlResult = {
     val lines = BankingPipeline.readCsvLines(spark, cfg.inputPath)
     val staged = BankingPipeline.stagesAfterParse(Parse(lines), cfg.minAge, cfg.maxAge)
-    val (processed, errors) =
-      BankingPipeline.writeSinks(staged, cfg.outputTable, cfg.errorTable)
+    val counts = BankingPipeline.writeSinks(staged, cfg.outputTable, cfg.errorTable)
     cfg.statsTable.foreach { table =>
       val at = RunStamps.timestampOf(staged).map(DateTimeUtils.toJavaTimestamp).orNull
       def row(stat: String, key: String, n: Long) = Row(stat, key, n, at)
-      val rows = row("rows_processed", null, processed.rows) +:
-        (errors.byKey.toSeq.sorted.map { case (k, n) => row("rows_error", k, n) } ++
-          processed.byKey.toSeq.sorted.map { case (k, n) => row("rows_segment", k, n) })
+      val rows = Seq(row("lines_read", null, counts.linesRead),
+        row("headers_dropped", null, counts.headersDropped),
+        row("rows_processed", null, counts.processed.rows)) ++
+        counts.errors.byKey.toSeq.sorted.map { case (k, n) => row("rows_error", k, n) } ++
+        counts.processed.byKey.toSeq.sorted.map { case (k, n) => row("rows_segment", k, n) }
       BankingPipeline.writeTable(
         spark.createDataFrame(rows.asJava, BankSchema.statsSchema), table)
     }

@@ -96,8 +96,10 @@ object BankSchema {
     StructField("timestamp", TimestampType)
   ))
 
-  /** The `--stats_table` rows of one run: `rows_processed` (key null),
-    * `rows_error` per error_type, `rows_segment` per customer_segment;
+  /** The `--stats_table` rows of one run: `lines_read` (every input
+    * line, headers included), `headers_dropped` and `rows_processed`
+    * (key null), `rows_error` per error_type, `rows_segment` per
+    * customer_segment;
     * `timestamp` is the run's instant, as in both sinks.
     */
   val statsSchema: StructType = StructType(Seq(

@@ -22,6 +22,22 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** The frame `read` builds, planned in a clone of `spark` whose SQL
+    * conf differs only by `conf`, and returned as a frame of `spark`.
+    * A file relation keeps the session it was read in, and scan planning
+    * sizes its splits from that session's conf alone
+    * (`FilePartition.maxSplitBytes`, which has no per-read option). So
+    * the scan sees `conf`, while everything else, the caller's conf and
+    * its listeners included, stays with `spark`.
+    */
+  def readWithConf(spark: org.apache.spark.sql.SparkSession, conf: Map[String, String])(
+      read: org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)
+  : org.apache.spark.sql.DataFrame = {
+    val clone = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+    conf.foreach { case (k, v) => clone.sessionState.conf.setConfString(k, v) }
+    ofRows(spark, read(clone).queryExecution.analyzed)
+  }
+
   /** Re-host a checkpointed LogicalRDD leaf with the HashPartitioning
     * its data PROVABLY has. `repartition(n, keys).localCheckpoint`
     * loses the partitioning under AQE (the adaptive plan's partitioning

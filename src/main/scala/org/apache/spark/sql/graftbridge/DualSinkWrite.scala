@@ -13,7 +13,7 @@ import org.apache.spark.internal.io.{FileNameSpec, SparkHadoopWriterUtils}
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSeq, BindReferences, Expression, InterpretedUnsafeProjection, RuntimeReplaceable, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSeq, BindReferences, BoundReference, Expression, InterpretedUnsafeProjection, RuntimeReplaceable, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory, SQLHadoopMapReduceCommitProtocol}
@@ -37,11 +37,13 @@ final case class SinkCounts(rows: Long, byKey: Map[String, Long])
   * tagged main/side outputs (bp.py:341-383) as a single physical write.
   *
   * Each write task routes a row whose `tag` column is null to the `main`
-  * sink and any other row to the `side` sink, building that sink's
-  * record with its own projection: a generated one for `main`, an
-  * interpreted one for `side`, whose rows are expected to be rare. So
-  * the frame's fused stage computes only what both sinks share, and
-  * side-only columns cost nothing on main rows.
+  * sink and any other row to the `side` sink. The `main` record must be
+  * the frame's leading columns, in order: the parquet writer reads a
+  * row's fields by ordinal up to its schema's width, so a main row is
+  * written as it comes, without a copy. The `side` record is built per
+  * row by an interpreted projection, as its rows are expected to be
+  * rare. So the frame's fused stage computes only what both sinks
+  * share, and side-only columns cost nothing on main rows.
   *
   * Each sink has its own `FileCommitProtocol` (Spark's default,
   * `SQLHadoopMapReduceCommitProtocol`) and keeps `df.write.mode(Append)
@@ -70,6 +72,11 @@ object DualSinkWrite {
       input.map(_.name).mkString(","))
     val jobTrackerId = SparkHadoopWriterUtils.createJobTrackerID(new Date())
     val sinks = Seq(main, side).map(SinkJob(spark, rows, input, _))
+    require(sinks.head.record.zipWithIndex.forall {
+      case (BoundReference(ordinal, _, _), i) => ordinal == i
+      case _ => false
+    }, s"DualSinkWrite: the main sink's record must be the frame's leading columns, " +
+      s"got ${main.record.mkString(", ")}")
 
     SQLExecution.withNewExecutionId(qe, Some("dual sink write")) {
       val started = scala.collection.mutable.ArrayBuffer.empty[SinkJob]
@@ -106,8 +113,8 @@ object DualSinkWrite {
   private def writeTask(ctx: TaskContext, it: Iterator[InternalRow], tagOrdinal: Int,
                         jobTrackerId: String, mainJob: SinkJob, sideJob: SinkJob)
   : Seq[(TaskCommitMessage, Map[String, Long])] = {
-    val mainTask = new SinkTask(mainJob, ctx, jobTrackerId, generated = true)
-    val sideTask = new SinkTask(sideJob, ctx, jobTrackerId, generated = false)
+    val mainTask = new SinkTask(mainJob, ctx, jobTrackerId, projected = false)
+    val sideTask = new SinkTask(sideJob, ctx, jobTrackerId, projected = true)
     val tasks = Seq(mainTask, sideTask)
     try {
       if (ctx.partitionId == 0) tasks.foreach(_.open())
@@ -215,10 +222,11 @@ private final class SinkCommitProtocol(jobId: String, path: String)
 }
 
 /** One sink's side of one write task: opens its part file on the first
-  * row, writes each routed row's record, counts rows per key.
+  * row, writes each routed row's record (the row itself unless
+  * `projected`), counts rows per key.
   */
 private final class SinkTask(job: SinkJob, ctx: TaskContext, jobTrackerId: String,
-                             generated: Boolean) {
+                             projected: Boolean) {
   private val attempt: TaskAttemptContext = {
     val jobId = SparkHadoopWriterUtils.createJobID(jobTrackerId, ctx.stageId())
     val attemptId = new TaskAttemptID(
@@ -234,9 +242,12 @@ private final class SinkTask(job: SinkJob, ctx: TaskContext, jobTrackerId: Strin
   job.protocol.setupTask(attempt)
 
   private val project: UnsafeProjection =
-    if (generated) UnsafeProjection.create(job.record)
-    else InterpretedUnsafeProjection.createProjection(job.record)
-  project.initialize(ctx.partitionId())
+    if (!projected) null
+    else {
+      val p = InterpretedUnsafeProjection.createProjection(job.record)
+      p.initialize(ctx.partitionId())
+      p
+    }
 
   private var writer: OutputWriter = _
   private val perKey = new java.util.HashMap[UTF8String, Array[Long]]
@@ -250,7 +261,7 @@ private final class SinkTask(job: SinkJob, ctx: TaskContext, jobTrackerId: Strin
 
   def write(row: InternalRow): Unit = {
     open()
-    val record = project(row)
+    val record = if (project == null) row else project(row)
     writer.write(record)
     val key = if (record.isNullAt(job.countOrdinal)) null
               else record.getUTF8String(job.countOrdinal)

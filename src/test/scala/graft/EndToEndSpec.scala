@@ -144,6 +144,56 @@ class EndToEndSpec extends SparkSpec {
       processed.select("_ingestion_timestamp").distinct().collect().toSeq)
   }
 
+  test("--stats_table counts every line read and one header dropped per file") {
+    val dir = Files.createTempDirectory("graft-e2e-lines")
+    val multi = Files.createDirectory(dir.resolve("multi"))
+    Files.copy(Paths.get(fixturePath), multi.resolve("a.csv"))
+    csv(multi, "b.csv", Seq.fill(20)(valid) ++ parseErrors)
+    csv(multi, "c.csv", validationErrors ++ Seq.fill(5)(valid))
+    Seq(Paths.get(fixturePath) -> 1L, multi -> 3L).foreach { case (input, files) =>
+      val lines = Files.walk(input).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(Files.readAllLines(_).size.toLong).sum
+      val out = Files.createTempDirectory("graft-e2e-lines-out").toString
+      RunBankingEtl.run(spark, EtlConfig(input.toString, s"$out/processed",
+        s"$out/errors", statsTable = Some(s"$out/stats")))
+      val stats = spark.read.parquet(s"$out/stats").where(col("key").isNull)
+        .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
+      assert(stats("lines_read") == lines, input)
+      assert(stats("headers_dropped") == files, input)
+      assert(stats("rows_processed") + spark.read.parquet(s"$out/errors").count() ==
+        lines - files, input)
+    }
+  }
+
+  test("a run leaves the caller's split conf, its scan plans and its heap as they were") {
+    // A session of its own, so no earlier run has touched its conf.
+    val caller = spark.newSession()
+    val keys = Seq("spark.sql.files.openCostInBytes", "spark.sql.files.maxPartitionBytes")
+    def conf() = keys.map(caller.conf.getOption)
+    // One parquet file of about 1 MB: one split at the default 4 MiB open
+    // cost, four at the ETL's.
+    val tables = Files.createTempDirectory("graft-e2e-tables").toString
+    caller.range(0, 200000, 1, 1).selectExpr("id", "id * 2 AS twice")
+      .write.parquet(s"$tables/t.parquet")
+    def tableSplits() = graft.ops.TestData.table(caller, tables, "t").select(col("*"))
+      .rdd.getNumPartitions
+    val (confBefore, splitsBefore) = (conf(), tableSplits())
+    val out = Files.createTempDirectory("graft-e2e-iso").toString
+    def runOnce(i: Int): Unit =
+      RunBankingEtl.run(caller, EtlConfig(fixturePath, s"$out/$i/processed", s"$out/$i/errors"))
+    runOnce(0)
+    assert(conf() == confBefore)
+    assert(tableSplits() == splitsBefore)
+    def heapAfterGc(): Long = {
+      System.gc()
+      java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed
+    }
+    val heapBefore = heapAfterGc()
+    (1 to 20).foreach(runOnce)
+    val grownMb = (heapAfterGc() - heapBefore) / (1024.0 * 1024)
+    assert(grownMb <= 5, f"driver heap grew $grownMb%.1f MB over 20 runs")
+  }
+
   private def partFiles(p: Path): Long =
     if (!Files.isDirectory(p)) 0
     else Files.walk(p).iterator().asScala
@@ -187,6 +237,19 @@ class EndToEndSpec extends SparkSpec {
     assert(spark.read.parquet(errorsDir.toString).count() == 1)
   }
 
+  test("the dual-sink write refuses a main record that is not the frame's leading columns") {
+    import org.apache.spark.sql.graftbridge.{DualSinkWrite, Sink}
+    val out = Files.createTempDirectory("graft-e2e-leading")
+    val rows = BankingPipeline.sinkRows(BankingPipeline.stagesAfterParse(
+      graft.etl.Parse(BankingPipeline.readCsvLines(spark, fixturePath)),
+      Thresholds.MinValidAge, Thresholds.MaxValidAge))
+    val e = intercept[IllegalArgumentException](DualSinkWrite(rows, graft.etl.Stage.ErrType,
+      Sink(out.resolve("p").toString, Seq(col("job"), col("age")), "job"),
+      Sink(out.resolve("e").toString, Seq(col(graft.etl.Stage.ErrType)), graft.etl.Stage.ErrType)))
+    assert(e.getMessage.contains("leading columns"))
+    assert(partFiles(out) == 0)
+  }
+
   test("S2: custom age bounds are honored") {
     val res = BankingPipeline.fromLines(
       BankingPipeline.readCsvLines(spark, fixturePath),
@@ -201,6 +264,29 @@ class EndToEndSpec extends SparkSpec {
         "--output_table", "t", "--error_table", "e"))
     }
     assert(e.getMessage.contains("gs://"))
+  }
+
+  test("S2: a flag with no value names itself instead of being dropped") {
+    val e = intercept[IllegalArgumentException] {
+      EtlConfig.parse(Seq("--input_path", "x.csv", "--output_table", "t",
+        "--error_table", "e", "--stats_table"))
+    }
+    assert(e.getMessage.contains("--stats_table"))
+    val mid = intercept[IllegalArgumentException] {
+      EtlConfig.parse(Seq("--input_path", "x.csv", "--stats_table",
+        "--output_table", "t", "--error_table", "e"))
+    }
+    assert(mid.getMessage.contains("--stats_table"))
+  }
+
+  test("S2: a non-integer age bound names its flag") {
+    val e = intercept[IllegalArgumentException] {
+      EtlConfig.parse(Seq("--input_path", "x.csv", "--output_table", "t",
+        "--error_table", "e", "--min_age", "eighteen"))
+    }
+    assert(e.getMessage.contains("--min_age") && e.getMessage.contains("eighteen"))
+    assert(EtlConfig.parse(Seq("--input_path", "x.csv", "--output_table", "t",
+      "--error_table", "e", "--min_age", "-5", "--max_age", "60")).minAge == -5)
   }
 
   test("S2: missing required option names itself") {

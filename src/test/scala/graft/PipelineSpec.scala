@@ -100,6 +100,77 @@ class PipelineSpec extends SparkSpec {
     assert(BankingPipeline.readCsvLines(spark, dir.toString).count() == 4)
   }
 
+  private val header = BankSchema.inputFields.map(_.name).mkString(";")
+
+  /** The byte ranges the text scan of [[BankingPipeline.readCsvLines]]
+    * gives its partitions, as (start, length) per partition.
+    */
+  private def splits(path: String): Seq[Seq[(Long, Long)]] = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    val scan = BankingPipeline.readCsvLines(spark, path).queryExecution.executedPlan
+      .collectFirst { case s: FileSourceScanExec => s }.get
+    scan.inputRDDs().head.partitions.toSeq.map(
+      _.asInstanceOf[FilePartition].files.toSeq.map(f => (f.start, f.length)))
+  }
+
+  private def write(path: java.nio.file.Path, text: String): String = {
+    java.nio.file.Files.write(path, text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    path.toString
+  }
+
+  test("a file of about 4 MB splits into four byte ranges of near-equal length") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-splits")
+    val file = write(dir.resolve("big.csv"),
+      (header +: Seq.fill(4000000 / (valid.length + 1))(valid)).mkString("", "\n", "\n"))
+    val lengths = splits(file).map(_.map(_._2).sum)
+    assert(lengths.size == 4, lengths)
+    assert(lengths.max - lengths.min <= BankingPipeline.SplitOpenCostBytes, lengths)
+    assert(splits(getClass.getResource("/bank_fixture.csv").getPath).size == 1)
+  }
+
+  test("every line lands exactly once when lines straddle split boundaries") {
+    // The file is laid out around the scan's three split boundaries: the
+    // first falls between a CRLF's \r and \n, the second inside a line of
+    // about 1 MB, the third at the start of an empty line. The header
+    // carries a BOM; empty lines recur throughout.
+    val size = 4000000
+    val probe = write(java.nio.file.Files.createTempDirectory("graft-probe")
+      .resolve("probe.csv"), "x" * size)
+    val Seq(b1, b2, b3) = splits(probe).flatten.map(_._1.toInt).sorted.tail
+    val out = new java.io.ByteArrayOutputStream(size)
+    val want = Seq.newBuilder[String]
+    def put(s: String): Unit = out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    def line(l: String, end: String): Unit = { put(l + end); want += l }
+    // CRLF data lines, then one filler line whose terminator ends at `pos`.
+    def fillTo(pos: Int, end: String): Unit = {
+      var n = 0
+      while (out.size + 3 * (valid.length + 2) < pos) {
+        line(valid, "\r\n")
+        n += 1
+        if (n % 5 == 0) line("", "\r\n")
+      }
+      line("x" * (pos - out.size - end.length), end)
+    }
+    put("\uFEFF" + header + "\r\n")
+    fillTo(b1 + 1, "\r\n")
+    fillTo(b2 - 500000, "\r\n")
+    line("y" * 1000000, "\r\n")
+    fillTo(b3, "\n")
+    line("", "\r\n")
+    fillTo(size, "\n")
+    val bytes = out.toByteArray
+    assert(bytes.length == size && bytes(b1 - 1) == '\r' && bytes(b1) == '\n' &&
+      bytes(b2) == 'y' && bytes(b3) == '\r' && bytes(b3 - 1) == '\n')
+    val file = java.nio.file.Files.createTempDirectory("graft-straddle").resolve("data.csv")
+    java.nio.file.Files.write(file, bytes)
+    assert(splits(file.toString).flatten.map(_._1.toInt).sorted.tail == Seq(b1, b2, b3))
+    val read = BankingPipeline.readCsvLines(spark, file.toString).as[String].collect()
+    def bag(ls: Seq[String]) = ls.groupBy(identity).view.mapValues(_.size).toMap
+    assert(read.length == want.result().length)
+    assert(bag(read.toSeq) == bag(want.result()))
+  }
+
   test("a data row starting with 'age' is NOT silently dropped as a header") {
     // A malformed mid-file row whose first token is the column name must
     // reach the parsing_error channel like the reference's positional
