@@ -4,7 +4,7 @@
 For each heavy query and each structural count, fits wall ~ factor^b by
 least squares on log2/log2 over factors {1,2,4,8} (walls use the min of
 the two samples — the load-robust statistic). Prints a markdown table
-for PLANS.md, plus the prepartition-gate on/off walls per factor.
+for PLANS.md.
 """
 import json
 import math
@@ -47,17 +47,5 @@ for q in queries:
     vals = [min(r["default"][q]["walls"]) for r in rows]
     print(f"| {q} | " + " | ".join(f"{v:.2f}" for v in vals) +
           f" | {fit(factors, vals):.2f} |")
-
-print("\n### graft.graph_edge_prepartition on vs off (min walls, sec)\n")
-gated = list(rows[0]["prepartition"].keys())
-print("| query | " + " | ".join(f"x{f} off/on" for f in factors) + " |")
-print("|---|" + "---|" * len(factors))
-for q in gated:
-    cells = []
-    for r in rows:
-        off = min(r["default"][q]["walls"])
-        on = min(r["prepartition"][q]["walls"])
-        cells.append(f"{off:.2f}/{on:.2f}")
-    print(f"| {q} | " + " | ".join(cells) + " |")
 
 print("\nloadavg/cpu_wall per sample are in the JSON for exoneration.")

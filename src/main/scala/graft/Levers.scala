@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   * that does not say which option was bad (ADVICE r12 class).
   */
 object Levers {
-  /** Boolean option (graft.broadcast_graph_frames,
-    * graft.graph_edge_prepartition): exactly true/false, any case.
+  /** Boolean option (graft.broadcast_graph_frames): exactly
+    * true/false, any case.
     */
   private[graft] def bool(s: SparkSession, key: String,
                           default: Boolean): Boolean =

@@ -261,13 +261,12 @@ object DedupOps {
     */
   private[graft] def connectedComponents(pairs: DataFrame): DataFrame = {
     // Edges are consumed once per propagation round, always joined on
-    // d2: materialize them ALREADY hash-partitioned by d2 so no round
-    // re-shuffles the edge side (persist() kept the lineage and
-    // re-optimized + re-exchanged it every round; measured at sf0.1 the
-    // checkpoint+prepartition cut q64 from 6.4 s to ~3.5 s). A plain
-    // repartition+localCheckpoint LOSES the partitioning under AQE
-    // (round 10 finding) — PartitionedCheckpoint materializes it so the
-    // LogicalRDD actually carries hash(d2) into every round's plan.
+    // d2: materialize them once, shuffled by d2 (persist() kept the
+    // lineage and re-optimized + re-exchanged it every round; measured
+    // at sf0.1 the checkpoint+prepartition cut q64 from 6.4 s to
+    // ~3.5 s). The checkpoint does not carry hash(d2) into the rounds
+    // under AQE (see PartitionedCheckpoint), so AQE owns each round's
+    // layout.
     val edges = PartitionedCheckpoint.byKeys(
       pairs.toDF("d1", "d2").unionByName(
         pairs.toDF("d2", "d1").select(col("d1"), col("d2"))),
@@ -280,69 +279,51 @@ object DedupOps {
     // dedup family feeds in) converge a whole iteration earlier
     // (ProbeR15CC: q64's graph 2 iters -> 1; OPTIMIZATION_r15.md,
     // probe code at commit 9916828).
-    var comp = edges.groupBy(col("d1").as("v"))
+    val init = edges.groupBy(col("d1").as("v"))
       .agg(least(min(col("d2")), col("d1")).as("c"))
       .select(col("v"), col("c"))
       .localCheckpoint(eager = true)
-    var changed = 1L
-    var iters = 0
-    while (changed > 0 && iters < 12) {
-      // Two flooding rounds per checkpoint; each round is ONE
-      // keyed aggregate over (neighbor messages UNION self rows) —
-      // the r15 union formulation drops the old per-round left-join
-      // (message frame -> groupBy -> join-back was 2 joins + 1
-      // aggregate; this is 1 join + 1 aggregate for the same labels,
-      // measured q121's CC 2.50 -> 1.99 s alone, ProbeR15CC C;
-      // OPTIMIZATION_r15.md, probe code at commit 9916828).
-      // The SECOND round also path-halves (pointer jump). Jumping
-      // every other round keeps the O(log d) chain guard at half the
-      // per-round join cost (ProbeR15CC2 H: q121 1.99 -> 1.68 s,
-      // identical labels, OPTIMIZATION_r15.md, probe code at commit
-      // 9916828; flooding-only needs O(d) rounds and loses at depth —
-      // 6 iters vs 4 on q121's graph — so the jump stays).
-      // `cL` carries the label ENTERING the final round, so the
-      // convergence observe reads the LAST ROUND's delta during the
-      // checkpoint job: a no-change final round certifies neighbor-min
-      // closure (propagate and jump are both monotone decreasing, so
-      // an unchanged composition means propagation alone was a no-op)
-      // — the fixpoint needs no confirm iteration re-run.
-      val obs = org.apache.spark.sql.Observation(s"cc_changed_$iters")
-      val round1 = edges.join(comp, col("d2") === col("v"))
-        .select(col("d1").as("v"), col("c"))
-        .unionByName(comp.select(col("v"), col("c")))
-        .groupBy("v").agg(min("c").as("c"))
-      val prop2 = edges.join(round1, col("d2") === col("v"))
-        .select(col("d1").as("v"), col("c"),
-          lit(null).cast("long").as("cL"))
-        .unionByName(round1.select(col("v"), col("c"),
-          col("c").as("cL")))
-        .groupBy("v")
-        .agg(min("c").as("c"), max("cL").as("cL"))
-      val next = prop2.as("p").join(
-          prop2.select(col("v").as("jv"), col("c").as("jc")),
-          col("p.c") === col("jv"), "left")
-        .select(col("p.v").as("v"),
-          least(col("p.c"), coalesce(col("jc"), col("p.c"))).as("c"),
-          col("p.cL").as("cL"))
-        .observe(obs, coalesce(
-          sum((col("c") =!= col("cL")).cast("long")), lit(0L))
-          .as("changed"))
-      PartitionedCheckpoint.dumpRoundPlan(next, "cc_round")
-      val nextCk = next.localCheckpoint(eager = true)
-      changed = obs.get("changed").asInstanceOf[Long]
-      // The superseded iteration's checkpoint blocks are dead once
-      // `next` is materialized — release them instead of stacking up
-      // to 12 node-frame copies in storage memory per invocation
-      // (the same accumulation class Bench.clearState documents).
-      org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoints(comp)
-      comp = nextCk.select("v", "c")
-      iters += 1
-    }
-    // A wrong clustering must never be silently indistinguishable from
-    // a converged one.
-    require(changed == 0,
-      s"connected components did not converge in ${2 * iters} rounds")
-    comp
+    // `cL` carries the label ENTERING a step's final round, so the
+    // convergence observe reads the LAST ROUND's delta during the
+    // checkpoint job: a no-change final round certifies neighbor-min
+    // closure (propagate and jump are both monotone decreasing, so an
+    // unchanged composition means propagation alone was a no-op) — the
+    // fixpoint needs no confirm iteration re-run. Capped at 12 steps.
+    Fixpoint.iterate("cc", init, 12,
+        changed = Some(col("c") =!= col("cL")), release = true) {
+      (prev, _) =>
+        val comp = prev.select("v", "c")
+        // Two flooding rounds per checkpoint; each round is ONE
+        // keyed aggregate over (neighbor messages UNION self rows) —
+        // the r15 union formulation drops the old per-round left-join
+        // (message frame -> groupBy -> join-back was 2 joins + 1
+        // aggregate; this is 1 join + 1 aggregate for the same labels,
+        // measured q121's CC 2.50 -> 1.99 s alone, ProbeR15CC C;
+        // OPTIMIZATION_r15.md, probe code at commit 9916828).
+        // The SECOND round also path-halves (pointer jump). Jumping
+        // every other round keeps the O(log d) chain guard at half the
+        // per-round join cost (ProbeR15CC2 H: q121 1.99 -> 1.68 s,
+        // identical labels, OPTIMIZATION_r15.md, probe code at commit
+        // 9916828; flooding-only needs O(d) rounds and loses at depth —
+        // 6 iters vs 4 on q121's graph — so the jump stays).
+        val round1 = edges.join(comp, col("d2") === col("v"))
+          .select(col("d1").as("v"), col("c"))
+          .unionByName(comp.select(col("v"), col("c")))
+          .groupBy("v").agg(min("c").as("c"))
+        val prop2 = edges.join(round1, col("d2") === col("v"))
+          .select(col("d1").as("v"), col("c"),
+            lit(null).cast("long").as("cL"))
+          .unionByName(round1.select(col("v"), col("c"),
+            col("c").as("cL")))
+          .groupBy("v")
+          .agg(min("c").as("c"), max("cL").as("cL"))
+        prop2.as("p").join(
+            prop2.select(col("v").as("jv"), col("c").as("jc")),
+            col("p.c") === col("jv"), "left")
+          .select(col("p.v").as("v"),
+            least(col("p.c"), coalesce(col("jc"), col("p.c"))).as("c"),
+            col("p.cL").as("cL"))
+    }.frame.select("v", "c")
   }
 
   /** PageRank over an undirected pair graph, FIXED-POINT BIGINT
@@ -381,9 +362,11 @@ object DedupOps {
     val n = deg.count()
     require(n > 0, "pagerank on an empty graph")
     val base = 15L * scale / (100L * n)
-    var ranks = deg.select(col("src").as("v"), lit(scale / n).as("r"),
+    // `init` projects the live deg checkpoint that every round reads,
+    // so nothing is released.
+    val init = deg.select(col("src").as("v"), lit(scale / n).as("r"),
       col("deg"))
-    for (_ <- 1 to iters) {
+    val ranks = Fixpoint.iterate("pagerank", init, iters) { (cur, _) =>
       // Union-formulated round (r15, the CC/labelprop message-aggregate
       // rewrite): contribution messages UNION per-vertex deg rows ->
       // ONE aggregate carrying both the damped sum and the degree —
@@ -392,7 +375,7 @@ object DedupOps {
       // >= 1 contribution (ProbeR15PR: identical output, 2/3 pairwise,
       // avg 1.42 -> 1.06 s on q118's graph at sf0.1; OPTIMIZATION_r15.md,
       // probe code at commit 9916828).
-      val msgs = edges.join(ranks, edges("src") === ranks("v"))
+      val msgs = edges.join(cur, edges("src") === cur("v"))
         .select(col("dst").as("v"), expr("r div deg").as("c"),
           lit(null).cast("long").as("dg"))
         .unionByName(deg.select(col("src").as("v"),
@@ -403,13 +386,11 @@ object DedupOps {
       // construction, not this aggregate. If it ever breaks, an
       // isolated-in-degree vertex now degrades to the base rank
       // instead of a silently null rank.
-      val round = msgs.groupBy("v")
+      msgs.groupBy("v")
         .agg(coalesce(sum("c"), lit(0L)).as("m"), max("dg").as("deg"))
         .select(col("v"), (lit(base) + expr("(85 * m) div 100")).as("r"),
           col("deg"))
-      PartitionedCheckpoint.dumpRoundPlan(round, "pagerank_round")
-      ranks = round.localCheckpoint(eager = true)
-    }
+    }.frame
     ranks.select(col("v").as("doc_id"), col("deg"), col("r").as("rank_fp"))
   }
 
@@ -529,17 +510,6 @@ object DedupOps {
       .distinct()
   }
 
-  /** The configured near-dup pair source (`graft.pair_source`):
-    * "exact" (default) = the blocked shingle self-join — every true
-    * pair, cost Sum df^2; "lsh" = q25's minhash band buckets + exact
-    * rescore — cost ∝ candidates, recall ~0.90 at threshold 0.5,
-    * hub-shingle-proof. The scale story: exact (optionally with
-    * `graft.shingle_df_cap`) while Sum df^2 is affordable; flip one
-    * config to LSH when a 10B-doc corpus makes it quadratic.
-    */
-  private[graft] def pairSource(s: SparkSession): String =
-    s.conf.getOption("graft.pair_source").getOrElse("exact")
-
   /** Array-grain exact-Jaccard rescore: candidates join the per-doc
     * sorted-array frame once per side and the intersection is the
     * codegen'd sorted merge — where the exploded-grain rescore it
@@ -565,8 +535,11 @@ object DedupOps {
         (col("inter") * lit(1.0) /
           (col("na") + col("nb") - col("inter"))).as("jaccard"))
 
-  /** (d1, d2) pairs with (exact) jaccard >= threshold, produced by the
-    * selected source. `shOpt` lets callers share an already-checkpointed
+  /** (d1, d2) pairs with (exact) jaccard >= threshold, produced by
+    * `source`: "exact" = the blocked shingle self-join — every true
+    * pair, cost Sum df^2 (optionally `graft.shingle_df_cap`); "lsh" =
+    * q25's minhash band buckets + exact rescore — cost ∝ candidates,
+    * recall ~0.90 at threshold 0.5, hub-shingle-proof. `shOpt` lets callers share an already-checkpointed
     * hashed-shingle frame (the exact source's grain; the LSH source
     * builds its own array frame — ProbeArrayGrain2 in PLANS.md, code at
     * commit 9916828, measured why the two sources want different grains).
@@ -587,13 +560,13 @@ object DedupOps {
         bandedCandidates(docSignatures(docs), LshBandSize),
         docShingleArrays(docs).localCheckpoint(eager = true))
       case other => throw new IllegalArgumentException(
-        s"unknown graft.pair_source '$other' (expected exact | lsh)")
+        s"unknown pair source '$other' (expected exact | lsh)")
     }
     scored.where(col("jaccard") >= threshold).select("d1", "d2")
   }
 
   /** The keep-list composition (pairs -> components -> canonical id)
-    * shared by q85 (configured source) and q105 (LSH source).
+    * shared by q85/q110 (exact source) and q105 (LSH source).
     */
   private[graft] def keepList(docs: DataFrame, source: String): DataFrame = {
     val comp = connectedComponents(nearDupPairs(docs, source))
@@ -951,12 +924,10 @@ object DedupOps {
     // keep-list (cluster representative = min doc_id; singletons keep
     // themselves). This is the operator a training-data pipeline
     // actually runs — q24/q64 expose its stages.
-    // Pair source is CONFIG-SELECTABLE (`graft.pair_source`): the
-    // registered oracle pins the default exact source; a session
-    // flipping to "lsh" steps outside the hash gate and is covered by
-    // q105 (own oracle) + PairSourceSpec (keep-list recall).
+    // Exact pair source (the blocked shingle self-join — every true
+    // pair, cost Sum df^2); the LSH source has its own entry, q105.
     "q85_dedup_keeplist" -> Q(
-      (s, dir) => keepList(table(s, dir, "documents"), pairSource(s)),
+      (s, dir) => keepList(table(s, dir, "documents"), "exact"),
       Some(
         s"""WITH RECURSIVE $jaccardCte,
            | jp AS (SELECT p.d1, p.d2 FROM p
@@ -1028,8 +999,8 @@ object DedupOps {
     // problem to unique texts and, for the LSH source, bounds band-
     // bucket skew (a million exact copies would otherwise share every
     // bucket; after collapse a bucket's size tracks genuinely-similar
-    // UNIQUE docs, whose pairs the answer needs anyway). Honors
-    // `graft.pair_source` like q85/q96.
+    // UNIQUE docs, whose pairs the answer needs anyway). Exact pair
+    // source, like q85/q96.
     "q110_full_dedup" -> Q(
       (s, dir) => {
         // Exact-collapse keyed on the shared 120-bit fingerprint
@@ -1046,7 +1017,7 @@ object DedupOps {
         val reps = docs.as("d")
           .join(ex.as("e"), col("d.doc_id") === col("e.rep_id"))
           .select(col("d.doc_id"), col("d.text"))
-        val nd = keepList(reps, pairSource(s))
+        val nd = keepList(reps, "exact")
           .select(col("doc_id").as("rep_id"), col("canonical_id"))
         fp.select(col("doc_id"), col("fp1"), col("fp2"))
           .join(ex, Seq("fp1", "fp2"))

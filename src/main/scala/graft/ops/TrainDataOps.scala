@@ -252,12 +252,10 @@ object TrainDataOps {
       TextOps.gopherKeep.cast("int").as("q_keep"))
     // ONE materialization of the hashed shingle frame feeds both the
     // near-dup pair source (3 consumers inside) and decontamination (2)
-    // — the shingle scan runs once instead of twice. The pair source
-    // follows `graft.pair_source` (exact default | lsh), same selection
-    // q85 honors.
+    // — the shingle scan runs once instead of twice. Exact pair source,
+    // as in q85.
     val sh = DedupOps.hashedShingles(docs).localCheckpoint(eager = true)
-    val jp = DedupOps.nearDupPairs(docs,
-      DedupOps.pairSource(docs.sparkSession), Some(sh))
+    val jp = DedupOps.nearDupPairs(docs, "exact", Some(sh))
     val comp = DedupOps.connectedComponents(jp)
     val bench = sh.where(col("doc_id") % 97 === 0)
       .select("s").distinct()
@@ -400,18 +398,18 @@ object TrainDataOps {
   }
 
   /** Centroids after two full Lloyd iterations from [[kmeansSeeds]].
-    * Each round's k-row centroid frame is materialized eagerly so the
-    * next assignment's plan starts from a flat k-row input instead of
-    * re-optimizing the whole accumulated trajectory (sf0.1 best-of-2:
-    * 1.89 s -> 1.53 s; same shape the dup-clustering loop uses).
+    * Each round's k-row centroid frame is materialized eagerly (the
+    * [[Fixpoint]] loop) so the next assignment's plan starts from a flat
+    * k-row input instead of re-optimizing the whole accumulated
+    * trajectory (sf0.1 best-of-2: 1.89 s -> 1.53 s).
     */
   private[graft] def kmeansCentroids(points: DataFrame,
                                      k: Int = 8): DataFrame = {
     require(k > 0, s"k-means needs k > 0, got $k")
     val init = kmeansSeeds(points, k).localCheckpoint(eager = true)
-    (1 to 2).foldLeft(init) { case (c, _) =>
-      kmeansUpdate(kmeansAssign(points, c)).localCheckpoint(eager = true)
-    }
+    Fixpoint.iterate("kmeans", init, 2) { (c, _) =>
+      kmeansUpdate(kmeansAssign(points, c))
+    }.frame
   }
 
   /** The q101 trajectory as oracle CTEs (pts, c0, a1/c1, a2/c2, a3) —

@@ -99,15 +99,14 @@ object WarehouseOps {
   private[graft] def labelPropSettle(pairs: DataFrame,
       maxRounds: Int = 64): DataFrame = {
     val p2 = pairs.toDF("u", "v")
-    // hash(a)-partitioned once, PRESERVED across rounds (plain
-    // repartition+localCheckpoint loses it under AQE — see
-    // PartitionedCheckpoint): each round's edge side feeds the join
-    // with no exchange; only the node-grain frames shuffle per round.
+    // Shuffled by `a` once and checkpointed; the checkpoint does not
+    // carry hash(a) into the rounds under AQE (see
+    // PartitionedCheckpoint), so AQE owns each round's join layout.
     val edges = PartitionedCheckpoint.byKeys(
       p2.select(col("u").as("a"), col("v").as("b"))
         .unionAll(p2.select(col("v").as("a"), col("u").as("b"))),
       "a")
-    var lbl = edges.select(col("a").as("nd")).distinct()
+    val init = edges.select(col("a").as("nd")).distinct()
       .select(col("nd"), col("nd").as("l"), lit(0).as("settle"))
       .localCheckpoint(eager = true)
     // One flooding round as a UNION-formulated single aggregate (r15):
@@ -132,55 +131,33 @@ object WarehouseOps {
           when(col("l") < col("l0"), lit(r))
             .otherwise(col("settle0")).as("settle"),
           (col("l") < col("l0")).as("chg"))
-    var changed = 1L
-    var round = 0
-    while (changed > 0) {
-      // TWO rounds per checkpoint (r15): the convergence observe reads
-      // only the SECOND round's delta — flooding is monotone
-      // decreasing, so a no-change final round certifies neighbor-min
-      // closure and no confirm round re-runs after the fixpoint. A
-      // radius-R graph pays ceil((R+1)/2) checkpoint jobs instead of
-      // R+1 (q275 at sf0.1: 5 -> 3), and settle stays exact because
-      // each round updates it with its own round number.
-      val r1 = round + 1
-      val r2 = round + 2
-      round += 2
-      val obs = org.apache.spark.sql.Observation(s"lp_changed_$round")
-      val s1 = flood(lbl, r1).drop("chg")
-      val next = flood(s1, r2)
-        .observe(obs, coalesce(
-          sum(col("chg").cast("long")), lit(0L)).as("changed"),
-          // max settle = the last round ANY label changed so far; rides
-          // the same observe so the exact convergence-bound check below
-          // costs no extra action (ADVICE r15).
-          coalesce(max(col("settle")), lit(0)).as("max_settle"))
-        .select("nd", "l", "settle")
-      PartitionedCheckpoint.dumpRoundPlan(next, "labelprop_round")
-      val nextCk = next.localCheckpoint(eager = true)
-      changed = obs.get("changed").asInstanceOf[Long]
-      // In-loop runaway guard only: convergence is observed on EVEN
-      // rounds, so this loose cap admits up to maxRounds + 2 (an
-      // even-round change passes the +1 check; a batch whose first
-      // round changes and second doesn't skips the check entirely).
-      // The EXACT bound — no label changed after round maxRounds — is
-      // enforced on max_settle after the loop (ADVICE r15).
-      require(changed == 0 || round <= maxRounds + 1,
-        s"label propagation failed to converge in $maxRounds rounds")
-      if (changed == 0) {
-        val maxSettle = obs.get("max_settle") match {
-          case i: java.lang.Integer => i.toInt
-          case l: java.lang.Long => l.toInt
-        }
-        require(maxSettle <= maxRounds,
-          s"label propagation settled at round $maxSettle > cap $maxRounds")
-      }
-      // Round N's blocks are dead once round N+1 is materialized —
-      // release instead of letting superseded node frames stack up in
-      // storage memory for the whole fixpoint (up to maxRounds copies).
-      org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoints(lbl)
-      lbl = nextCk
+    // TWO rounds per checkpoint (r15): the convergence observe reads
+    // only the SECOND round's delta — flooding is monotone decreasing,
+    // so a no-change final round certifies neighbor-min closure and no
+    // confirm round re-runs after the fixpoint. A radius-R graph pays
+    // ceil((R+1)/2) checkpoint jobs instead of R+1 (q275 at sf0.1:
+    // 5 -> 3), and settle stays exact because each round updates it
+    // with its own round number.
+    //
+    // The driver's cap is a runaway guard only: (maxRounds + 1) / 2 + 1
+    // checkpoints admit up to maxRounds + 2 flooding rounds. The EXACT
+    // bound — no label changed after round maxRounds — is enforced on
+    // max_settle after the loop (ADVICE r15). max_settle is the last
+    // round ANY label changed so far; it rides the same observe, so the
+    // check costs no extra action.
+    val res = Fixpoint.iterate("labelprop", init, (maxRounds + 1) / 2 + 1,
+        changed = Some(col("chg")),
+        observed = Seq(coalesce(max(col("settle")), lit(0)).as("max_settle")),
+        release = true) { (lbl, i) =>
+      flood(flood(lbl, 2 * i + 1).drop("chg"), 2 * i + 2)
     }
-    lbl
+    val maxSettle = res.metrics("max_settle") match {
+      case i: java.lang.Integer => i.toInt
+      case l: java.lang.Long => l.toInt
+    }
+    require(maxSettle <= maxRounds,
+      s"label propagation settled at round $maxSettle > cap $maxRounds")
+    res.frame.select("nd", "l", "settle")
   }
 
   /** The REPEAT-co-purchase edge list — part pairs sharing >= 2 orders
@@ -356,8 +333,7 @@ object WarehouseOps {
       (s, dir) => {
         val w2 = repeatCoPurchasePairs(s, dir)
         // Edge layout via PartitionedCheckpoint: each BFS round's
-        // frontier expansion joins on a (flag-gated whether the layout
-        // is claimed or AQE-owned).
+        // frontier expansion joins on a.
         val edges = PartitionedCheckpoint.byKeys(
           w2.select(col("u").as("a"), col("v").as("b"))
             .unionAll(w2.select(col("v").as("a"), col("u").as("b"))),
@@ -368,6 +344,10 @@ object WarehouseOps {
         // plan is shallow and never recomputes a round). The old shape
         // checkpointed BOTH the frontier and the growing visited union
         // — two blocking jobs per round for the same set.
+        // This loop stays out of Fixpoint: `visited` still reads every
+        // round's checkpoint, so no round may ever be released, and a
+        // driver branch for this one caller would cost more than it
+        // saves.
         var visited = edges.agg(min("a").as("node"))
           .select(col("node"), lit(0).as("dist"))
           .localCheckpoint(eager = true)
@@ -1070,7 +1050,7 @@ object WarehouseOps {
         val edges0 = pairs0.select(col("u").as("a"), col("v").as("b"))
           .unionAll(pairs0.select(col("v").as("a"), col("u").as("b")))
           .localCheckpoint(eager = true)
-        var deg = edges0.groupBy("a").agg(count(lit(1)).as("deg"))
+        val deg0 = edges0.groupBy("a").agg(count(lit(1)).as("deg"))
           .localCheckpoint(eager = true)
         // FLAT peeling (r15): every round filters the ONE checkpointed
         // edge list by the current alive set instead of threading a
@@ -1081,11 +1061,10 @@ object WarehouseOps {
         // semi-join layers: 1+2+3+4 = 10 passes over e0 where this
         // shape pays exactly 4). Same kcorePeel operator, same
         // 4-round fixpoint, identical d4 output.
-        for (_ <- 1 to 4) {
-          deg = kcorePeel(edges0, deg, 3)
+        val deg = Fixpoint.iterate("kcore", deg0, 4) {
+          (d, _) => kcorePeel(edges0, d, 3)
             .groupBy("a").agg(count(lit(1)).as("deg"))
-            .localCheckpoint(eager = true)
-        }
+        }.frame
         deg.select(col("a").as("part"), col("deg").as("core_deg"))
           .orderBy("part")
       },

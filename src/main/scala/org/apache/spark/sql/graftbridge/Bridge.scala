@@ -38,50 +38,6 @@ object Bridge {
     ofRows(spark, read(clone).queryExecution.analyzed)
   }
 
-  /** Re-host a checkpointed LogicalRDD leaf with the HashPartitioning
-    * its data PROVABLY has. `repartition(n, keys).localCheckpoint`
-    * loses the partitioning under AQE (the adaptive plan's partitioning
-    * isn't final when Dataset.checkpoint captures it — measured
-    * UnknownPartitioning(0) on 4.1.2), so iterative operators re-shuffle
-    * their edge frame every round. The caller GUARANTEES the frame was
-    * materialized by a user-numPartitions repartition on exactly
-    * `keyCols` — REPARTITION_BY_NUM shuffles are never coalesced or
-    * skew-split by AQE, so the physical layout IS murmur3(keys) % n;
-    * claiming anything else would silently corrupt co-partitioned
-    * joins, hence the loud structural checks. The original leaf's
-    * stats and constraints are CARRIED OVER — dropping them (first
-    * attempt) made the leaf size as defaultSizeInBytes, which silently
-    * turned every downstream broadcast over the operator's output into
-    * a sort-merge join and regressed the CC family ~2x at sf0.1.
-    */
-  def claimHashPartitioned(df: org.apache.spark.sql.DataFrame,
-                           numParts: Int,
-                           keyCols: Seq[String])
-  : org.apache.spark.sql.DataFrame = {
-    val spark =
-      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        require(lr.rdd.getNumPartitions == numParts,
-          s"claimHashPartitioned: checkpoint has ${lr.rdd.getNumPartitions} " +
-            s"partitions, caller claims $numParts — the materializing " +
-            "repartition must use the same explicit numPartitions")
-        val attrs = keyCols.map(n => lr.output.find(_.name == n).getOrElse(
-          throw new IllegalArgumentException(
-            s"claimHashPartitioned: no column '$n' in " +
-              lr.output.map(_.name).mkString(","))))
-        val part = org.apache.spark.sql.catalyst.plans.physical
-          .HashPartitioning(attrs, numParts)
-        org.apache.spark.sql.classic.Dataset.ofRows(spark,
-          new org.apache.spark.sql.execution.LogicalRDD(
-            lr.output, lr.rdd, part, Nil, lr.isStreaming, lr.stream)(
-            spark, Some(lr.computeStats()), Some(lr.constraints)))
-      case other => throw new IllegalStateException(
-        "claimHashPartitioned expects a checkpointed LogicalRDD leaf, " +
-          s"got ${other.getClass.getSimpleName}")
-    }
-  }
-
   /** Unpersist the blocks behind the SINGLE localCheckpoint leaf in
     * `df`'s plan. For iterative fixpoints that re-checkpoint a frame
     * per round: once round N+1 is eagerly materialized, round N's

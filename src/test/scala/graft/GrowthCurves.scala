@@ -8,9 +8,7 @@ import org.apache.spark.sql.functions._
   * q121, q129, q158, q275) at each factor, recording wall seconds and
   * the structural counts that the "bucketed, never all-pairs" posture
   * predicts grow LINEARLY (candidate pairs, co-purchase edges). Fitted
-  * exponents land in PLANS.md; the same sweep times the
-  * `graft.graph_edge_prepartition` gate on vs off per factor to locate
-  * its crossover empirically instead of "a cluster should measure".
+  * exponents land in PLANS.md.
   *
   * Replica construction — DISJOINT replicas, i.e. SF growth at constant
   * structure (constant duplicate-rate, constant degree distribution):
@@ -66,11 +64,6 @@ object GrowthCurves {
     .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
   private val Heavies = AllHeavies
     .filter(q => only.forall(_.exists(q.contains)))
-  // The three heavies whose fixpoint edge frames ride the
-  // graft.graph_edge_prepartition gate (CC under q110/q121, flooding
-  // under q275).
-  private val Gated = Seq("q110_full_dedup", "q121_entity_resolution",
-    "q275_labelprop_settle").filter(q => only.forall(_.exists(q.contains)))
 
   private val lower = "abcdefghijklmnopqrstuvwxyz"
   private val alphabet = lower + lower.toUpperCase + "0123456789"
@@ -199,15 +192,6 @@ object GrowthCurves {
           f"cpu_wall=${best._2}%.1f loadavg=${best._3}%.1f")
         q -> Seq(s1, s2)
       }
-      val gatedWalls = Gated.map { q =>
-        spark.conf.set("graft.graph_edge_prepartition", "true")
-        val s1 = try { val a = timed(q, dir); val b = timed(q, dir)
-          Seq(a, b) } finally
-          spark.conf.unset("graft.graph_edge_prepartition")
-        println(f"[growth] x$r $q FLAG-ON walls=${s1.head._1}%.2f/${
-          s1(1)._1}%.2f")
-        q -> s1
-      }
       def wjson(ws: Seq[(String, Seq[(Double, Double, Double)])]) =
         ws.map { case (q, ss) =>
           s""""$q":{"walls":[${ss.map(s => f"${s._1}%.3f").mkString(",")}],""" +
@@ -218,7 +202,7 @@ object GrowthCurves {
         s""""prefix_candidates":$preCand,""" +
         s""""copurchase_edges":$coEdges,"repeat_edges":$repEdges,""" +
         s""""apriori_triple_candidates":$apCand,""" +
-        s""""default":{${wjson(walls)}},"prepartition":{${wjson(gatedWalls)}}}""" +
+        s""""default":{${wjson(walls)}}}""" +
         (if (r == Factors.last) "\n" else ",\n")
     }
     sb ++= "]"

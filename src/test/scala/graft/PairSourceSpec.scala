@@ -113,17 +113,11 @@ class PairSourceSpec extends SparkSpec {
     assert(recall >= 0.8, f"LSH keep-list recall $recall%.3f below bound")
   }
 
-  test("q85/q96 pair source flips by config and stays consistent") {
-    val docs = corpus(withHub = true)
-    spark.conf.set("graft.pair_source", "lsh")
-    try {
-      val viaConf = DedupOps.keepList(docs, DedupOps.pairSource(spark))
-      val explicit = DedupOps.keepList(docs, "lsh")
-      assert(viaConf.collect().toSeq == explicit.collect().toSeq)
-    } finally spark.conf.unset("graft.pair_source")
-    intercept[IllegalArgumentException] {
-      DedupOps.nearDupPairs(docs, "bogus").count()
+  test("an unknown pair source is rejected") {
+    val e = intercept[IllegalArgumentException] {
+      DedupOps.nearDupPairs(corpus(withHub = true), "bogus").count()
     }
+    assert(e.getMessage.contains("unknown pair source 'bogus'"))
   }
 
   test("q151 prefix filtering loses no pair at the 0.5 threshold") {

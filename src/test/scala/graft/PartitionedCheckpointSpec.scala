@@ -1,20 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{PartitionedCheckpoint, WarehouseOps}
+import graft.ops.PartitionedCheckpoint
 
-/** Pins BOTH shapes of the config-gated edge-frame checkpoint
-  * (PartitionedCheckpoint, round-10):
-  *
-  *  - default (`graft.graph_edge_prepartition` unset): the leaf carries
-  *    UnknownPartitioning — AQE owns the per-round layout (coalesce +
-  *    broadcast-promote), the measured winner in the small regime;
-  *  - flag on: the leaf CARRIES hash(key) at spark.sql.shuffle.partitions
-  *    and the per-round join consumes it with NO edge-side exchange —
-  *    the shuffle-once layout a cluster picks when the edge list
-  *    outgrows broadcast and the single-digit-task regime;
-  *  - both shapes produce IDENTICAL results through a full fixpoint
-  *    (labelPropSettle), so the flag is a pure layout decision.
+/** Pins the fact PartitionedCheckpoint documents: under AQE a
+  * `repartition(key).localCheckpoint` leaf carries UnknownPartitioning,
+  * so each round of an iterative operator re-exchanges its edge frame.
+  * A Spark that starts preserving the partitioning through
+  * localCheckpoint fails these tests — the signal that the per-round
+  * edge exchange could go.
   */
 class PartitionedCheckpointSpec extends SparkSpec {
   import spark.implicits._
@@ -22,39 +16,23 @@ class PartitionedCheckpointSpec extends SparkSpec {
   private val edges =
     Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (5L, 5L))
 
-  private def withFlag[A](on: Boolean)(f: => A): A = {
-    val key = "graft.graph_edge_prepartition"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, on.toString)
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("flag off: leaf stays AQE-owned (unknown partitioning)") {
-    withFlag(on = false) {
-      val ck = PartitionedCheckpoint.byKeys(edges.toDF("a", "b"), "a")
-      val leaf = ck.queryExecution.optimizedPlan
-        .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-      assert(leaf.outputPartitioning.toString.contains("UnknownPartitioning"),
-        s"expected AQE-owned layout, got ${leaf.outputPartitioning}")
-    }
+    val ck = PartitionedCheckpoint.byKeys(edges.toDF("a", "b"), "a")
+    val leaf = ck.queryExecution.optimizedPlan
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+    assert(leaf.outputPartitioning.toString.contains("UnknownPartitioning"),
+      s"expected AQE-owned layout, got ${leaf.outputPartitioning}")
   }
 
   test("flag off: the round join pays the per-round edge exchange it accepts") {
-    // The default path's rationale is "AQE's partitioning loss costs a
-    // per-round edge re-exchange, and that loses to AQE's own layout
-    // only in the small regime". Pin that the exchange is actually
-    // THERE (broadcast disabled so the shuffle join can't hide it): a
-    // future Spark that preserves partitioning through localCheckpoint
-    // fails this test, which is the signal to re-evaluate the gate
-    // (VERDICT r10 #7).
+    // Pin that the exchange is actually THERE (broadcast disabled so
+    // the shuffle join can't hide it): a future Spark that preserves
+    // partitioning through localCheckpoint fails this test (VERDICT
+    // r10 #7).
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "-1")
-    try withFlag(on = false) {
+    try {
       val ck = PartitionedCheckpoint.byKeys(edges.toDF("a", "b"), "a")
       val lbl = ck.select(col("a").as("nd")).distinct()
         .select(col("nd"), col("nd").as("l")).localCheckpoint(eager = true)
@@ -62,44 +40,8 @@ class PartitionedCheckpointSpec extends SparkSpec {
         .groupBy(col("b")).agg(min("l").as("nl"))
       val plan = round.queryExecution.executedPlan.toString
       assert(plan.linesIterator.exists(_.contains("Exchange hashpartitioning(a#")),
-        "default path shows NO edge-side exchange — Spark now preserves " +
-          "partitioning through localCheckpoint; re-evaluate the " +
-          s"graft.graph_edge_prepartition gate's rationale:\n$plan")
+        "NO edge-side exchange — Spark now preserves partitioning " +
+          s"through localCheckpoint:\n$plan")
     } finally spark.conf.set(key, prev)
-  }
-
-  test("flag on: leaf carries hash(key) and the round join adds no edge exchange") {
-    withFlag(on = true) {
-      val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val ck = PartitionedCheckpoint.byKeys(edges.toDF("a", "b"), "a")
-      val leaf = ck.queryExecution.optimizedPlan
-        .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-      assert(leaf.outputPartitioning
-        .isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.HashPartitioning])
-      assert(leaf.outputPartitioning.numPartitions == n)
-      // A representative round join keyed on a: the edge side must feed
-      // the join straight from the scan — no Exchange between them.
-      val lbl = ck.select(col("a").as("nd")).distinct()
-        .select(col("nd"), col("nd").as("l")).localCheckpoint(eager = true)
-      val round = ck.join(lbl, col("a") === col("nd"))
-        .groupBy(col("b")).agg(min("l").as("nl"))
-      val plan = round.queryExecution.executedPlan.toString
-      val edgeScanSide = plan.linesIterator
-        .filter(_.contains(s"Exchange hashpartitioning(a#")).toSeq
-      assert(edgeScanSide.isEmpty,
-        s"edge side re-exchanged despite claimed partitioning:\n$plan")
-    }
-  }
-
-  test("both shapes produce identical fixpoint results") {
-    val off = withFlag(on = false) {
-      WarehouseOps.labelPropSettle(edges.toDF("u", "v"))
-        .as[(Long, Long, Int)].collect().sortBy(_._1).toSeq
-    }
-    val on = withFlag(on = true) {
-      WarehouseOps.labelPropSettle(edges.toDF("u", "v"))
-        .as[(Long, Long, Int)].collect().sortBy(_._1).toSeq
-    }
-    assert(on == off)
   }
 }

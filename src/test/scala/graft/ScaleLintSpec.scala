@@ -49,6 +49,22 @@ class ScaleLintSpec extends SparkSpec {
   : Seq[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)] =
     catalogQEs.map { case (name, qe) => name -> qe.optimizedPlan }
 
+  test("the fixpoint loop machinery lives only in Fixpoint.scala") {
+    // A hand-rolled loop (its own observe, release or plan dump) must
+    // not grow back beside the shared driver. q268's BFS keeps its own
+    // loop but uses none of the three.
+    val dir = new java.io.File("src/main/scala/graft/ops")
+    assert(dir.isDirectory, s"no source directory at ${dir.getAbsolutePath}")
+    val offenders = for {
+      f <- dir.listFiles().toSeq.sortBy(_.getName)
+      if f.getName.endsWith(".scala") && f.getName != "Fixpoint.scala"
+      text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      tok <- Seq("Observation(", "releaseCheckpoints", "dumpRoundPlan")
+      if text.contains(tok)
+    } yield s"${f.getName}: $tok"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("no window partitions a corpus-scale frame by a constant-cardinality key") {
     val bounded = ScaleLint.boundedDomainCols(spark)
     assert(optimizedPlans.size == CatalogContract.expectedSize,
