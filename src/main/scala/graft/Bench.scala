@@ -1,67 +1,22 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-/** Per-round benchmark: runs every catalog query against
-  * SPARK_GRAFT_SF_DIR (default sf0.1) and prints one JSON line with
-  * total + per-query seconds. Each query is fully materialized via
-  * count() after a cache-free plan.
+/** Catalog bench: runs every catalog query against SPARK_GRAFT_SF_DIR
+  * (default sf0.1) and prints one JSON line with the total and the
+  * per-query seconds. Each query is fully materialized via count() over
+  * a cache-free plan, best of two runs.
   *
   * Warm-up: every query runs once at the smallest scale factor first
   * (sf0.001 when present, else the bench dir). The generated code for a
   * plan is identical across scale factors, so this drives Janino
-  * compilation AND HotSpot JIT of each fused stage on tiny data; the
-  * timed sf pass then measures data-proportional throughput — the
-  * number that extrapolates to a long-lived cluster — rather than
-  * one-time JVM warm-up (measured ~11 s of the CSV-ETL query's first
-  * run on 32 cores was JIT, 2.8 s was work).
+  * compilation and HotSpot JIT of each fused stage on tiny data, and the
+  * timed pass measures the work rather than one-time JVM warm-up.
   *
-  * Round-5 lessons, all visible in the artifact itself:
-  *  - the FULL per-query record (wall + cpu_wall + gc_wall + runs) is
-  *    also WRITTEN TO A FILE (BENCH_local_rNN.json in the repo root) —
-  *    two rounds running the driver's stdout tail-capture truncated the
-  *    big first line to `"parsed": null`, losing exactly the per-query
-  *    diagnostics that would have root-caused the q42 regression;
-  *  - two fixed CALIBRATION controls run before the timed pass: a
-  *    zero-allocation range-sum and an allocation-heavy md5-concat.
-  *    Their cost is engine-independent and constant across rounds, so
-  *    "engine regressed" (queries inflate, controls flat) and "box/JVM
-  *    sick" (controls inflate too) separate at a glance;
-  *  - a 5-run same-JVM STABILITY probe re-executes the historically
-  *    heaviest queries back-to-back and records min/median/max — the
-  *    r5 pathology (identical re-runs swinging 84→7806 CPU-s under
-  *    continuous JIT recompilation) is now self-detecting;
-  *  - `spark.sql.codegen.cache.maxEntries` is raised from its default
-  *    100: the 123-query catalog thrashes a 100-entry LRU, so every
-  *    re-run regenerated + re-JIT-compiled every stage (a fresh class
-  *    per regeneration), churning the code cache all bench long.
+  * The repository's standing benchmark is `perfbench` (BENCHMARK.json);
+  * this main is the catalog-wide timing pass.
   */
 object Bench {
-
-  /** Queries with a history of runtime (not plan) sensitivity — the
-    * stability probe re-runs these 5x in the same JVM (VERDICT r5 #1/#7).
-    * The round-6/7 reworked heavies (q121/q129/q151/q152) are included
-    * so their floors are stability-probed in every artifact (VERDICT
-    * r6 #5). Round 9 (VERDICT r8 #3): the spike class has now appeared
-    * on two different checkpoint-heavy queries in two rounds (q151 r7,
-    * q129 r8), so the probe covers the whole checkpoint/broadcast-heavy
-    * FAMILY — every iterative graph query plus the checkpointed
-    * dedup/golden-record composites — not just the historical hits.
-    */
-  private val StabilityQueries = Seq(
-    "q42_csv_etl_throughput", "q110_full_dedup", "q64_dup_clusters",
-    // Round 13: q85 joined the spike class (5.31 s in the round-open
-    // pass vs a 1.85 s r12 steady state, jit-storm signature on the
-    // isolated re-run) — it is the same checkpointed pairs->CC->keep
-    // composite as q64/q110, so it gets the same 5x stability block
-    // for self-clearing future flags.
-    "q85_dedup_keeplist",
-    "q105_keeplist_lsh", "q96_curation_pipeline",
-    "q121_entity_resolution", "q129_triangle_count",
-    "q151_prefix_filter_join", "q152_kcore",
-    "q158_neighbor_similarity", "q198_golden_record",
-    "q267_copurchase_edges", "q268_bfs_hops", "q275_labelprop_settle")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -77,7 +32,7 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // Default 100-entry codegen class cache + 123-query catalog = LRU
+      // Default 100-entry codegen class cache + 281-query catalog = LRU
       // thrash: every query re-run regenerates its stages as NEW classes
       // (fresh classloader each), so HotSpot recompiles from scratch and
       // dead nmethods pile up in the code cache. Size it to the catalog.
@@ -85,8 +40,8 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    // Local-iteration filter (not used by the driver): comma-separated
-    // substring match, e.g. SPARK_GRAFT_ONLY=q42,q110.
+    // Local-iteration filter: comma-separated substring match,
+    // e.g. SPARK_GRAFT_ONLY=q42,q110.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val catalog = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -100,406 +55,59 @@ object Bench {
       catch { case scala.util.control.NonFatal(_) => () }
     }
 
-    // Timed runs with a LOAD GUARD (round-3 lesson: a co-tenant-loaded
-    // box published a bench artifact 2-27x off the engine's real cost,
-    // with nothing in the JSON to tell a regression from a busy
-    // machine). Three structural fixes:
-    //  1. /proc/loadavg is recorded at start and end of the timed pass;
-    //  2. every query records cpu-vs-wall for its reported run — our own
-    //     process CPU over wall time. On an idle box a parallel query
-    //     runs many CPU-seconds per wall-second; when co-tenants steal
-    //     cores, wall inflates while our CPU doesn't, so a LOW ratio on
-    //     a query that should parallelize flags an untrustworthy number
-    //     in the artifact itself;
-    //  3. a query whose two samples diverge >2x re-runs (up to 2 extra
-    //     samples) — transient load spikes get re-measured instead of
-    //     published.
-    // Fresh DataFrame each run (no AQE stage reuse); leftover
-    // cached/checkpointed blocks dropped between queries so one query's
-    // state can't pressure a later query's GC.
+    // One query's cached, checkpointed and broadcast blocks and its
+    // garbage must not weigh on the next query's timed run.
     def clearState(): Unit = {
-      // blocking = true: r7's q151 stability probe read a MONOTONE
-      // 2.1->24.0 s climb across same-JVM re-runs of a query that
-      // eagerly localCheckpoints twice per run; with non-blocking
-      // unpersist, checkpoint block cleanup can lag the next run's
-      // allocation and the blocks accumulate. Waiting for removal
-      // here keeps one run's storage from pressuring the next.
+      // Blocking, so checkpoint blocks are gone before the next run
+      // allocates rather than piling up behind a lagging cleaner.
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
       spark.catalog.clearCache()
-      // Broadcast blocks are NOT covered by the two calls above: every
-      // broadcast() hint leaves a TorrentBroadcast whose cleanup is
-      // GC-driven and lags back-to-back re-runs — the r8 driver
-      // artifact caught q129 (several broadcasts per invocation)
-      // climbing 3.4->50 s monotone across 5 same-JVM runs with
-      // blocking unpersist already in place (VERDICT r8 #2).
-      // Accumulated broadcast blocks squat in unified STORAGE memory
-      // and squeeze execution memory into spills. Destroy them
-      // explicitly (blocking), same rationale as the RDD unpersist.
-      // The removed ids go to stderr (ADVICE r9): if a probe run ever
-      // dies with broadcast-block-not-found, the log shows exactly
-      // which ids the harness destroyed right before.
+      // Broadcast blocks are not covered by the two calls above.
       val removed = org.apache.spark.graft.BenchInternals.removeAllBroadcasts()
       if (removed.nonEmpty)
         System.err.println(
           s"[bench] destroyed broadcasts: ${removed.mkString(",")}")
-      // Settle the heap between queries: without this, one query's
-      // garbage is collected DURING the next query's timed window and
-      // books its GC storm onto an innocent timing.
       System.gc()
     }
-    def loadavg1m(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").getLines()
-        .next().split(" ")(0).toDouble
-      catch { case scala.util.control.NonFatal(_) => -1.0 }
-    val osBean = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean match {
-      case b: com.sun.management.OperatingSystemMXBean => Some(b)
-      case _ => None
-    }
-    def procCpuNanos(): Long = osBean.map(_.getProcessCpuTime).getOrElse(0L)
-    // Cumulative stop-the-world GC milliseconds: a query whose reported
-    // run spent a big fraction of wall in GC is flagged by the artifact
-    // itself (GC threads inflate cpu_wall, so the two together separate
-    // "parallel work" from "heap thrash").
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
-    }
-    // Cumulative HotSpot JIT compilation milliseconds: the r5 pathology
-    // signature was 21-54 s of compile time on EVERY re-run of one
-    // query; recording the delta per reported run makes recompile churn
-    // a first-class artifact column instead of a judge-side forensic.
-    def jitMillis(): Long =
-      Option(java.lang.management.ManagementFactory.getCompilationMXBean)
-        .filter(_.isCompilationTimeMonitoringSupported)
-        .map(_.getTotalCompilationTime).getOrElse(0L)
 
-    // (wall secs, cpu/wall, gc/wall, jit secs); wall = -1 marks a failure.
-    def sample(thunk: () => Long): (Double, Double, Double, Double) = {
+    // Wall seconds of one fresh run; -1 marks a failure, never a time.
+    def sample(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+    : Double = {
       clearState()
-      val g0 = gcMillis()
-      val j0 = jitMillis()
-      val c0 = procCpuNanos()
       val t0 = System.nanoTime()
       try {
-        thunk()
-        val wall = (System.nanoTime() - t0) / 1e9
-        val cpu = (procCpuNanos() - c0) / 1e9
-        val gc = (gcMillis() - g0) / 1e3
-        val jit = (jitMillis() - j0) / 1e3
-        (wall, if (wall > 0) cpu / wall else 0.0,
-          if (wall > 0) gc / wall else 0.0, jit)
-      } catch { // failure marker, never a time; fatal errors propagate
-        case scala.util.control.NonFatal(_) => (-1.0, 0.0, 0.0, 0.0)
+        fn(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
+      } catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: $e")
+        -1.0
       }
     }
 
-    // Idle-box gate (round-4 lesson: two rounds published floors off a
-    // box whose loadavg climbed to ~6 mid-run): wait for the 1-minute
-    // loadavg to drop below 2 before the timed pass, up to 10 minutes,
-    // then proceed regardless — the artifact records how long we waited
-    // and the start/end loadavg, so a still-loaded run is self-flagging.
-    var loadWaitSec = 0
-    while (loadavg1m() >= 2.0 && loadWaitSec < 600) {
-      Thread.sleep(15000)
-      loadWaitSec += 15
+    val walls = catalog.map { case (name, fn) =>
+      val ok = Seq(sample(name, fn), sample(name, fn)).filter(_ >= 0)
+      name -> (if (ok.isEmpty) -1.0 else ok.min)
     }
-
-    // Fixed-work calibration pair, timed like any query (best of 2).
-    // cal_range_sum: pure whole-stage-codegen long arithmetic, ~zero
-    // allocation — measures raw CPU availability. cal_md5_alloc: one
-    // UTF8String render + md5 per row — measures the JVM's health on
-    // exactly the allocation+JIT-sensitive profile that regressed in r5.
-    // Neither touches the engine's own operators, so their round-over-
-    // round drift is pure environment.
-    // collect(), not count(): count() over the agg lets Catalyst prune
-    // the aggregate expression away and the control does no work.
-    val controls: Seq[(String, () => Long)] = Seq(
-      // id % 7, not id: sum(id) over 8e9 rows is ~3.2e19, past BIGINT —
-      // ANSI mode throws and the control silently records -1 (r6 bug).
-      "cal_range_sum" -> (() =>
-        spark.range(0, 8L * 1000 * 1000 * 1000, 1, cpus.toInt)
-          .agg(sum(col("id") % 7)).collect().length.toLong),
-      "cal_md5_alloc" -> (() =>
-        spark.range(0, 48L * 1000 * 1000, 1, cpus.toInt)
-          .select(md5(concat_ws("-", lit("cal"), col("id"))).as("h"))
-          .agg(max(col("h"))).collect().length.toLong))
-    // Healthy-box reference walls for the calibration pair, COMMITTED
-    // in the artifact (VERDICT r6 #4): measured on an idle box with the
-    // pinned-heap JVM flags (PLANS.md round-6 floor recording). With
-    // expected values in the JSON itself, host normalization is a
-    // computed field — host_factor = measured/expected per control —
-    // instead of a by-hand exercise against prose, and the binding
-    // (worst) control is what normalizes the total.
-    val controlExpected = Map("cal_range_sum" -> 0.35, "cal_md5_alloc" -> 0.80)
-    val controlRes = controls.map { case (name, thunk) =>
-      val ss = Seq(sample(thunk), sample(thunk))
-      val best = ss.filter(_._1 >= 0).sortBy(_._1).headOption
-      (name, best.map(_._1).getOrElse(-1.0), best.map(_._2).getOrElse(0.0),
-        best.map(_._3).getOrElse(0.0), best.map(_._4).getOrElse(0.0),
-        ss.map(_._1))
-    }
-    // Overall host factor: the MAX over controls (the allocation-
-    // sensitive control binds when the box is sick in exactly the
-    // profile most catalog queries stress — r6's optimistic-averaging
-    // mistake). Floored at 1.0: a box faster than the reference never
-    // scales the total down below its raw measurement.
-    val hostFactor = controlRes.flatMap { case (k, w, _, _, _, _) =>
-      controlExpected.get(k).filter(_ > 0).flatMap(e =>
-        if (w > 0) Some(w / e) else None)
-    }.foldLeft(1.0)(math.max)
-
-    // WINDOWED normalization (VERDICT r11 #1): host_factor measured once
-    // before the pass mis-normalizes the whole artifact when a loaded box
-    // settles (or degrades) mid-pass — r11's tree read hf 2.05-5.48
-    // across windows, splitting the same total into 21.7 s vs 57.8 s
-    // "normalized". So the calibration pair RE-RUNS every ~50 queries
-    // (and once after the pass): each window is ONE sample per control —
-    // a window measures the environment AS IT IS, so a load-poisoned
-    // sample is signal, not noise (best-of-2 would systematically pick
-    // the quiet moment and under-normalize). Window 0 is the pre-pass
-    // best-of-2 pair above, so the legacy host_factor stays comparable
-    // across rounds. Per-query normalization divides by the NEAREST
-    // window's factor (read rule in PLANS.md).
-    // Clamped at 1 (ADVICE r12: 0 made `idx % windowEvery` throw
-    // ArithmeticException on query 1, killing the pass mid-run); an
-    // unparsable value fails fast with the variable named, <=0 means
-    // "window after every query" rather than a crash.
-    val windowEvery = {
-      val raw = sys.env.getOrElse("SPARK_GRAFT_CTL_WINDOW", "50")
-      val parsed = try raw.toInt catch {
-        case _: NumberFormatException => sys.error(
-          s"SPARK_GRAFT_CTL_WINDOW must be an integer, got '$raw'")
-      }
-      math.max(1, parsed)
-    }
-    def controlWindow(afterQ: Int)
-    : (Int, Seq[(String, Double)], Double, Double) = {
-      val walls = controls.map { case (name, thunk) => name -> sample(thunk)._1 }
-      val hf = walls.flatMap { case (k, w) =>
-        controlExpected.get(k).filter(_ > 0)
-          .flatMap(e => if (w > 0) Some(w / e) else None)
-      }.foldLeft(1.0)(math.max)
-      (afterQ, walls, hf, loadavg1m())
-    }
-    val ctlWindows = scala.collection.mutable.ArrayBuffer(
-      (0, controlRes.map(c => c._1 -> c._2), hostFactor, loadavg1m()))
-
-    // One repo-root listing serves both the round-number scan and the
-    // reference scan below — the pairing (outPath first, refs filtered
-    // against it) is the correctness of the exclusion logic.
-    val rootFiles = Option(new java.io.File(".").listFiles()).toSeq.flatten
-
-    // Output path, computed BEFORE the timed pass so the wall-storm
-    // guard's reference scan below can exclude the file this run will
-    // write. Named after the next round number so each round's artifact
-    // survives in git.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", {
-      val rounds = rootFiles
-        .flatMap(f => "^BENCH_r(\\d+)\\.json$".r
-          .findFirstMatchIn(f.getName).map(_.group(1).toInt))
-      f"BENCH_local_r${if (rounds.isEmpty) 0 else rounds.max + 1}%02d.json"
-    })
-    val outCanonical = new java.io.File(outPath).getCanonicalPath
-
-    // Reference walls for the wall-storm guard (VERDICT r13 #4): the
-    // newest round-numbered artifact in the repo root (excluding the
-    // file this run writes — by CANONICAL path, so a same-named output
-    // directed elsewhere doesn't silently drop the repo artifact from
-    // the reference selection), overridable via SPARK_GRAFT_REF_BENCH.
-    // Raw committed walls, not normalized ones — per-query raw walls in
-    // the committed artifacts track the quiet-host floors closely (the
-    // window factors mostly capture control-sensitive load, and
-    // BenchMath.wallStorm re-scales by the CURRENT window factor).
-    val refWalls: Map[String, Double] = sys.env.get("SPARK_GRAFT_REF_BENCH")
-      .orElse {
-        val re = "^BENCH_local_r(\\d+)\\.json$".r
-        rootFiles
-          .filter(_.getCanonicalPath != outCanonical)
-          .flatMap(f => re.findFirstMatchIn(f.getName)
-            .map(m => (m.group(1).toInt, f.getPath)))
-          .sortBy(_._1).lastOption.map(_._2)
-      }
-      .map { p =>
-        try BenchMath.parseQueryWalls(java.nio.file.Files.readString(
-          java.nio.file.Paths.get(p)))
-        catch { case scala.util.control.NonFatal(_) =>
-          Map.empty[String, Double] }
-      }
-      .getOrElse(Map.empty)
-
-    val loadStart = loadavg1m()
-    val results = catalog.zipWithIndex.map { case ((name, fn), idx) =>
-      if (idx > 0 && idx % windowEvery == 0) ctlWindows += controlWindow(idx)
-      def one() = sample(() => fn(spark, sfDir).count())
-      var samples = List(one(), one())
-      def ok = samples.map(_._1).filter(_ >= 0).sorted
-      // Divergent = the two FASTEST successful samples disagree >2x; a
-      // load-poisoned outlier then triggers a re-run, but once two fresh
-      // samples agree the loop stops (comparing global max/min instead
-      // would burn the whole retry budget on every outlier, since the
-      // poisoned sample never leaves the list).
-      var retries = 0
-      def divergent = {
-        val s = ok
-        s.size >= 2 && s(1) / math.max(s(0), 1e-9) > 2.0
-      }
-      // JIT-storm guard (round 12): the q129/q121 forensic showed
-      // HotSpot occasionally re-compiles a query's (codegen-cache-hit)
-      // classes across BOTH timed samples — jit_sec ~ wall while the
-      // same query's stability block reads its normal floor minutes
-      // later. Both samples inflate together, so the >2x divergence
-      // rule never fires; instead, when the BEST sample spent more than
-      // half its wall in JIT, buy extra samples from the same retry
-      // budget until one lands outside the storm.
-      def jitStorm = {
-        val best = samples.filter(_._1 >= 0).sortBy(_._1).headOption
-        best.exists(s => s._4 > 0.5 * s._1)
-      }
-      // Wall-storm guard (round 14, VERDICT r13 #4): q85's r13 storm
-      // inflated BOTH samples together with LOW in-bench jit — invisible
-      // to the two predicates above. Compare the best wall against the
-      // previous committed artifact's wall for this query, scaled by the
-      // current control window's host factor (predicate + thresholds
-      // pinned in BenchMathSpec; zero fires across the committed
-      // r12/r13 normal-pass pairs, fires on the q85 replay).
-      def wallStorm = ok.headOption.exists(b =>
-        BenchMath.wallStorm(b, refWalls.get(name), ctlWindows.last._3))
-      while (retries < 2 && (divergent || jitStorm || wallStorm)) {
-        samples ::= one()
-        retries += 1
-      }
-      val best = samples.filter(_._1 >= 0).sortBy(_._1).headOption
-      // min over SUCCESSFUL runs; a query that failed every run reports
-      // -1 so breakage can't masquerade as a speedup.
-      (name, best.map(_._1).getOrElse(-1.0), best.map(_._2).getOrElse(0.0),
-        best.map(_._3).getOrElse(0.0), best.map(_._4).getOrElse(0.0),
-        samples.count(_._1 >= 0))
-    }
-    ctlWindows += controlWindow(catalog.size)
-    val loadEnd = loadavg1m()
-
-    // Nearest-window normalization (selection rule + arithmetic live in
-    // BenchMath so BenchMathSpec pins them; factors are already floored
-    // at 1.0 per window).
-    val windowFactors = ctlWindows.map(w => (w._1, w._3)).toSeq
-    val totalWindowedNorm = BenchMath.windowedNormalizedTotal(
-      windowFactors, results.map(_._2).toSeq)
-
-    // Stability probe: N consecutive same-JVM runs of the historically
-    // runtime-sensitive queries. A healthy engine keeps max/min <= 1.5;
-    // the r5 disease (JIT recompile churn) shows up here as a ratio in
-    // the tens even when the best-of-2 number above looks fine.
-    val probeRuns = sys.env.getOrElse("SPARK_GRAFT_STABILITY_RUNS", "5").toInt
-    val probed = StabilityQueries
-      .filter(q => catalog.exists(_._1 == q))
-    val stability = probed.map { name =>
-      val fn = SparkEntry.queries(name)
-      // Post-run state counters ride along with each wall time
-      // (VERDICT r8 #2): if a future spike recurs, the artifact itself
-      // shows WHICH resource grew across the five runs — live blocks,
-      // storage bytes, blockmgr disk files/bytes, live broadcasts —
-      // instead of leaving the mechanism to forensics.
-      // Load covariates per run (VERDICT r10 #1): three >=7x wall
-      // outliers in the r10 driver artifact could only be exonerated by
-      // cross-artifact forensics. With cpu_wall + loadavg riding along
-      // per run, a co-tenant window is visible in the row itself:
-      // wall up, cpu_wall flat/down, loadavg up => host load;
-      // wall up WITH cpu_wall up and state counters up => engine.
-      val runsDiag = (1 to probeRuns).map { _ =>
-        val s = sample(() => fn(spark, sfDir).count())
-        val load = loadavg1m()
-        val (blocks, memB, files, diskB) =
-          org.apache.spark.graft.BenchInternals.storageCounters()
-        val nBc = org.apache.spark.graft.BenchInternals.broadcastIds().size
-        (s._1, blocks, memB, files, diskB, nBc, s._2, load)
-      }
-      val walls = runsDiag.map(_._1).filter(_ >= 0).sorted
-      val med = if (walls.isEmpty) -1.0 else walls(walls.size / 2)
-      (name, walls.headOption.getOrElse(-1.0), med,
-        walls.lastOption.getOrElse(-1.0), walls, runsDiag)
-    }
-
-    def jmap(pairs: Seq[(String, String)]): String =
-      pairs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val qs = jmap(results.map { case (k, v, _, _, _, _) => k -> f"$v%.3f" })
-    val cw = jmap(results.map { case (k, _, r, _, _, _) => k -> f"$r%.2f" })
-    val gw = jmap(results.map { case (k, _, _, g, _, _) => k -> f"$g%.2f" })
-    val jt = jmap(results.map { case (k, _, _, _, j, _) => k -> f"$j%.2f" })
-    val runs = jmap(results.map { case (k, _, _, _, _, n) => k -> n.toString })
-    val ctl = jmap(controlRes.map { case (k, w, c, g, j, ss) =>
-      val exp = controlExpected.getOrElse(k, -1.0)
-      val hf = if (exp > 0 && w > 0) w / exp else -1.0
-      k -> (f"""{"wall":$w%.3f,"expected":$exp%.3f,"host_factor":$hf%.2f,"cpu_wall":$c%.2f,"gc_wall":$g%.2f,"jit_sec":$j%.2f,"samples":""" +
-        ss.map(v => f"$v%.3f").mkString("[", ",", "]") + "}")
-    })
-    val stab = jmap(stability.map { case (k, mn, md, mx, ws, diag) =>
-      def arr[A](f: ((Double, Int, Long, Int, Long, Int, Double, Double)) => A) =
-        diag.map(f).mkString("[", ",", "]")
-      // "runs" is SORTED (min/median/max read off it); "walls_seq" is
-      // EXECUTION order — the column that separates a monotone leak
-      // (r7 q151, r8 q129) from load noise at a glance.
-      k -> (f"""{"min":$mn%.3f,"median":$md%.3f,"max":$mx%.3f,"runs":""" +
-        ws.map(v => f"$v%.3f").mkString("[", ",", "]") +
-        s""","walls_seq":${diag.map(d => f"${d._1}%.3f")
-          .mkString("[", ",", "]")}""" +
-        // One-decimal MB, not integer division (ADVICE r9): a slow
-        // monotone leak below ~1 MB/run — the exact class these
-        // counters exist to expose — must not truncate to [0,0,0,0,0].
-        s""","blocks":${arr(_._2)},"storage_mb":${
-          arr(d => f"${d._3 / 1048576.0}%.1f")},"disk_files":${arr(_._4)
-        },"disk_mb":${arr(d => f"${d._5 / 1048576.0}%.1f")},"live_broadcasts":${
-          arr(_._6)}""" +
-        // Per-run load covariates (VERDICT r10 #1): cpu_wall is the
-        // cpu-seconds/wall-seconds ratio of THAT run, loadavg the
-        // 1-minute load read right after it. Read rule (PLANS.md):
-        // a wall spike with flat cpu_wall and elevated loadavg is host
-        // co-tenancy; a spike with cpu_wall and counters up is ours.
-        s""","cpu_wall_seq":${arr(d => f"${d._7}%.2f")},"loadavg_seq":${
-          arr(d => f"${d._8}%.2f")}}""")
-    })
-    val ctlWin = ctlWindows.map { case (afterQ, walls, hf, la) =>
-      val ws = walls.map { case (k, w) => "\"" + k + f"""\":$w%.3f""" }
-        .mkString(",")
-      f"""{"after_query":$afterQ,$ws,"host_factor":$hf%.2f,"loadavg":$la%.2f}"""
-    }.mkString("[", ",", "]")
-    val total = results.map { case (_, v, _, _, _, _) => v }.sum
-    val totalNorm = total / hostFactor
-    val fullLine =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","host_factor":$hostFactor%.2f,"total_ctl_normalized":$totalNorm%.3f,"total_windowed_normalized":$totalWindowedNorm%.3f,"control_windows":$ctlWin,"queries":$qs,"sf":"$sfDir","loadavg_start":$loadStart%.2f,"loadavg_end":$loadEnd%.2f,"load_wait_sec":$loadWaitSec,"controls":$ctl,"stability":$stab,"cpu_wall":$cw,"gc_wall":$gw,"jit_sec":$jt,"runs":$runs}"""
-
-    // The full record ALSO goes to a file in the repo root (r5 lesson:
-    // stdout tail-capture truncated it two rounds running); outPath is
-    // computed before the timed pass, next to the reference-wall scan.
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
-      fullLine + "\n")
-    catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] could not write $outPath: $e") }
-
-    // Capture-order-proof summary (round-4 lesson: the driver's bounded
-    // tail-capture kept only the END of the full line, publishing
-    // `"parsed": null`; VERDICT r11 observation #1: all eleven driver
-    // artifacts have parsed=null, so the capture may equally be a HEAD
-    // window). This line is SHORT — total, slowest 10, controls,
-    // windowed factors, stability verdict, load context — so any bounded
-    // window holds one complete JSON object, and it is printed BOTH
-    // before and after the full line (identical content, so any
-    // first-parse or last-parse driver reads the same record).
-    val slow10 = jmap(results.sortBy(-_._2).take(10)
-      .map { case (k, v, _, _, _, _) => k -> f"$v%.3f" })
-    val maxGc = results.map(_._4).foldLeft(0.0)(math.max)
-    val ctlShort = jmap(controlRes.map { case (k, w, _, _, _, _) =>
-      k -> f"$w%.3f" })
-    val stabShort = jmap(stability.map { case (k, mn, _, mx, _, _) =>
-      k -> f"${if (mn > 0) mx / mn else -1.0}%.2f" })
-    val hfWin = ctlWindows.map(w => f"${w._3}%.2f").mkString("[", ",", "]")
-    val summaryLine =
-      f"""{"metric":"summary","value":$total%.3f,"unit":"sec","host_factor":$hostFactor%.2f,"total_ctl_normalized":$totalNorm%.3f,"total_windowed_normalized":$totalWindowedNorm%.3f,"host_factor_windows":$hfWin,"n_queries":${results.size},"slowest":$slow10,"controls":$ctlShort,"stability_maxmin":$stabShort,"sf":"$sfDir","loadavg_start":$loadStart%.2f,"loadavg_end":$loadEnd%.2f,"load_wait_sec":$loadWaitSec,"max_gc_wall":$maxGc%.2f,"artifact":"$outPath"}"""
-    println(summaryLine)
-    println(fullLine)
-    println(summaryLine)
+    println(line(sfDir, walls))
     spark.stop()
+    if (walls.exists(_._2 < 0)) sys.exit(1)
+  }
+
+  /** The bench's one stdout line. `walls` holds each query's best wall in
+    * seconds, or -1 for a query that failed every run. `value` sums only
+    * the successful walls and `failed` counts the rest, so a broken query
+    * never reads as a faster total. Walls are rounded to the millisecond
+    * before they are summed, so `value` is exactly the sum of the printed
+    * successful walls.
+    */
+  def line(sf: String, walls: Seq[(String, Double)]): String = {
+    def str(s: String): String =
+      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    def ms(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
+    val ok = walls.map(_._2).filter(_ >= 0)
+    val queries = walls.map { case (k, v) => s"${str(k)}:${ms(v)}" }.mkString("{", ",", "}")
+    s"""{"metric":"total","value":${ok.map(ms).foldLeft(ms(0))(_ + _)},"unit":"sec","sf":${str(sf)},""" +
+      s""""n_queries":${walls.size},"failed":${walls.size - ok.size},"queries":$queries}"""
   }
 }

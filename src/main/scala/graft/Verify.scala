@@ -13,9 +13,10 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // 123-query catalog vs the default 100-entry codegen class cache:
+      // 281-query catalog vs the default 100-entry codegen class cache:
       // without this every re-referenced plan regenerates + re-JITs its
-      // stages as fresh classes (see Bench.scala for the full story).
+      // stages as fresh classes in fresh classloaders, so HotSpot
+      // recompiles them from scratch and the code cache fills with dead code.
       .config("spark.sql.codegen.cache.maxEntries", "4000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

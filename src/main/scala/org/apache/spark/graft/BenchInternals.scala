@@ -3,41 +3,19 @@ package org.apache.spark.graft
 import org.apache.spark.SparkEnv
 import org.apache.spark.storage.BroadcastBlockId
 
-/** Bench-harness-only escape hatch into Spark's `private[spark]`
-  * block-manager surface (hence the package): the r8 driver artifact
-  * caught q129 climbing 3.4 s -> 50 s MONOTONE over five same-JVM
-  * re-runs WITH blocking RDD unpersist already in place (VERDICT r8
-  * #2). The un-handled state class is broadcast blocks: every
-  * `broadcast()` hint materializes a TorrentBroadcast whose cleanup is
-  * weak-reference/GC-driven and can lag arbitrarily behind a
-  * back-to-back re-run loop, and accumulated broadcast blocks occupy
-  * unified STORAGE memory, squeezing execution memory into spills on
-  * later runs. `Bench.clearState` therefore destroys them explicitly
-  * between runs, and the stability probe records the counters below in
-  * the artifact so any remaining growth is measured, not guessed.
-  *
-  * NOT part of the engine: no operator depends on this; a real cluster
-  * relies on the ContextCleaner exactly as Spark intends. This is
-  * measurement hygiene for a single-JVM benchmark loop.
+/** Reaches Spark's `private[spark]` block manager (hence the package) for
+  * single-JVM measurement loops. Every `broadcast()` hint leaves a
+  * TorrentBroadcast whose cleanup is driven by GC and can lag behind
+  * back-to-back runs; its blocks sit in unified storage memory and push
+  * later runs' execution memory into spills. No operator depends on this.
   */
 object BenchInternals {
 
-  private def master = SparkEnv.get.blockManager.master
-
-  /** Distinct broadcast ids with at least one live block anywhere. */
-  def broadcastIds(): Seq[Long] =
-    master.getMatchingBlockIds(_.isBroadcast, askStorageEndpoints = true)
-      .collect { case BroadcastBlockId(id, _) => id }.distinct.sorted
-
   /** Drop every live broadcast's blocks (driver + executors), blocking
-    * until removal completes. Safe between bench runs ONLY because each
-    * run builds fresh DataFrames — and that invariant is now ENFORCED,
-    * not assumed (ADVICE r9): if any persistent RDD survives the
-    * caller's unpersist pass, a cached plan could still re-read a
-    * broadcast we are about to destroy, so fail loudly with the
-    * offending RDD ids instead of letting a later run die with an
-    * opaque broadcast-block-not-found. The removed ids are returned so
-    * the caller can log them.
+    * until removal completes, and return the removed ids. Safe only
+    * between runs that build fresh DataFrames: a persistent RDD that is
+    * still live could re-read a destroyed broadcast, so one fails here
+    * with its id rather than later with broadcast-block-not-found.
     */
   def removeAllBroadcasts(): Seq[Long] = {
     val persistent =
@@ -47,24 +25,11 @@ object BenchInternals {
       s"removeAllBroadcasts() with persistent RDDs still live " +
         s"(ids ${persistent.sorted.mkString(",")}): a cached plan may " +
         "re-read a destroyed broadcast — unpersist first")
-    val ids = broadcastIds()
+    val master = SparkEnv.get.blockManager.master
+    val ids = master.getMatchingBlockIds(_.isBroadcast, askStorageEndpoints = true)
+      .collect { case BroadcastBlockId(id, _) => id }.distinct.sorted
     ids.foreach(id =>
       master.removeBroadcast(id, removeFromMaster = true, blocking = true))
     ids
-  }
-
-  /** Point-in-time state counters for the stability artifact:
-    * (live blocks, storage bytes used, local disk files, disk bytes).
-    * Disk files count the blockmgr dirs — shuffle data/index files
-    * dominate there, so unreclaimed shuffles show up as file growth.
-    */
-  def storageCounters(): (Int, Long, Int, Long) = {
-    val bm = SparkEnv.get.blockManager
-    val usedMem = master.getMemoryStatus.values
-      .map { case (max, remaining) => max - remaining }.sum
-    val nBlocks =
-      master.getMatchingBlockIds(_ => true, askStorageEndpoints = true).size
-    val files = bm.diskBlockManager.getAllFiles()
-    (nBlocks, usedMem, files.size, files.map(_.length).sum)
   }
 }

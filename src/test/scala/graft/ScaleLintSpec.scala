@@ -65,6 +65,25 @@ class ScaleLintSpec extends SparkSpec {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("main code reads exactly the listed session options and environment knobs") {
+    // Adding a knob is a decision: it edits this list.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(root), s"no source directory at ${root.toAbsolutePath}")
+    val text = {
+      val files = java.nio.file.Files.walk(root)
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+        .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).mkString("\n")
+      finally files.close()
+    }
+    def found(re: String) = re.r.findAllMatchIn(text).map(_.group(1)).toSet
+    assert(found("\"(graft\\.[a-z0-9_.]+)\"") == Set(
+      "graft.broadcast_graph_frames", "graft.dump_round_plans", "graft.etl.replication",
+      "graft.kmeans.k", "graft.shingle_df_cap", "graft.tiles"))
+    assert(found("(SPARK_GRAFT_[A-Z_]+)") ==
+      Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_ONLY"))
+  }
+
   test("no window partitions a corpus-scale frame by a constant-cardinality key") {
     val bounded = ScaleLint.boundedDomainCols(spark)
     assert(optimizedPlans.size == CatalogContract.expectedSize,
