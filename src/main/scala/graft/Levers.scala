@@ -34,7 +34,7 @@ object Levers {
     }.getOrElse(default)
 
   /** Positive-long variant for row-count-scaled knobs
-    * (graft.shingle_df_cap). `default` None = the knob is optional.
+    * (graft.shingle_df_cap): None when the key is unset.
     */
   private[graft] def posLongOpt(s: SparkSession,
                                 key: String): Option[Long] =

@@ -11,15 +11,16 @@ import graft.schema.{BankSchema, Thresholds}
   * The reference multiplexes each stage into a main output and a tagged
   * `error_records` side output (bp.py:148-156, 207-215, 245-253, 284-291).
   * Rebuilt Spark-first: stages are narrow `DataFrame => DataFrame`
-  * transforms over ONE staged frame carrying nullable `_error_type` /
-  * `_error_message` columns; every derivation is guarded by "no error yet",
-  * mirroring the reference's exception short-circuit. The frame is split
-  * into (processed, errors) exactly once at the end, so the whole pipeline
-  * stays a single whole-stage-codegen'd stage with zero shuffles.
+  * transforms over ONE staged frame carrying a nullable `_error_type`
+  * column; every derivation is guarded by "no error yet", mirroring the
+  * reference's exception short-circuit. The frame is split into
+  * (processed, errors) exactly once at the end, so the whole pipeline
+  * stays a single whole-stage-codegen'd stage with zero shuffles. An
+  * error row's message is not staged: [[Stage.errorMessage]] derives it
+  * on error rows only.
   */
 object Stage {
   val ErrType = "_error_type"
-  val ErrMsg = "_error_message"
   val Raw = "_raw"
   /** No error recorded by any stage so far. */
   def ok: Column = col(ErrType).isNull
@@ -31,10 +32,10 @@ object Stage {
   /** Compute `value` only for not-yet-errored rows (exception short-circuit). */
   def guarded(value: Column): Column = when(ok, value)
 
-  /** An error row's message, re-derived by the stage that raised it from
-    * the row's `_raw` line and typed fields. Equal to `_error_message` on
-    * every error row, so a consumer that needs the message only for error
-    * rows can drop `_error_message` from the shared per-row work.
+  /** An error row's message, derived from what the stage that raised it
+    * read: a parsing_error row's `_raw` line, a data_validation row's age.
+    * Both sinks and every error query read this one rule, on error rows
+    * only, so the shared per-row work carries no message.
     */
   def errorMessage: Column =
     when(col(ErrType) === "parsing_error", Parse.message(col(Raw)))
@@ -43,7 +44,9 @@ object Stage {
 
 /** Stage 1 — `ParseCSVFn` (bp.py:109-156): semicolon CSV with RFC-4180
   * quoting, arity=17 check, positional typed coercion, required-field
-  * check, ingestion stamp, parse-error channel.
+  * check, ingestion stamp, parse-error channel. The staged frame keeps the
+  * line as `_raw` and the parse's `_error_type`; the message is
+  * [[Parse.message]] of `_raw`, read on parsing_error rows only.
   *
   * Coercion-failure semantics: Python `int()`/`float()` raise -> error
   * record. Here `try_cast` yields NULL and the NULL (with a non-null raw
@@ -74,8 +77,7 @@ object Parse {
         BankSchema.inputColumns.map(c => col(s"_p.$c").as(c)) ++
         Seq(
           RunStamps.runTimestamp().as("_ingestion_timestamp"),
-          col("_p._error_type").as(Stage.ErrType),
-          col("_p._error_message").as(Stage.ErrMsg)): _*)
+          col("_p._error_type").as(Stage.ErrType)): _*)
   }
 
   /** The parsing_error message of a line: what parsing it again reports. */
@@ -83,16 +85,15 @@ object Parse {
     graft.functions.ParseBankLine.parseBankLine(line).getField("_error_message")
 
   /** Adapter for already-typed rows (e.g. testdata-hosted frames): attach
-    * the raw/error channel so the downstream stages apply unchanged.
+    * the raw/error channel so the downstream stages apply unchanged. A
+    * typed row was never a line and cannot fail to parse, so `_raw` and
+    * `_error_type` start null.
     */
-  def fromTyped(df: DataFrame): DataFrame = {
-    val raw = to_json(struct(df.columns.map(col): _*))
+  def fromTyped(df: DataFrame): DataFrame =
     df.select(
-      Seq(raw.as(Stage.Raw)) ++ df.columns.map(col) ++ Seq(
+      Seq(lit(null).cast(StringType).as(Stage.Raw)) ++ df.columns.map(col) ++ Seq(
         RunStamps.runTimestamp().as("_ingestion_timestamp"),
-        lit(null).cast(StringType).as(Stage.ErrType),
-        lit(null).cast(StringType).as(Stage.ErrMsg)): _*)
-  }
+        lit(null).cast(StringType).as(Stage.ErrType)): _*)
 }
 
 /** Stage 2 — `ValidateAndEnrichFn` (bp.py:158-215): inclusive age-range
@@ -101,14 +102,11 @@ object Parse {
 object ValidateEnrich {
   def apply(staged: DataFrame,
             minAge: Int = Thresholds.MinValidAge,
-            maxAge: Int = Thresholds.MaxValidAge): DataFrame = {
-    val ageBad = !col("age").between(minAge, maxAge)
-    val valErr = when(Stage.ok && ageBad, message(col("age")))
+            maxAge: Int = Thresholds.MaxValidAge): DataFrame =
     staged
-      .withColumn(Stage.ErrMsg, coalesce(col(Stage.ErrMsg), valErr))
       .withColumn(Stage.ErrType,
         coalesce(col(Stage.ErrType),
-          when(valErr.isNotNull, lit("data_validation"))))
+          when(!col("age").between(minAge, maxAge), lit("data_validation"))))
       .withColumn("age_group", Stage.guarded(BankExprs.ageGroup(col("age"))))
       .withColumn("wealth_segment",
         Stage.guarded(BankExprs.wealthSegment(col("balance"))))
@@ -119,7 +117,6 @@ object ValidateEnrich {
       .withColumn("engagement_score",
         Stage.guarded(BankExprs.engagementScore(
           col("previous"), col("campaign"), col("duration"), col("y"))))
-  }
 
   /** The data_validation message for an out-of-range age. */
   def message(age: Column): Column =

@@ -1,12 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Tokenize one semicolon-CSV line into its raw fields, reproducing
@@ -17,44 +11,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *    which `;` is literal and `""` is an escaped quote;
   *  - a quote later in an unquoted field is a literal character;
   *  - empty tokens stay "" (not NULL);
-  *  - the token COUNT is exact, so the arity check matches csv.reader
-  *    (the previous regexp-based separator count was an approximation).
+  *  - the token COUNT is exact, so the arity check matches csv.reader.
   *
-  * Compared to from_csv/univocity this is ~4x less per-row overhead (no
-  * parser object, no malformed-record machinery, no schema) and it
-  * returns ARRAY<STRING> so positional extraction is a plain array index.
-  * The heavy lifting lives in [[CsvTokenize.tokenize]] and the generated
-  * code is a single static call — no interpreted expression fallback.
+  * [[ParseBankLine]] calls it once per line; positional extraction is a
+  * plain array index.
   */
-case class CsvTokenize(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_csv_tokenize needs STRING input, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override protected def nullSafeEval(line: Any): Any =
-    CsvTokenize.tokenize(line.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CsvTokenize.tokenize($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): CsvTokenize =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_csv_tokenize"
-}
-
 object CsvTokenize {
   private val Sep = ';'
   private val Quote = '"'
 
-  /** Static entry point shared by interpreted eval and generated code.
-    * Byte-level scan (';' and '"' are ASCII, so UTF-8 continuation bytes
+  /** Byte-level scan (';' and '"' are ASCII, so UTF-8 continuation bytes
     * can never alias them): unquoted fields — the overwhelmingly common
     * case — become zero-copy-ish byte slices; only fields containing a
     * quote take the buffer-building slow path.
@@ -89,8 +55,4 @@ object CsvTokenize {
     }
     new GenericArrayData(fields.toArray)
   }
-
-  /** Column API. */
-  def csvTokenize(line: Column): Column =
-    Bridge.column(CsvTokenize(Bridge.expression(line)))
 }

@@ -60,7 +60,7 @@ object RefQueries {
           tail = when(col("id") % 7 === 0, ";extra").otherwise(""))
         Parse(lines, "line", keep = Seq("id"))
           .select(col("id"), col(Stage.ErrType).as("error_type"),
-            col(Stage.ErrMsg).as("error_message"))
+            Stage.errorMessage.as("error_message"))
           .orderBy("id")
       },
       Some(bankCte +
@@ -79,7 +79,7 @@ object RefQueries {
         Parse(lines, "line", keep = Seq("id"))
           .select(col("id"), col("age"),
             col(Stage.ErrType).as("error_type"),
-            col(Stage.ErrMsg).as("error_message"))
+            Stage.errorMessage.as("error_message"))
           .orderBy("id")
       },
       Some(bankCte +
@@ -223,11 +223,12 @@ object RefQueries {
         // onto an unbounded result).
         res.errors.persist()
         try {
-          BankingPipeline.unionErrors(
-            Seq(res.errorStreamsByStage("parsing_error"),
-              res.errorStreamsByStage("data_validation"),
-              res.errorStreamsByStage("segmentation_error"),
-              res.errorStreamsByStage("preparation_error")))
+          // The reference's per-stage tagged outputs, flattened as a bag
+          // union (bp.py:368-372).
+          Seq("parsing_error", "data_validation", "segmentation_error",
+            "preparation_error")
+            .map(t => res.errors.where(col("error_type") === t))
+            .reduce(_.unionByName(_))
             .groupBy("error_type").agg(count(lit(1)).as("n"))
             .localCheckpoint(eager = true)
             .orderBy("error_type")

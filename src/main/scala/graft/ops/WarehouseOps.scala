@@ -187,18 +187,16 @@ object WarehouseOps {
       .select("u", "v")
   }
 
-  /** q234's A-priori candidate pipeline, shared with GrowthCurves so
-    * the measured structural count is EXACTLY the frame the query
-    * runs. Returns (li, triples): `li` is the checkpointed distinct
-    * basket frame (the caller derives n_orders from it — one read, one
-    * checkpoint), `triples` the fully-pruned (p1, p2, p3) candidate
-    * rows (one per order) BEFORE the support-cut aggregate. The
-    * (p1, p2) frequent-pair semi-join gates the third basket join —
-    * textbook A-priori placement; see the q234 comment below for the
-    * ProbeQ234Prune measurement that makes the placement load-bearing
-    * (PLANS.md, probe code at commit 9916828).
+  /** q234's A-priori candidate pipeline. Returns (li, triples): `li` is
+    * the checkpointed distinct basket frame (the caller derives n_orders
+    * from it — one read, one checkpoint), `triples` the fully-pruned
+    * (p1, p2, p3) candidate rows (one per order) BEFORE the support-cut
+    * aggregate. The (p1, p2) frequent-pair semi-join gates the third
+    * basket join — textbook A-priori placement; see the q234 comment
+    * below for the ProbeQ234Prune measurement that makes the placement
+    * load-bearing (PLANS.md, probe code at commit 9916828).
     */
-  private[graft] def aprioriTripleParts(s: SparkSession,
+  private def aprioriTripleParts(s: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     val li = table(s, dir, "lineitem")
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))

@@ -10,17 +10,7 @@ import graft.schema.{BankSchema, Thresholds}
 /** Processed + error outputs of a staged run (the reference's main output
   * and flattened `error_records` stream, bp.py:341-383).
   */
-final case class EtlResult(processed: DataFrame, errors: DataFrame) {
-  /** The reference's 4-way error Flatten (U1, bp.py:368-372) keyed by
-    * stage: here the single pass already unifies them; this re-splits by
-    * `error_type` and re-unions — exposed so callers can address
-    * per-stage error streams like the reference's tagged outputs.
-    */
-  def errorStreamsByStage: Map[String, DataFrame] =
-    Seq("parsing_error", "data_validation", "segmentation_error",
-      "preparation_error")
-      .map(t => t -> errors.where(col("error_type") === t)).toMap
-}
+final case class EtlResult(processed: DataFrame, errors: DataFrame)
 
 /** What one [[BankingPipeline.writeSinks]] job read and wrote: the lines
   * its text scan read, the header lines among them, and the rows each
@@ -126,21 +116,21 @@ object BankingPipeline {
     val processed = staged.where(Stage.ok)
       .select((keep ++ BankSchema.outputColumns).map(col): _*)
     val errors = staged.where(!Stage.ok)
-      .select(keep.map(col) ++ errorRecord(col(Stage.ErrMsg)): _*)
+      .select(keep.map(col) ++ errorRecord: _*)
     EtlResult(processed, errors)
   }
 
   /** An error row as the error sink stores it (ERROR_RECORDS_SCHEMA,
-    * bp.py:80-85), given the row's message.
+    * bp.py:80-85), its message by [[Stage.errorMessage]].
     */
-  def errorRecord(message: Column): Seq[Column] = Seq(
+  def errorRecord: Seq[Column] = Seq(
     // Parse errors carry the raw line (bp.py:151); later stages carry the
     // record rendered as JSON (documented divergence from Python dict-repr,
     // SURVEY.md §2.3 V3).
     when(col(Stage.ErrType) === "parsing_error", col(Stage.Raw))
       .otherwise(to_json(struct(BankSchema.inputColumns.map(col): _*)))
       .as("raw_data"),
-    message.as("error_message"),
+    Stage.errorMessage.as("error_message"),
     col(Stage.ErrType).as("error_type"),
     Stage.runInstant.as("timestamp"))
 
@@ -165,14 +155,10 @@ object BankingPipeline {
     val rows = sinkRows(staged)
     val (processed, errors) = DualSinkWrite(rows, Stage.ErrType,
       main = Sink(outputTable, BankSchema.outputColumns.map(col), "customer_segment"),
-      side = Sink(errorTable, errorRecord(Stage.errorMessage), "error_type"))
+      side = Sink(errorTable, errorRecord, "error_type"))
     val (linesRead, headersDropped) = lineCounts(rows.queryExecution.executedPlan)
     EtlCounts(linesRead, headersDropped, processed, errors)
   }
-
-  /** U1 union-all of error streams (bag semantics, bp.py:368-372). */
-  def unionErrors(streams: Seq[DataFrame]): DataFrame =
-    streams.reduce(_.unionByName(_))
 
   /** K1/K2 text sinks: the reference writes `str(dict)` lines with a
     * `.json` suffix (bp.py:375-383); we emit real JSON (documented

@@ -97,12 +97,20 @@ class PlanSpec extends SparkSpec {
   }
 
   test("parse stage parses each line exactly once (fused custom expression)") {
-    val df = graft.etl.Parse(
+    // The one-scan write's rows and the processed split share the parse;
+    // only error-row branches parse again, for the message.
+    import graft.pipeline.BankingPipeline
+    val parsed = graft.etl.Parse(
       TestData.bankFrame(spark, sf).selectExpr("cast(id as string) as value"))
-    val optimized = df.queryExecution.optimizedPlan.toString
-    assert("graft_parse_bank_line".r.findAllIn(optimized).size == 1,
-      s"parse duplicated:\n$optimized")
-    assert(!optimized.contains("from_csv"))
+    val staged = BankingPipeline.stagesAfterParse(parsed,
+      graft.schema.Thresholds.MinValidAge, graft.schema.Thresholds.MaxValidAge)
+    Seq("parse" -> parsed, "one scan" -> BankingPipeline.sinkRows(staged),
+      "processed" -> BankingPipeline.split(staged).processed).foreach { case (name, df) =>
+      val optimized = df.queryExecution.optimizedPlan.toString
+      assert("graft_parse_bank_line".r.findAllIn(optimized).size == 1,
+        s"$name: parse duplicated:\n$optimized")
+      assert(!optimized.contains("from_csv"), name)
+    }
   }
 
   test("top-k queries run on TopKPerGroup, not a full-shuffle window") {
