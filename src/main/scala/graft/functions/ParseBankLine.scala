@@ -59,7 +59,6 @@ object ParseBankLine {
   private val N = Thresholds.NumCsvColumns
   // positions: 0 age(int) 5 balance(double) 9 day 11 duration 12 campaign
   // 13 pdays 14 previous (ints); rest lower/trim strings
-  private val IntPos = Array(0, 9, 11, 12, 13, 14)
   private val ParsingError = UTF8String.fromString("parsing_error")
 
   private def err(row: GenericInternalRow, msg: String): InternalRow = {

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import TestData._
 
@@ -106,16 +106,14 @@ object DedupOps {
   private[graft] def exactCollapse(fp: DataFrame, repCol: String): DataFrame =
     fp.groupBy("fp1", "fp2").agg(min("doc_id").as(repCol))
 
-  /** Tile count for the exact O(N^2) pair join: each vector fans into
+  /** Tile count for q27's exact O(N^2) pair join: each vector fans into
     * O(B) tile keys and each task compares one (N/B) x (N/B) tile, so B
-    * is the knob that spreads the quadratic FLOPs over B(B+1)/2 tasks.
-    * Config-derived (`graft.tiles`), defaulting to 8 for local[32]; a
-    * 1000-executor deployment raises it so tiles stay cache-sized. Any
+    * spreads the quadratic FLOPs over B(B+1)/2 tasks. 8 suits local[32];
+    * a 1000-executor deployment raises it so tiles stay cache-sized. Any
     * B >= 1 yields the identical pair set (ScaleParamSpec pins B in
     * {1, 3, 5, 8}).
     */
-  private[graft] def tileCount(s: SparkSession): Int =
-    graft.Levers.posInt(s, "graft.tiles", 8)
+  private val TileCount = 8
 
   /** Exact cosine near-dup pairs above `threshold` via a TILED
     * self-join: block g = vec_id mod B; side A owns tiles (g, j) for
@@ -168,51 +166,10 @@ object DedupOps {
     // per-doc arrays/counts downstream (q139/q151/q196/LSH rescore).
     jaccardPairsFromHashed(hashedShingles(docs).localCheckpoint(eager = true))
 
-  /** Optional document-frequency cap on shingles admitted to the exact
-    * pair join (`graft.shingle_df_cap`, unset by default). The blocked
-    * self-join's cost is Sum_shingles df^2, so ONE boilerplate shingle
-    * (license header, navigation chrome) appearing in 1% of a 10B-doc
-    * corpus contributes 10^14 candidate rows from a single key — AQE
-    * skew-split redistributes that work but cannot shrink it. Capping
-    * df is the standard production defuse: shingles above the cap are
-    * dropped from the shingle UNIVERSE (join AND counts — Jaccard is
-    * then computed over the capped universe), which changes a pair's
-    * similarity only when it rides ubiquitous shingles.
-    * PairSourceSpec pins keep-list equality on a hub-free corpus.
-    *
-    * SCOPE: the cap applies to EVERY consumer of the exact pair join —
-    * q24/q64 (via jaccardPairs) as well as q85/q96/q110 — because they
-    * are all the same source; a session setting it steps outside the
-    * hash gate for all of them (their registered oracles pin the
-    * uncapped universe), exactly like `graft.kmeans.k` or
-    * `graft.etl.replication` overrides.
-    */
-  private[graft] def shingleDfCap(s: SparkSession): Option[Long] =
-    graft.Levers.posLongOpt(s, "graft.shingle_df_cap")
-
-  /** Drop shingles whose document frequency exceeds `cap`. The hub set
-    * is tiny by construction (df > cap), so it broadcasts into an
-    * anti-join; the count of dropped shingle keys is computed from the
-    * eagerly-materialized hub frame (one small job) and logged.
-    */
-  private[graft] def capHubShingles(sh: DataFrame, cap: Long): DataFrame = {
-    require(cap >= 1, s"shingle df cap must be >= 1, got $cap")
-    val hubs = sh.groupBy("s").agg(count(lit(1)).as("df"))
-      .where(col("df") > cap).select("s")
-      .localCheckpoint(eager = true)
-    val nHubs = hubs.count()
-    org.slf4j.LoggerFactory.getLogger(getClass)
-      .info(s"shingle_df_cap=$cap dropped $nHubs hub shingle(s) from the exact pair join")
-    sh.join(broadcast(hubs), Seq("s"), "left_anti")
-  }
-
   /** Pair generation over an already-materialized hashed-shingle frame
     * (callers that reuse the frame checkpoint it once themselves).
-    * Honors `graft.shingle_df_cap` when set.
     */
-  private[graft] def jaccardPairsFromHashed(sh0: DataFrame): DataFrame = {
-    val sh = shingleDfCap(sh0.sparkSession)
-      .map(capHubShingles(sh0, _)).getOrElse(sh0)
+  private[graft] def jaccardPairsFromHashed(sh: DataFrame): DataFrame = {
     val cnt = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     // REPARTITION_BY_NUM on the join key before the self-join (r15):
     // the join's INPUT is a few MB of fixed-width longs, so AQE's
@@ -537,8 +494,8 @@ object DedupOps {
 
   /** (d1, d2) pairs with (exact) jaccard >= threshold, produced by
     * `source`: "exact" = the blocked shingle self-join — every true
-    * pair, cost Sum df^2 (optionally `graft.shingle_df_cap`); "lsh" =
-    * q25's minhash band buckets + exact rescore — cost ∝ candidates,
+    * pair, cost Sum df^2; "lsh" = q25's minhash band buckets + exact
+    * rescore — cost ∝ candidates,
     * recall ~0.90 at threshold 0.5, hub-shingle-proof. `shOpt` lets callers share an already-checkpointed
     * hashed-shingle frame (the exact source's grain; the LSH source
     * builds its own array frame — ProbeArrayGrain2 in PLANS.md, code at
@@ -854,8 +811,8 @@ object DedupOps {
     // pairwise similarity does not imply mutual similarity, so the
     // operator closes triangles over the similarity-pair graph. Plan
     // shape: the pair list comes from the shared-shingle equi-join
-    // (same bucketed generation as q24, df-cappable the same way) and
-    // the 3-way closure joins the thresholded EDGE LIST against itself
+    // (same bucketed generation as q24) and the 3-way closure joins the
+    // thresholded EDGE LIST against itself
     // twice — answer-proportional work over the sparse post-threshold
     // graph, never a doc-grain 3-way join (which would be O(N^3) at
     // the corpus grain). Integer intersection counts only — exact
@@ -1338,7 +1295,7 @@ object DedupOps {
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
           .select(col("vec_id"), col("v"),
             graft.functions.VectorFunctions.l2norm(col("v")).as("nrm"))
-        tiledNearDupPairs(n, tileCount(s), 0.3).orderBy("v1", "v2")
+        tiledNearDupPairs(n, TileCount, 0.3).orderBy("v1", "v2")
       },
       Some(
         """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),

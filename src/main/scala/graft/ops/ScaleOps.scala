@@ -29,20 +29,12 @@ object ScaleOps {
   private val dotSql =
     "list_reduce(list_transform(list_zip(%s, %s), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (x, y) -> x + y)"
 
-  /** Replication factor for the throughput query: sf0.01's 1,500
-    * customers x 700 = 1.05M records — the reference's published
-    * benchmark row count (README.md:133: 1M records in 252s).
-    * Config-derived (`graft.etl.replication`) like `graft.tiles` and
-    * `graft.kmeans.k`, defaulting to 700 to keep the published shape;
-    * the registered oracle pins the DEFAULT — a session overriding the
-    * factor steps outside the hash gate, and ScaleParamSpec pins the
-    * exact linear-scaling invariant (counts and decimal-exact sums
-    * scale by rep) at non-default values instead.
+  /** Replication factor for the throughput queries q41/q42: sf0.01's
+    * 1,500 customers x 700 = 1.05M records — the reference's published
+    * benchmark row count (README.md:133: 1M records in 252s). The
+    * registered oracles replicate by the same factor.
     */
-  private val DefaultEtlReplication = 700
-
-  private[graft] def etlReplication(s: org.apache.spark.sql.SparkSession): Int =
-    graft.Levers.posInt(s, "graft.etl.replication", DefaultEtlReplication)
+  private val EtlReplication = 700
 
   def all: Map[String, Q] = Map(
 
@@ -57,7 +49,7 @@ object ScaleOps {
         // the cross join and the tiny bank frame is broadcast, so the
         // replicated rows are born spread across all cores (a real
         // multi-split file read would look the same).
-        val replicated = s.range(0, etlReplication(s), 1, 32)
+        val replicated = s.range(0, EtlReplication, 1, 32)
           .select(col("id").as("rep"))
           .crossJoin(broadcast(bank))
           .drop("id", "rep")
@@ -70,7 +62,7 @@ object ScaleOps {
           .orderBy("customer_segment", "wealth_segment")
       },
       Some(TestData.bankCte +
-        s""", rep AS (SELECT bank.* FROM bank, generate_series(1, $DefaultEtlReplication)),
+        s""", rep AS (SELECT bank.* FROM bank, generate_series(1, $EtlReplication)),
            | v AS (SELECT * FROM rep WHERE age BETWEEN 18 AND 100),
            | scored AS (SELECT v.*, ${TestData.recencySql("pdays")} AS r,
            |   ${TestData.frequencySql("previous")} AS f,
@@ -98,7 +90,7 @@ object ScaleOps {
           col("duration").cast("string"), col("campaign").cast("string"),
           col("pdays").cast("string"), col("previous").cast("string"),
           col("poutcome"), col("y"))
-        val lines = s.range(0, etlReplication(s), 1, 32)
+        val lines = s.range(0, EtlReplication, 1, 32)
           .select(col("id").as("rep"))
           .crossJoin(broadcast(bank.select(line.as("value"))))
           .drop("rep")
@@ -111,7 +103,7 @@ object ScaleOps {
           .orderBy("customer_segment", "wealth_segment")
       },
       Some(TestData.bankCte +
-        s""", rep AS (SELECT bank.* FROM bank, generate_series(1, $DefaultEtlReplication)),
+        s""", rep AS (SELECT bank.* FROM bank, generate_series(1, $EtlReplication)),
            | v AS (SELECT * FROM rep WHERE age BETWEEN 18 AND 100),
            | scored AS (SELECT v.*, ${TestData.recencySql("pdays")} AS r,
            |   ${TestData.frequencySql("previous")} AS f,

@@ -10,8 +10,7 @@ import TestData._
   * random-projection embedding reduction, PII redaction, hard-negative
   * mining, rare-bigram scoring, incremental batch dedup, the composed
   * curation pipeline, deterministic training shuffle, leak-safe splits,
-  * sliding-window segmentation, the corpus report, and the
-  * split-partitioned bucketed training-set sink.
+  * sliding-window segmentation and the corpus report.
   *
   * Scale notes (100 TB posture):
   *  - chunk dedup shuffles fixed-width 60-bit chunk hashes, never chunk
@@ -340,13 +339,12 @@ object TrainDataOps {
     table(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
 
-  /** Default k for the catalog's q101/q102 entries. At 100 TB, k must
-    * grow with the corpus (SemDeDup cell cost is O(N^2/k)); readable
-    * from config so a deployment sets it per-cluster without a code
-    * change — the oracle replays whatever k the session declares.
+  /** k for the catalog's k-means entries (q101, q102 and the IVF
+    * queries). At 100 TB, k must grow with the corpus (SemDeDup cell
+    * cost is O(N^2/k)); the oracle CTEs replay the same k, and
+    * ScaleParamSpec pins the cell invariants at other k.
     */
-  private[graft] def kmeansK(s: SparkSession): Int =
-    graft.Levers.posInt(s, "graft.kmeans.k", 8)
+  private val KmeansK = 8
 
   /** The IVF probe assignment shared by q199, q274 and the hot-cell
     * measurement probe (ProbeQ274Cells: numbers in PLANS.md, probe code
@@ -403,8 +401,7 @@ object TrainDataOps {
     * k-row input instead of re-optimizing the whole accumulated
     * trajectory (sf0.1 best-of-2: 1.89 s -> 1.53 s).
     */
-  private[graft] def kmeansCentroids(points: DataFrame,
-                                     k: Int = 8): DataFrame = {
+  private[graft] def kmeansCentroids(points: DataFrame, k: Int): DataFrame = {
     require(k > 0, s"k-means needs k > 0, got $k")
     val init = kmeansSeeds(points, k).localCheckpoint(eager = true)
     Fixpoint.iterate("kmeans", init, 2) { (c, _) =>
@@ -413,12 +410,9 @@ object TrainDataOps {
   }
 
   /** The q101 trajectory as oracle CTEs (pts, c0, a1/c1, a2/c2, a3) —
-    * shared by the k-means and SemDeDup oracles. The oracle string is
-    * registered once at catalog build, so it pins the DEFAULT k (8);
-    * a session overriding `graft.kmeans.k` steps outside the hash gate
-    * (ScaleParamSpec pins the cell invariants at non-default k).
+    * shared by the k-means and SemDeDup oracles, at [[KmeansK]].
     */
-  private def kmeansCteSqlAt(k: Int): String = {
+  private lazy val kmeansCteSql: String = {
     val dist2 =
       "list_reduce(list_transform(list_zip(p.v, c.c), " +
         "q -> (CAST(q[1] AS DOUBLE) - CAST(q[2] AS DOUBLE)) * " +
@@ -438,35 +432,11 @@ object TrainDataOps {
     s"""pts AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
        | c0r AS (SELECT min(vec_id) AS vec_id, v FROM pts GROUP BY v),
        | c0h AS (SELECT vec_id, v, ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT AS h FROM c0r),
-       | c0s AS (SELECT * FROM c0h ORDER BY h, vec_id LIMIT $k),
+       | c0s AS (SELECT * FROM c0h ORDER BY h, vec_id LIMIT $KmeansK),
        | c0 AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1 AS INT) AS cid, v AS c FROM c0s),
        | ${assign(1, "c0")}, ${update(1)},
        | ${assign(2, "c1")}, ${update(2)},
        | ${assign(3, "c2")}""".stripMargin
-  }
-
-  private lazy val kmeansCteSql: String = kmeansCteSqlAt(8)
-
-  /** The sink side of the curation pipeline: keep-listed docs land
-    * partitioned by split (metadata-level pruning for train/val/test
-    * readers) and bucketed+sorted by doc_id (every later join on doc_id
-    * — embeddings, labels, packed sequences — runs with zero exchanges;
-    * the one bucket shuffle is paid HERE, at write time). Returns the
-    * written row count.
-    */
-  private[graft] def writeTrainingSet(docs: DataFrame, tableName: String,
-                                      path: String, buckets: Int = 16): Long = {
-    val curated = curationPipeline(docs)
-      .where(col("final_keep") === 1).select("doc_id")
-    val out = curated
-      .join(leakSafeSplit(docs).select("doc_id", "split"), "doc_id")
-      .join(docs, "doc_id")
-    out.write.format("parquet")
-      .partitionBy("split")
-      .bucketBy(buckets, "doc_id").sortBy("doc_id")
-      .option("path", path).mode("overwrite")
-      .saveAsTable(tableName)
-    out.sparkSession.table(tableName).count()
   }
 
   def all: Map[String, Q] = Map(
@@ -1064,7 +1034,7 @@ object TrainDataOps {
     "q101_kmeans" -> Q(
       (s, dir) => {
         val points = embPoints(s, dir)
-        kmeansAssign(points, kmeansCentroids(points, kmeansK(s)))
+        kmeansAssign(points, kmeansCentroids(points, KmeansK))
           .select(col("vec_id"), col("cid"), col("dist2"))
           .orderBy("vec_id")
       },
@@ -1085,7 +1055,7 @@ object TrainDataOps {
     "q102_semantic_dedup" -> Q(
       (s, dir) => {
         val points = embPoints(s, dir)
-        val n = kmeansAssign(points, kmeansCentroids(points, kmeansK(s)))
+        val n = kmeansAssign(points, kmeansCentroids(points, KmeansK))
           .select(col("vec_id"), col("cid"), col("v"),
             graft.functions.VectorFunctions.l2norm(col("v")).as("nrm"))
         val cos = SimilarityOps.cosine(
@@ -1234,7 +1204,7 @@ object TrainDataOps {
     "q199_ivf_topk" -> Q(
       (s, dir) => {
         val points = embPoints(s, dir)
-        val cent = kmeansCentroids(points, kmeansK(s))
+        val cent = kmeansCentroids(points, KmeansK)
         val cells = kmeansAssign(points, cent).select("vec_id", "v", "cid")
         val qs = points.where(col("vec_id") % 250 === 0)
           .select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -1308,7 +1278,7 @@ object TrainDataOps {
     "q274_ann_shuffle_rerank" -> Q(
       (s, dir) => {
         val points = embPoints(s, dir)
-        val cent = kmeansCentroids(points, kmeansK(s))
+        val cent = kmeansCentroids(points, KmeansK)
         val cells = kmeansAssign(points, cent).select("vec_id", "v", "cid")
         val qs = points.where(col("vec_id") % 100 === 0)
           .select(col("vec_id").as("qid"), col("v").as("qv"))

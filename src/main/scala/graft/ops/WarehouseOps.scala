@@ -27,10 +27,20 @@ object WarehouseOps {
     * logical plan runs as shuffled hash/semi-joins — AQE can still
     * promote a side to broadcast at runtime if its MEASURED size
     * allows, which is the decision a 1000-executor cluster should be
-    * making, not a hardcoded hint.
+    * making, not a hardcoded hint. The value is exactly true/false in
+    * any case; anything else is an error naming the key, never a silent
+    * fallback to the default.
     */
-  private[graft] def graphBroadcastOn(s: SparkSession): Boolean =
-    graft.Levers.bool(s, "graft.broadcast_graph_frames", default = true)
+  private[graft] def graphBroadcastOn(s: SparkSession): Boolean = {
+    val key = "graft.broadcast_graph_frames"
+    s.conf.getOption(key) match {
+      case None => true
+      case Some(v) if v.equalsIgnoreCase("true") => true
+      case Some(v) if v.equalsIgnoreCase("false") => false
+      case Some(v) => throw new IllegalArgumentException(
+        s"$key must be true/false, got '$v'")
+    }
+  }
 
   private[graft] def graphHint(df: DataFrame): DataFrame =
     if (graphBroadcastOn(df.sparkSession)) broadcast(df) else df

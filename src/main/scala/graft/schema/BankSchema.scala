@@ -60,22 +60,7 @@ object BankSchema {
     StructField("y", StringType)
   )
 
-  val inputSchema: StructType = StructType(inputFields)
   val inputColumns: Seq[String] = inputFields.map(_.name)
-
-  /** Which input positions are numeric and how they coerce (bp.py:121-138).
-    * position -> (name, sqlType). Used by the parser's per-field
-    * "invalid literal" error messages.
-    */
-  val numericCoercions: Seq[(Int, String, String)] = Seq(
-    (0, "age", "INT"),
-    (5, "balance", "DOUBLE"),
-    (9, "day", "INT"),
-    (11, "duration", "INT"),
-    (12, "campaign", "INT"),
-    (13, "pdays", "INT"),
-    (14, "previous", "INT")
-  )
 
   /** 8 derived + 4 metadata columns of PROCESSED_DATA_SCHEMA (bp.py:48-78). */
   val derivedColumns: Seq[String] = Seq(

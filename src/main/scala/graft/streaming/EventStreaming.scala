@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -12,8 +12,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * bp.py:326) — these are the streaming extensions a production ingest
   * of the same data would need: watermarked tumbling-window aggregation
   * and stateful sessionization. Both run identically on a batch frame
-  * (Spark's unified API), which is how the specs exercise them, and on
-  * `readStream` sources.
+  * (Spark's unified API) and on `readStream` sources; the catalog's
+  * streaming gates (q277-q281, [[graft.ops.StreamingGate]]) replay them
+  * over file sources against DuckDB oracles.
   */
 object EventStreaming {
 
@@ -29,67 +30,6 @@ object EventStreaming {
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("n"), col("value_sum"))
 
-  /** Start the hourly aggregation as a real stream into a memory sink. */
-  def startHourlyQuery(spark: SparkSession, stream: DataFrame,
-                       queryName: String) =
-    hourlyByType(stream).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Update())
-      .start()
-
-  /** Streaming exact dedup on a business key with bounded state: rows
-    * whose (user_id, event_type) already appeared within the watermark
-    * horizon are dropped; state for keys older than the watermark is
-    * evicted. The streaming twin of the batch q23 first-occurrence dedup.
-    */
-  def dedupWithinWatermark(events: DataFrame,
-                           watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("user_id", "event_type")
-
-  /** Stream-stream interval join: each purchase paired with the same
-    * user's clicks in the preceding `windowSec` seconds. Watermarks on
-    * BOTH sides bound the join state (clicks older than purchase
-    * watermark + window are evicted) — the property that lets this run
-    * indefinitely. Inputs are events-schema frames (batch or streaming).
-    */
-  def purchaseClickJoin(purchases: DataFrame, clicks: DataFrame,
-                        windowSec: Int = 600,
-                        watermark: String = "10 minutes"): DataFrame = {
-    val p = purchases
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("pts"))
-      .withWatermark("pts", watermark)
-    val c = clicks
-      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-        col("ts").as("cts"))
-      .withWatermark("cts", watermark)
-    p.join(c, col("p_user") === col("c_user") &&
-        col("cts") <= col("pts") &&
-        col("cts") >= col("pts") - expr(s"INTERVAL $windowSec SECONDS"))
-      .select(col("purchase_id"), col("p_user").as("user_id"),
-        col("click_id"), col("pts"), col("cts"))
-  }
-
-  /** The reference's whole ETL as a CONTINUOUS pipeline: raw CSV lines
-    * from any streaming source through the identical four stages
-    * (graft.etl is pure narrow transforms, so the unified API runs it
-    * unchanged on a streaming frame), demuxed into processed and error
-    * sinks per batch — the streaming twin of BankingPipeline.fromLines.
-    * foreachBatch gives the two-sink topology (a streaming query has one
-    * sink) with exactly-once per-batch semantics from the source's
-    * offset tracking.
-    */
-  def streamingBankEtl(lines: DataFrame,
-                       onBatch: (DataFrame, DataFrame, Long) => Unit)
-  : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    lines.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      val r = graft.pipeline.BankingPipeline.fromLines(batch)
-      onBatch(r.processed, r.errors, id)
-    }
-
   final case class Event(event_id: Long, ts: Timestamp, user_id: Long,
                          event_type: String, value: Double)
   final case class SessionState(sessionStart: Long, lastTs: Long,
@@ -97,226 +37,6 @@ object EventStreaming {
   final case class Session(user_id: Long, session_start: Timestamp,
                            session_end: Timestamp, n_events: Long,
                            value_sum: Double)
-
-  final case class NetState(lastTsS: Long, lastEventId: Long,
-                            lastCents: Long, deleted: Boolean,
-                            nChanges: Long, nDeletes: Long)
-  final case class NetRow(user_id: Long, last_event_id: Long,
-                          last_ts_s: Long, last_cents: Long,
-                          deleted: Boolean, n_changes: Long,
-                          n_deletes: Long)
-
-  /** Streaming CDC changelog compaction — the continuous twin of batch
-    * q160: keyed state per user holds the last-writer-wins net row
-    * (ordered by (ts, event_id), event_type 'error' is a tombstone)
-    * plus running change/tombstone counts, and each trigger emits the
-    * CURRENT net state of every user seen in the batch. Late or
-    * replayed changes older than the held (ts, event_id) bump the
-    * counters but never overwrite the newer value — replay-safe
-    * last-writer-wins, the property a merge-on-read table needs under
-    * at-least-once delivery. State per user is O(1), so the keeper runs
-    * indefinitely; cents/epoch-seconds arithmetic matches q160 exactly
-    * (Timestamp.getTime ms div 1000 == unix_micros div 1e6).
-    */
-  def cdcNetState(changes: Dataset[Event]): Dataset[NetRow] = {
-    import changes.sparkSession.implicits._
-    changes
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[NetState, NetRow](GroupStateTimeout.NoTimeout()) {
-        case (userId, rows, state: GroupState[NetState]) =>
-          var st = state.getOption.getOrElse(
-            NetState(Long.MinValue, Long.MinValue, 0L, deleted = false, 0L, 0L))
-          rows.foreach { e =>
-            val tsS = e.ts.getTime / 1000L
-            val isDel = e.event_type == "error"
-            val cents = math.floor(e.value * 100 + 0.5).toLong
-            val newer = tsS > st.lastTsS ||
-              (tsS == st.lastTsS && e.event_id > st.lastEventId)
-            st = st.copy(nChanges = st.nChanges + 1,
-              nDeletes = st.nDeletes + (if (isDel) 1L else 0L))
-            if (newer) st = st.copy(lastTsS = tsS, lastEventId = e.event_id,
-              lastCents = cents, deleted = isDel)
-          }
-          state.update(st)
-          NetRow(userId, st.lastEventId, st.lastTsS, st.lastCents,
-            st.deleted, st.nChanges, st.nDeletes)
-      }
-  }
-
-  final case class KmvState(mins: Array[Long])
-  final case class KmvRow(scope: String, n_sketch: Long, hk: Long,
-                          kmv_est: Double)
-
-  /** Streaming KMV distinct-count monitor — the continuous twin of
-    * batch q156: per event type, keyed state holds the k=64 smallest
-    * md5-60 user hashes seen so far (O(k) state per key, runs forever),
-    * and each trigger emits the scope's current sketch stats and
-    * estimate. The state IS the mergeable KMV sketch: inserting a
-    * batch's hashes and re-truncating to k is exactly sketch union, so
-    * the streaming estimate after any batch split equals the batch
-    * estimate over the union of the batches — pinned by the parity
-    * spec. Same estimator arithmetic as q156 (63 * 2^60 exact in a
-    * double, one correctly-rounded division).
-    */
-  def kmvDistinct(hashed: Dataset[(String, Long)], k: Int = 64)
-  : Dataset[KmvRow] = {
-    import hashed.sparkSession.implicits._
-    hashed
-      .groupByKey(_._1)
-      .mapGroupsWithState[KmvState, KmvRow](GroupStateTimeout.NoTimeout()) {
-        case (scope, rows, state: GroupState[KmvState]) =>
-          val prev = state.getOption.map(_.mins).getOrElse(Array.empty[Long])
-          val mins = (prev ++ rows.map(_._2)).distinct.sorted.take(k)
-          state.update(KmvState(mins))
-          val est =
-            if (mins.length < k) mins.length.toDouble
-            else (k - 1).toDouble * 1152921504606846976.0 / mins.last
-          KmvRow(scope, mins.length.toLong, mins.lastOption.getOrElse(0L), est)
-      }
-  }
-
-  final case class SeenState(firstDay: Long)
-  final case class NewRetRow(user_id: Long, day: Long, is_new: Int)
-
-  /** Streaming new/returning classifier — the continuous twin of batch
-    * q185: O(1) keyed state per user (the first-ever activity day),
-    * emitting one (user, day, is_new) row per distinct user-day in the
-    * trigger. A day is "new" iff it equals the user's first day, which
-    * under per-user event-time-ordered delivery (the funnel keeper's
-    * contract; out-of-order reconstruction is the batch query's job)
-    * matches q185's min(day) exactly. The state is FROZEN once set:
-    * a violating out-of-order delivery (an earlier day arriving in a
-    * later trigger) is classified against the frozen first day
-    * (is_new = 0), never moves firstDay backward — so re-delivered
-    * user-days re-emit the SAME row (is_new is a pure function of
-    * frozen state) and downstream dedup is a distinct, never a
-    * reconciliation. (Recovering a true earlier first-day from
-    * out-of-order history is the batch query's job.)
-    */
-  def firstSeen(events: Dataset[Event]): Dataset[NewRetRow] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SeenState, NewRetRow](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        case (userId, rows, state: GroupState[SeenState]) =>
-          val days = rows.map(e => e.ts.getTime / 86400000L).toSeq.distinct
-          if (days.isEmpty) Iterator.empty
-          else {
-            val f = state.getOption.map(_.firstDay).getOrElse {
-              val f0 = days.min
-              state.update(SeenState(f0))
-              f0
-            }
-            days.sorted.iterator.map(d =>
-              NewRetRow(userId, d, if (d == f) 1 else 0))
-          }
-      }
-  }
-
-  final case class MgState(items: Map[Long, Long], nSeen: Long)
-  final case class MgRow(scope: String, item: Long, est: Long,
-                         n_seen: Long, n_tracked: Int)
-
-  /** Streaming Misra-Gries heavy-hitter monitor: per scope, O(m) keyed
-    * state tracking at most m candidate items; every trigger re-emits
-    * the scope's full summary stamped with the monotonic n_seen (the
-    * latest-stamp rows are the current summary). ORDER-INDEPENDENT
-    * guarantees, pinned by the spec:
-    *  - EXACTNESS when distinct items <= m (no decrement ever fires,
-    *    so counts are exact under ANY arrival order);
-    *  - the MG bound otherwise: exact - est <= n_seen/(m+1) for every
-    *    item (est = 0 if untracked), because each decrement round
-    *    retires m+1 occurrences.
-    * State carries across triggers, so any batch SPLIT processes the
-    * same multiset — but flatMapGroupsWithState does not guarantee
-    * within-batch, within-key iterator order, so the exact identity
-    * of the m-item summary (which ties survive a decrement round) is
-    * order-sensitive when decrements fire; the spec's equality law
-    * against a sequential reference holds under MemoryStream's
-    * local-mode in-order delivery, not as an engine contract.
-    * The streaming complement of the CMS/top-k batch sketches: state
-    * never grows with cardinality, so a hot-key flood cannot OOM the
-    * state store — the property that keeps this runnable forever on an
-    * unbounded 100 TB/day stream.
-    */
-  def heavyHitters(stream: Dataset[(String, Long)], m: Int = 8)
-  : Dataset[MgRow] = {
-    import stream.sparkSession.implicits._
-    stream
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[MgState, MgRow](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        case (scope, rows, state: GroupState[MgState]) =>
-          var items = state.getOption.map(_.items)
-            .getOrElse(Map.empty[Long, Long])
-          var n = state.getOption.map(_.nSeen).getOrElse(0L)
-          rows.foreach { case (_, it) =>
-            n += 1
-            items.get(it) match {
-              case Some(c) => items = items.updated(it, c + 1)
-              case None if items.size < m => items = items.updated(it, 1L)
-              case None => items = items.view
-                .mapValues(_ - 1).filter(_._2 > 0).toMap
-            }
-          }
-          state.update(MgState(items, n))
-          // an emptied summary must still emit (sentinel item = -1):
-          // zero rows would leave the sink's latest stamp pointing at a
-          // STALE summary — "no update" and "summary emptied" have to
-          // be distinguishable downstream
-          if (items.isEmpty) Iterator.single(MgRow(scope, -1L, 0L, n, 0))
-          else items.toSeq.sortBy { case (it, c) => (-c, it) }.iterator.map {
-            case (it, c) => MgRow(scope, it, c, n, items.size)
-          }
-      }
-  }
-
-  final case class FunnelState(t1: Long, t2: Long, t3: Long)
-  final case class FunnelRow(user_id: Long, level: Int)
-
-  /** Streaming conversion funnel — the continuous twin of batch q172:
-    * per-user keyed state holds the greedy earliest-chain anchors
-    * (t1 = first view, t2 = first qualifying click, t3 = first
-    * qualifying purchase, 1-hour horizon from t1), O(1) per user, and
-    * each trigger emits the user's CURRENT funnel level. Anchors only
-    * ever move forward, so the level is monotone non-decreasing under
-    * ANY delivery order; it equals q172's batch level exactly when
-    * each user's events arrive in event-time order (the in-order
-    * replay the parity spec drives). Out-of-order deliveries would
-    * need the dropped events back to re-anchor — that reconstruction
-    * is the batch query's job, not a keyed keeper's.
-    */
-  def windowFunnel(events: Dataset[Event], horizonMs: Long = 3600 * 1000L)
-  : Dataset[FunnelRow] = {
-    import events.sparkSession.implicits._
-    val unset = Long.MaxValue
-    events
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[FunnelState, FunnelRow](GroupStateTimeout.NoTimeout()) {
-        case (userId, rows, state: GroupState[FunnelState]) =>
-          var st = state.getOption.getOrElse(FunnelState(unset, unset, unset))
-          rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            val t = e.ts.getTime
-            e.event_type match {
-              case "view" if st.t1 == unset =>
-                st = st.copy(t1 = t)
-              case "click" if st.t1 != unset && st.t2 == unset &&
-                  t >= st.t1 && t <= st.t1 + horizonMs =>
-                st = st.copy(t2 = t)
-              case "purchase" if st.t2 != unset && st.t3 == unset &&
-                  t >= st.t2 && t <= st.t1 + horizonMs =>
-                st = st.copy(t3 = t)
-              case _ =>
-            }
-          }
-          state.update(st)
-          val level =
-            if (st.t3 != unset) 3 else if (st.t2 != unset) 2
-            else if (st.t1 != unset) 1 else 0
-          FunnelRow(userId, level)
-      }
-  }
 
   /** Gap-based sessionization with explicit keyed state
     * (mapGroupsWithState + processing-time timeout): emits the CURRENT
@@ -335,7 +55,7 @@ object EventStreaming {
           // tiebreak — ms-tied events otherwise fold value_sum in
           // shuffle-delivery order, and (x+a)+b != (x+b)+a bitwise for
           // fractional doubles, so a micro-batch retry could emit a
-          // different record (same discipline as windowFunnel).
+          // different record (sessionizeClosed sorts the same way).
           val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
           var st = state.getOption.getOrElse(
             SessionState(sorted.head.ts.getTime, sorted.head.ts.getTime, 0L, 0.0))
@@ -440,65 +160,6 @@ object EventStreaming {
               math.max(st.lastTs + gapMs, state.getCurrentWatermarkMs() + 1))
             closed.reverseIterator
           }
-      }
-  }
-
-  final case class RateState(n: Long, s1: Long, s2: Long, curHour: Long,
-                             curCnt: Long, flagged: Long, late: Long)
-  final case class RateRow(user_id: Long, closed_hours: Long,
-                           closed_events: Long, closed_sq: Long,
-                           cur_hour: Long, cur_cnt: Long,
-                           flagged_hours: Long, late_events: Long)
-
-  /** Fold the open hour into the moments and run the batch-q142
-    * integer z-test against the moments INCLUDING it ("prequential"
-    * scoring: each hour is judged the moment it closes, on exactly the
-    * history available then).
-    */
-  private def closeRateHour(st: RateState): RateState =
-    if (st.curHour == Long.MinValue) st
-    else {
-      val n = st.n + 1
-      val s1 = st.s1 + st.curCnt
-      val s2 = st.s2 + st.curCnt * st.curCnt
-      val d = n * st.curCnt - s1
-      val flag = n >= 4 && d > 0 && d * d > 9L * (n * s2 - s1 * s1)
-      RateState(n, s1, s2, st.curHour, st.curCnt,
-        st.flagged + (if (flag) 1L else 0L), st.late)
-    }
-
-  /** Streaming per-user rate-anomaly keeper — the continuous twin of
-    * batch q142: keyed state holds the BIGINT moments (n, S1, S2) of
-    * CLOSED hourly counts plus the one open hour, so state per user is
-    * O(1) forever. When an event advances the hour, the finished hour
-    * folds into the moments and is z-tested with the same integer
-    * inequality as q142 ((n*x - S1)^2 > 9*(n*S2 - S1^2), no IEEE
-    * mean/stddev). Differences from batch, by design: scoring is
-    * prequential (an hour is judged on history up to and including
-    * itself, not the full future), and an event older than the open
-    * hour counts as late rather than reopening it (at-least-once
-    * replay safety). Moment parity with the batch derivation over the
-    * same log is law-tested in AsofStreamingSpec.
-    */
-  def rateAnomaly(events: Dataset[Event]): Dataset[RateRow] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[RateState, RateRow](GroupStateTimeout.NoTimeout()) {
-        case (userId, rows, state: GroupState[RateState]) =>
-          var st = state.getOption.getOrElse(
-            RateState(0L, 0L, 0L, Long.MinValue, 0L, 0L, 0L))
-          rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            val h = e.ts.getTime / 3600000L
-            if (h == st.curHour) st = st.copy(curCnt = st.curCnt + 1)
-            else if (h > st.curHour) {
-              st = closeRateHour(st)
-              st = st.copy(curHour = h, curCnt = 1L)
-            } else st = st.copy(late = st.late + 1)
-          }
-          state.update(st)
-          RateRow(userId, st.n, st.s1, st.s2, st.curHour, st.curCnt,
-            st.flagged, st.late)
       }
   }
 }

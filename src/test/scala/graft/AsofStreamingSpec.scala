@@ -47,7 +47,9 @@ class AsofStreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
     val stream = mem.toDF()
       .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val query = EventStreaming.startHourlyQuery(spark, stream, "hourly_test")
+    val query = EventStreaming.hourlyByType(stream).writeStream
+      .format("memory").queryName("hourly_test")
+      .outputMode(org.apache.spark.sql.streaming.OutputMode.Update()).start()
     try {
       mem.addData((1L, ts(0), 1L, "click", 2.0),
         (2L, ts(10), 1L, "click", 3.0), (3L, ts(0), 1L, "view", 1.0))
@@ -288,363 +290,6 @@ class AsofStreamingSpec extends SparkSpec {
       assert(rows.forall(_._1 == 1L), rows.mkString(","))
       assert(!rows.exists(_._2 == 100.0))
     } finally query.stop()
-  }
-
-  test("streaming bank ETL: file-source lines flow through all 4 stages") {
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-stream-src")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(getClass.getResource("/bank_fixture.csv").getPath),
-      srcDir.resolve("part-0.csv"))
-    val lines = graft.pipeline.BankingPipeline.readCsvLines(spark, srcDir.toString)
-    // the streaming source applies the SAME shared header-drop predicate
-    val stream = spark.readStream.text(srcDir.toString)
-      .where(!graft.pipeline.BankingPipeline.isHeaderLine(col("value")))
-    var processed = 0L
-    var parseErrors = 0L
-    var validationErrors = 0L
-    val q = EventStreaming.streamingBankEtl(stream, (p, e, _) => {
-      processed += p.count()
-      val byType = e.groupBy("error_type").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      parseErrors += byType.getOrElse("parsing_error", 0L)
-      validationErrors += byType.getOrElse("data_validation", 0L)
-    }).trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    // same totals as the batch path over the same fixture
-    assert(processed == 44, s"processed=$processed")
-    assert(parseErrors == 4 && validationErrors == 2,
-      s"parse=$parseErrors validation=$validationErrors")
-    assert(processed + parseErrors + validationErrors == lines.count())
-  }
-
-  test("stream-stream interval join pairs purchases with recent clicks") {
-    implicit val sqlCtx = spark.sqlContext
-    val pMem = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val cMem = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    def frame(m: MemoryStream[(Long, Timestamp, Long, String, Double)]) =
-      m.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
-    val joined = EventStreaming.purchaseClickJoin(
-      frame(pMem), frame(cMem), windowSec = 600)
-    val query = joined.writeStream.format("memory").queryName("ssj_test")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
-    try {
-      cMem.addData((10L, ts(0), 1L, "click", 1.0),   // in window for p@5
-        (11L, ts(20), 1L, "click", 1.0),             // after p@5 -> no match
-        (12L, ts(4), 2L, "click", 1.0))              // other user
-      pMem.addData((100L, ts(5), 1L, "purchase", 9.0))
-      query.processAllAvailable()
-      // advance both watermarks far enough to finalize the join output
-      cMem.addData((13L, ts(600), 9L, "click", 1.0))
-      pMem.addData((101L, ts(600), 9L, "purchase", 1.0))
-      query.processAllAvailable()
-      val got = spark.table("ssj_test").select("purchase_id", "click_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got.contains((100L, 10L)), got.mkString(","))
-      assert(!got.contains((100L, 11L)) && !got.contains((100L, 12L)))
-    } finally query.stop()
-  }
-
-  test("streaming dedup within watermark drops repeat keys") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val stream = mem.toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val query = graft.streaming.EventStreaming.dedupWithinWatermark(stream)
-      .writeStream.format("memory").queryName("dedup_test")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
-    try {
-      mem.addData(
-        (1L, ts(0), 1L, "click", 1.0),
-        (2L, ts(1), 1L, "click", 2.0),  // dup key within watermark
-        (3L, ts(2), 1L, "view", 3.0),
-        (4L, ts(3), 2L, "click", 4.0))
-      query.processAllAvailable()
-      val ids = spark.table("dedup_test").select("event_id")
-        .collect().map(_.getLong(0)).toSet
-      assert(ids == Set(1L, 3L, 4L), ids.mkString(","))
-    } finally query.stop()
-  }
-
-  test("streaming CDC net state across batches equals batch q160") {
-    // The whole sf0.001 event log is replayed through the stateful
-    // keeper in TWO triggers split at the time midpoint — state must
-    // carry users across the batch boundary and land, key for key, on
-    // the batch q160 materialization over the same log.
-    implicit val sqlCtx = spark.sqlContext
-    val sf = "/root/testdata/sf0.001"
-    val ev = graft.ops.TestData.table(spark, sf, "events")
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .as[EventStreaming.Event].collect()
-    val cut = ev.map(_.ts.getTime).sorted.apply(ev.length / 2)
-    val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val stream = mem.toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-      .as[EventStreaming.Event]
-    val query = EventStreaming.cdcNetState(stream)
-      .writeStream.format("memory").queryName("cdc_test")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Update()).start()
-    try {
-      def tuple(e: EventStreaming.Event) =
-        (e.event_id, e.ts, e.user_id, e.event_type, e.value)
-      mem.addData(ev.filter(_.ts.getTime <= cut).map(tuple).toSeq)
-      query.processAllAvailable()
-      mem.addData(ev.filter(_.ts.getTime > cut).map(tuple).toSeq)
-      query.processAllAvailable()
-      // the memory sink appends one row per touched user per trigger;
-      // n_changes is strictly monotonic, so max(n_changes) per user is
-      // that user's CURRENT state
-      val current = spark.table("cdc_test")
-        .as[EventStreaming.NetRow].collect()
-        .groupBy(_.user_id).map { case (_, rs) => rs.maxBy(_.n_changes) }
-      val streamed = current.filter(!_.deleted)
-        .map(r => (r.user_id, r.last_event_id, r.last_ts_s, r.last_cents,
-          r.n_changes, r.n_deletes)).toSet
-      val batch = SparkEntry.queries("q160_cdc_net_state")(spark, sf)
-        .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
-      assert(streamed == batch,
-        s"diff: ${(streamed diff batch) ++ (batch diff streamed)}")
-      // tombstoned users are exactly the complement
-      val allUsers = ev.map(_.user_id).toSet
-      assert(current.filter(_.deleted).map(_.user_id).toSet ==
-        allUsers -- batch.map(_._1))
-    } finally query.stop()
-  }
-
-  test("streaming KMV sketch across batches equals batch q156") {
-    // union-by-insertion law: feeding the hash stream in two arbitrary
-    // triggers must land each scope's sketch (n, hk, estimate) exactly
-    // on the batch q156 per-type values over the whole log.
-    implicit val sqlCtx = spark.sqlContext
-    val sf = "/root/testdata/sf0.001"
-    val hashed = graft.ops.TestData.table(spark, sf, "events")
-      .select(col("event_type"),
-        graft.ops.DedupOps.md5Long60(col("user_id").cast("string")).as("h"))
-      .as[(String, Long)].collect()
-    val mem = MemoryStream[(String, Long)]
-    val query = EventStreaming.kmvDistinct(mem.toDS())
-      .writeStream.format("memory").queryName("kmv_test")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Update()).start()
-    try {
-      val (b1, b2) = hashed.splitAt(hashed.length / 3)
-      mem.addData(b1.toSeq)
-      query.processAllAvailable()
-      mem.addData(b2.toSeq)
-      query.processAllAvailable()
-      // n_sketch is monotonic per scope -> max row is the current state;
-      // hk ties are impossible (distinct hashes), est rides n/hk
-      val current = spark.table("kmv_test")
-        .as[EventStreaming.KmvRow].collect()
-        .groupBy(_.scope).map { case (_, rs) => rs.maxBy(_.n_sketch) }
-        .map(r => (r.scope, r.n_sketch, r.hk, r.kmv_est)).toSet
-      val batch = SparkEntry.queries("q156_kmv_distinct")(spark, sf)
-        .where(col("scope") =!= "__union__")
-        .select("scope", "n_sketch", "hk", "kmv_est")
-        .as[(String, Long, Long, Double)].collect().toSet
-      assert(current == batch,
-        s"diff: ${(current diff batch) ++ (batch diff current)}")
-    } finally query.stop()
-  }
-
-  test("streaming window funnel on in-order replay equals batch q172") {
-    // each user's events replayed in event-time order across THREE
-    // triggers: the keyed anchors must carry across batch boundaries
-    // and the final per-level user counts must land on batch q172.
-    implicit val sqlCtx = spark.sqlContext
-    val sf = "/root/testdata/sf0.001"
-    val ev = graft.ops.TestData.table(spark, sf, "events")
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .as[EventStreaming.Event].collect()
-      .sortBy(e => (e.ts.getTime, e.event_id))
-    val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val stream = mem.toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-      .as[EventStreaming.Event]
-    val query = EventStreaming.windowFunnel(stream)
-      .writeStream.format("memory").queryName("funnel_test")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Update()).start()
-    try {
-      def tuple(e: EventStreaming.Event) =
-        (e.event_id, e.ts, e.user_id, e.event_type, e.value)
-      val third = ev.length / 3
-      Seq(ev.take(third), ev.slice(third, 2 * third), ev.drop(2 * third))
-        .foreach { b => mem.addData(b.map(tuple).toSeq); query.processAllAvailable() }
-      // level is monotone per user -> max level per user is current
-      val streamed = spark.table("funnel_test")
-        .as[EventStreaming.FunnelRow].collect()
-        .groupBy(_.user_id).map { case (_, rs) => rs.map(_.level).max }
-        .groupBy(identity).map { case (l, us) => (l, us.size.toLong) }
-      val batch = SparkEntry.queries("q172_window_funnel")(spark, sf)
-        .as[(Int, Long)].collect().toMap
-      assert(streamed == batch, s"streamed $streamed vs batch $batch")
-    } finally query.stop()
-  }
-
-  test("streaming rate keeper: moments match batch, flags match replay") {
-    implicit val sqlCtx = spark.sqlContext
-    val sf = "/root/testdata/sf0.001"
-    val ev = graft.ops.TestData.table(spark, sf, "events")
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .as[EventStreaming.Event].collect().toSeq
-    val cut = ev.map(_.ts.getTime).sorted.apply(ev.length / 2)
-    val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val stream = mem.toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-      .as[EventStreaming.Event]
-    val query = EventStreaming.rateAnomaly(stream)
-      .writeStream.format("memory").queryName("rate_test")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Update()).start()
-    try {
-      def tuple(e: EventStreaming.Event) =
-        (e.event_id, e.ts, e.user_id, e.event_type, e.value)
-      mem.addData(ev.filter(_.ts.getTime <= cut).map(tuple))
-      query.processAllAvailable()
-      mem.addData(ev.filter(_.ts.getTime > cut).map(tuple))
-      query.processAllAvailable()
-      // latest trigger's row per user: closed state only grows
-      val current = spark.table("rate_test")
-        .as[EventStreaming.RateRow].collect()
-        .groupBy(_.user_id)
-        .map { case (_, rs) => rs.maxBy(r => (r.closed_hours, r.cur_hour)) }
-      // time-split batches can never deliver late events
-      assert(current.forall(_.late_events == 0))
-      // per-user hour counts, event-time order — the shared ground truth
-      val hours = ev.groupBy(_.user_id).map { case (u, es) =>
-        u -> es.groupBy(_.ts.getTime / 3600000L).toSeq
-          .map { case (h, g) => (h, g.size.toLong) }.sortBy(_._1)
-      }
-      current.foreach { r =>
-        val hs = hours(r.user_id)
-        // fold the open hour back in: moments must equal the batch
-        // (q142-style) per-user moments over ALL hours
-        val n = r.closed_hours + 1
-        val s1 = r.closed_events + r.cur_cnt
-        val s2 = r.closed_sq + r.cur_cnt * r.cur_cnt
-        assert(n == hs.length && s1 == hs.map(_._2).sum &&
-          s2 == hs.map(c => c._2 * c._2).sum, s"user ${r.user_id} moments")
-        assert((r.cur_hour, r.cur_cnt) == hs.last, s"user ${r.user_id} open hour")
-        // prequential flag replay over closed hours
-        var (pn, ps1, ps2, flags) = (0L, 0L, 0L, 0L)
-        hs.dropRight(1).foreach { case (_, c) =>
-          pn += 1; ps1 += c; ps2 += c * c
-          val d = pn * c - ps1
-          if (pn >= 4 && d > 0 && d * d > 9L * (pn * ps2 - ps1 * ps1))
-            flags += 1
-        }
-        assert(r.flagged_hours == flags, s"user ${r.user_id} flags")
-      }
-    } finally query.stop()
-  }
-
-  test("streaming first-seen keeper equals batch q185 new/returning") {
-    // full sf0.001 event log replayed per-user-in-order across three
-    // triggers: distinct emitted (user, day, is_new) rows, aggregated
-    // per day, must land exactly on batch q185's
-    // (active, new, returning) — state (first day) carries across
-    // batch boundaries
-    implicit val sqlCtx = spark.sqlContext
-    val sf = "/root/testdata/sf0.001"
-    val ev = graft.ops.TestData.table(spark, sf, "events")
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .as[EventStreaming.Event].collect()
-      .sortBy(e => (e.ts.getTime, e.event_id))
-    val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val stream = mem.toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-      .as[EventStreaming.Event]
-    val query = EventStreaming.firstSeen(stream)
-      .writeStream.format("memory").queryName("firstseen_test")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-      .start()
-    try {
-      val (b1, rest) = ev.splitAt(ev.length / 3)
-      val (b2, b3) = rest.splitAt(rest.length / 2)
-      Seq(b1, b2, b3).foreach { b =>
-        mem.addData(b.toSeq.map(e =>
-          (e.event_id, e.ts, e.user_id, e.event_type, e.value)))
-        query.processAllAvailable()
-      }
-      val streamed = spark.table("firstseen_test")
-        .as[EventStreaming.NewRetRow].collect().distinct // re-emits dedup
-        .groupBy(_.day).map { case (day, rs) =>
-          (day, rs.length.toLong, rs.count(_.is_new == 1).toLong,
-            rs.count(_.is_new == 0).toLong)
-        }.toSet
-      val batch = SparkEntry.queries("q185_new_returning")(spark, sf)
-        .as[(Long, Long, Long, Long)].collect().toSet
-      assert(streamed == batch,
-        s"diff: ${(streamed diff batch) ++ (batch diff streamed)}")
-    } finally query.stop()
-  }
-
-  test("streaming Misra-Gries heavy hitters: deterministic, exact, bounded") {
-    // three laws over the sf0.001 event log, items = user_id % 50 per
-    // event-type scope: (1) streaming across 3 arbitrary triggers lands
-    // exactly on the single-pass reference summary — this law relies on
-    // MemoryStream's local-mode in-order within-key delivery (the
-    // engine does not contract iterator order; see the keeper's doc);
-    // (2) [order-independent] with capacity >= distinct items the
-    // counts equal the exact per-item counts; (3) [order-independent]
-    // at small capacity every item obeys the MG bound
-    // exact - est <= n/(m+1).
-    implicit val sqlCtx = spark.sqlContext
-    val sf = "/root/testdata/sf0.001"
-    val ev = graft.ops.TestData.table(spark, sf, "events")
-      .select(col("event_type"), (col("user_id") % 50).as("item"),
-        col("event_id"))
-      .as[(String, Long, Long)].collect()
-      .sortBy(_._3).map(e => (e._1, e._2))
-
-    def referenceMg(xs: Seq[(String, Long)], m: Int)
-    : Map[String, Map[Long, Long]] =
-      xs.groupBy(_._1).view.mapValues { rows =>
-        var items = Map.empty[Long, Long]
-        rows.map(_._2).foreach { it =>
-          items.get(it) match {
-            case Some(c) => items = items.updated(it, c + 1)
-            case None if items.size < m => items = items.updated(it, 1L)
-            case None => items = items.view
-              .mapValues(_ - 1).filter(_._2 > 0).toMap
-          }
-        }
-        items
-      }.toMap
-
-    for (m <- Seq(4, 64)) {
-      val mem = MemoryStream[(String, Long)]
-      val query = EventStreaming.heavyHitters(mem.toDS(), m)
-        .writeStream.format("memory").queryName(s"mg_test_$m")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-        .start()
-      try {
-        val (b1, rest) = ev.splitAt(ev.length / 4)
-        val (b2, b3) = rest.splitAt(rest.length / 2)
-        Seq(b1, b2, b3).foreach { b =>
-          mem.addData(b.toSeq); query.processAllAvailable()
-        }
-        val rows = spark.table(s"mg_test_$m")
-          .as[EventStreaming.MgRow].collect()
-        val current = rows.groupBy(_.scope).map { case (scope, rs) =>
-          val last = rs.map(_.n_seen).max
-          scope -> rs.filter(r => r.n_seen == last && r.item >= 0)
-            .map(r => r.item -> r.est).toMap
-        }
-        val exact = ev.groupBy(_._1).view.mapValues(
-          _.groupBy(_._2).view.mapValues(_.size.toLong).toMap).toMap
-        // law 1: streaming == single-pass reference, any split
-        assert(current == referenceMg(ev.toIndexedSeq, m),
-          s"m=$m summary drifted from sequential reference")
-        current.foreach { case (scope, est) =>
-          val ex = exact(scope)
-          val n = ex.values.sum
-          if (m == 64) assert(est == ex, s"m=64 must be exact for $scope")
-          else ex.foreach { case (it, c) =>
-            val e = est.getOrElse(it, 0L)
-            assert(e <= c && c - e <= n / (m + 1),
-              s"MG bound broken: $scope item $it exact=$c est=$e n=$n")
-          }
-        }
-      } finally query.stop()
-    }
   }
 }
 

@@ -205,6 +205,7 @@ class EndToEndSpec extends SparkSpec {
     val heapBefore = settledHeap()
     (1 to 20).foreach(runOnce)
     val grownMb = (settledHeap() - heapBefore) / (1024.0 * 1024)
+    info(f"driver heap grew $grownMb%.2f MB over 20 runs")
     assert(grownMb <= 5, f"driver heap grew $grownMb%.1f MB over 20 runs")
   }
 

@@ -4,14 +4,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.DedupOps
 
-/** Joint properties of the two near-dup pair sources and the hub-shingle
-  * df-cap (VERDICT r4 #1/#5), on a GENERATED corpus with known near-dup
-  * structure:
+/** Joint properties of the two near-dup pair sources (VERDICT r4 #1/#5),
+  * on a GENERATED corpus with known near-dup structure:
   *
   *  - docs come in (2b, 2b+1) near-dup pairs differing in exactly one
-  *    word (jaccard ~0.82 hub-free / 0.625 with hub / 0.60 capped — all
-  *    comfortably above the 0.5 threshold, so NO pair's keep/drop
-  *    decision rides the hub shingle);
+  *    word (jaccard ~0.82 hub-free / 0.625 with hub — both comfortably
+  *    above the 0.5 threshold, so NO pair's keep/drop decision rides
+  *    the hub shingle);
   *  - the "hub" variant appends the same 3-word boilerplate tail to
   *    every doc, injecting one shingle with df = N (the license-header /
   *    navigation-chrome shape that makes the exact join's Sum df^2 cost
@@ -47,53 +46,6 @@ class PairSourceSpec extends SparkSpec {
       assert(dropSet(kl) == (0 until NDocs).filter(_ % 2 == 1)
         .map(_.toLong).toSet, s"withHub=$hub")
     }
-  }
-
-  test("df-cap leaves the keep-list identical when no pair rides capped shingles") {
-    // Hub-free corpus: max df is 2 (shared pair shingles), so ANY cap
-    // >= 2 must be a no-op — bitwise-identical keep-list.
-    val hubFree = corpus(withHub = false)
-    val uncapped = DedupOps.keepList(hubFree, "exact").collect().toSeq
-    spark.conf.set("graft.shingle_df_cap", "2")
-    try {
-      val capped = DedupOps.keepList(hubFree, "exact").collect().toSeq
-      assert(capped == uncapped, "cap changed a hub-free keep-list")
-      // Hub corpus: the df=N boilerplate shingle IS capped away, but the
-      // constructed pairs sit above 0.5 with or without it, so the
-      // keep/drop decisions still match the uncapped run exactly.
-      val hubbed = corpus(withHub = true)
-      val cappedHub = DedupOps.keepList(hubbed, "exact")
-      spark.conf.unset("graft.shingle_df_cap")
-      val uncappedHub = DedupOps.keepList(hubbed, "exact")
-      assert(cappedHub.collect().toSeq == uncappedHub.collect().toSeq,
-        "cap flipped a keep/drop decision that does not ride the hub")
-    } finally spark.conf.unset("graft.shingle_df_cap")
-  }
-
-  test("hub shingle blows up exact-join candidates; the cap defuses it") {
-    // The exact pair source's cost driver is the pre-aggregation join
-    // row count Sum_shingles df*(df-1)/2. One df=60 boilerplate shingle
-    // adds 60*59/2 = 1770 join rows on its own; the cap removes exactly
-    // that term. (Round-5 PLANS.md records these numbers.)
-    def joinRows(docs: DataFrame, cap: Option[Long]): Long = {
-      val sh0 = DedupOps.hashedShingles(docs)
-      val sh = cap.map(DedupOps.capHubShingles(sh0, _)).getOrElse(sh0)
-      sh.as("a").join(sh.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-        .count()
-    }
-    val hubFreeRows = joinRows(corpus(withHub = false), None)
-    val hubRows = joinRows(corpus(withHub = true), None)
-    val cappedRows = joinRows(corpus(withHub = true), Some(2L))
-    info(s"exact-join candidate rows: hub-free=$hubFreeRows, " +
-      s"with-hub=$hubRows, with-hub capped=$cappedRows")
-    val hubTerm = NDocs.toLong * (NDocs - 1) / 2
-    assert(hubRows >= hubFreeRows + hubTerm,
-      s"expected the df=$NDocs hub key to add >= $hubTerm join rows")
-    // capping restores the hub-free candidate volume (boundary shingles
-    // are df=1, contributing nothing to the join)
-    assert(cappedRows == hubFreeRows,
-      s"cap did not remove the hub term: $cappedRows vs $hubFreeRows")
   }
 
   test("LSH keep-list: dropped set is a subset of exact's with recall >= 0.8") {

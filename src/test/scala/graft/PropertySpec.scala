@@ -487,15 +487,6 @@ class PropertySpec extends SparkSpec {
         graft.ops.WarehouseOps.graphBroadcastOn(spark))
     }
     assert(e1.getMessage.contains("graft.broadcast_graph_frames"))
-    val e2 = intercept[IllegalArgumentException] {
-      withFlag("graft.tiles", "eight")(graft.ops.DedupOps.tileCount(spark))
-    }
-    assert(e2.getMessage.contains("graft.tiles"))
-    val e3 = intercept[IllegalArgumentException] {
-      withFlag("graft.shingle_df_cap", "0")(
-        graft.ops.DedupOps.shingleDfCap(spark))
-    }
-    assert(e3.getMessage.contains("graft.shingle_df_cap"))
   }
 
   test("graft_simhash equals the exploded bit-majority aggregate") {
