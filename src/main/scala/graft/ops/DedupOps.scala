@@ -186,7 +186,7 @@ object DedupOps {
     // neutral there. (The same treatment on coPurchasePairs' order
     // self-join was probed and REJECTED 0/3 — its per-key fanout is
     // bounded by order width, no explosion to spread.)
-    val shP = PartitionedCheckpoint.repartitionByConf(sh, col("s"))
+    val shP = PinnedRepartition.repartitionByConf(sh, col("s"))
     val pairs = shP.as("a").join(shP.as("b"),
       col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
@@ -217,17 +217,16 @@ object DedupOps {
     * without serializing the plan onto one core.
     */
   private[graft] def connectedComponents(pairs: DataFrame): DataFrame = {
-    // Edges are consumed once per propagation round, always joined on
-    // d2: materialize them once, shuffled by d2 (persist() kept the
-    // lineage and re-optimized + re-exchanged it every round; measured
-    // at sf0.1 the checkpoint+prepartition cut q64 from 6.4 s to
-    // ~3.5 s). The checkpoint does not carry hash(d2) into the rounds
-    // under AQE (see PartitionedCheckpoint), so AQE owns each round's
-    // layout.
-    val edges = PartitionedCheckpoint.byKeys(
-      pairs.toDF("d1", "d2").unionByName(
-        pairs.toDF("d2", "d1").select(col("d1"), col("d2"))),
-      "d2")
+    // Every propagation round reads the edges: materialize them once,
+    // so no round re-runs the pair pipeline behind them (persist() kept
+    // the lineage and re-optimized it every round; at sf0.1 the
+    // checkpoint, measured with a pre-shuffle, cut q64 from 6.4 s to
+    // ~3.5 s). A checkpoint leaf carries no layout under AQE
+    // (PartitionedCheckpointSpec), so each round exchanges the edges on
+    // d2 itself and a pre-shuffle here would be thrown away.
+    val edges = pairs.toDF("d1", "d2").unionByName(
+        pairs.toDF("d2", "d1").select(col("d1"), col("d2")))
+      .localCheckpoint(eager = true)
     // SEEDED init (round 15): c0(v) = min(v, min direct neighbor) — the
     // first flooding round fused into the init aggregate. The old
     // `select(d1).distinct` paid the same single exchange to produce
@@ -235,11 +234,11 @@ object DedupOps {
     // label one hop ahead, so shallow graphs (the near-dup clusters the
     // dedup family feeds in) converge a whole iteration earlier
     // (ProbeR15CC: q64's graph 2 iters -> 1; OPTIMIZATION_r15.md,
-    // probe code at commit 9916828).
+    // probe code at commit 9916828). Only round 0 reads it, so it stays
+    // lazy and round 0's checkpoint materializes it.
     val init = edges.groupBy(col("d1").as("v"))
       .agg(least(min(col("d2")), col("d1")).as("c"))
       .select(col("v"), col("c"))
-      .localCheckpoint(eager = true)
     // `cL` carries the label ENTERING a step's final round, so the
     // convergence observe reads the LAST ROUND's delta during the
     // checkpoint job: a no-change final round certifies neighbor-min
@@ -247,7 +246,7 @@ object DedupOps {
     // unchanged composition means propagation alone was a no-op) — the
     // fixpoint needs no confirm iteration re-run. Capped at 12 steps.
     Fixpoint.iterate("cc", init, 12,
-        changed = Some(col("c") =!= col("cL")), release = true) {
+        changed = Some(col("c") =!= col("cL"))) {
       (prev, _) =>
         val comp = prev.select("v", "c")
         // Two flooding rounds per checkpoint; each round is ONE
@@ -290,37 +289,31 @@ object DedupOps {
     * float accumulation anywhere, so iteration order cannot matter.
     *
     * Distribution shape (the join-based PageRank that runs on a
-    * 1000-executor cluster): edges are materialized ONCE, eagerly
-    * checkpointed pre-partitioned by src; each round's contribution
-    * join is then exchange-free on the edge side (ranks arrive already
-    * hash(v)-partitioned from the previous round's groupBy), and the
-    * only shuffle per round is the rank transfer (groupBy dst). The
-    * symmetric graph has no dangling nodes (deg >= 1 by construction),
-    * so no dangling-mass term. One scalar (node count) comes to the
-    * driver, as in q64.
+    * 1000-executor cluster): edges are materialized ONCE, because every
+    * round reads them; each round exchanges them on src for the
+    * contribution join (a checkpoint leaf carries no layout under AQE,
+    * PartitionedCheckpointSpec) and shuffles the rank transfer
+    * (groupBy dst). The symmetric graph has no dangling nodes (deg >= 1
+    * by construction), so no dangling-mass term. One scalar (node
+    * count) comes to the driver, as in q64.
     */
   private[graft] def pageRank(pairs: DataFrame, iters: Int): DataFrame = {
     val scale = 1000000000000L
     val edges = pairs.toDF("d1", "d2").unionByName(
       pairs.toDF("d2", "d1").select(col("d1"), col("d2")))
       .toDF("src", "dst")
-      .repartition(col("src"))
       .localCheckpoint(eager = true)
-    // deg and each round's ranks are ALSO checkpointed: without it,
-    // one round's tree references `edges` several times (contrib join,
-    // deg derivation, prior rounds), Catalyst's self-join attribute
-    // dedup re-instances the LogicalRDD, and the re-instanced copy
-    // loses its outputPartitioning — every round then re-exchanges the
-    // edge side (observed in the physical plan). Truncating per round
-    // keeps each executed tree referencing edges exactly once, so the
-    // checkpoint partitioning survives — the q64/q101 pattern.
+    // deg is ALSO checkpointed, because every round reads it, and each
+    // round's ranks are checkpointed by the loop: without them, round
+    // r's tree would re-derive deg and replay rounds 0..r-1 over the
+    // edges (lineage truncation, the q64/q101 pattern).
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
       .localCheckpoint(eager = true)
     val n = deg.count()
     require(n > 0, "pagerank on an empty graph")
     val base = 15L * scale / (100L * n)
-    // `init` projects the live deg checkpoint that every round reads,
-    // so nothing is released.
+    // `init` projects the live deg checkpoint that every round reads;
+    // the loop never releases its `init`.
     val init = deg.select(col("src").as("v"), lit(scale / n).as("r"),
       col("deg"))
     val ranks = Fixpoint.iterate("pagerank", init, iters) { (cur, _) =>
@@ -823,7 +816,7 @@ object DedupOps {
           .localCheckpoint(eager = true)
         // Same REPARTITION_BY_NUM-before-the-exploding-self-join as
         // jaccardPairsFromHashed (r15) — see the comment there.
-        val shP = PartitionedCheckpoint.repartitionByConf(sh, col("s"))
+        val shP = PinnedRepartition.repartitionByConf(sh, col("s"))
         val e = shP.as("a").join(shP.as("b"),
             col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
           .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))

@@ -31,20 +31,20 @@ import org.apache.spark.sql.graftbridge.Bridge
   * `observed` aggregates ride the same observe; the last round's values
   * come back in [[Result.metrics]] under their aliases (and `changed`).
   *
-  * Release: with `release`, each superseded state is unpersisted once
-  * the next one is materialized, instead of its blocks waiting for GC;
-  * `init` is released too, so the caller guarantees it is an eager
-  * checkpoint that nothing else reads (CC, label propagation). Without
-  * it nothing is released: PageRank's `init` projects the degree
-  * checkpoint that every round still reads.
+  * Release: once round `r` >= 1 is materialized, the state round
+  * `r - 1` produced is unpersisted instead of its blocks waiting for GC;
+  * nothing else can read it, because the loop made it. `init` belongs
+  * to the caller and is never released: it may be a lazy frame that
+  * round 0's checkpoint materializes (CC, label propagation, k-core,
+  * k-means) or project a checkpoint that every round still reads
+  * (PageRank's degree frame).
   */
 private[graft] object Fixpoint {
 
   final case class Result(frame: DataFrame, metrics: Map[String, Any])
 
   def iterate(tag: String, init: DataFrame, maxRounds: Int,
-      changed: Option[Column] = None, observed: Seq[Column] = Nil,
-      release: Boolean = false)(
+      changed: Option[Column] = None, observed: Seq[Column] = Nil)(
       step: (DataFrame, Int) => DataFrame): Result = {
     val aggs = changed.map(c =>
       coalesce(sum(c.cast("long")), lit(0L)).as("changed")).toSeq ++ observed
@@ -60,7 +60,7 @@ private[graft] object Fixpoint {
       val ck = state.localCheckpoint(eager = true)
       obs.foreach(o => metrics = o.get)
       if (changed.isDefined) left = metrics("changed").asInstanceOf[Long]
-      if (release) Bridge.releaseCheckpoints(cur)
+      if (round > 0) Bridge.releaseCheckpoints(cur)
       cur = ck
       round += 1
     }

@@ -55,20 +55,25 @@ object TestData {
   private def build(spark: SparkSession, sfDir: String,
                     name: String): DataFrame =
     if (name == "events") {
-      // The generator has emitted events.ts as TIMESTAMP(NANOS) in some
-      // rounds (which Spark's vectorized reader rejects — read nanos as
-      // long and convert) and timestamp[us] in others (arrives as
-      // TIMESTAMP_NTZ — cast to the session-zone timestamp the rest of
-      // the catalog and the UTC DuckDB oracle expect). Handle both.
+      // Spark's vectorized reader rejects TIMESTAMP(NANOS): read nanos
+      // as long, and let eventTs convert them.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$sfDir/events.parquet")
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case _ =>
-          raw.withColumn("ts", col("ts").cast("timestamp"))
-      }
+      eventTs(spark.read.parquet(s"$sfDir/events.parquet"))
     } else spark.read.parquet(s"$sfDir/$name.parquet")
+
+  /** `events` as read (a batch or a stream), with `ts` normalized. The
+    * generator has emitted events.ts as TIMESTAMP(NANOS) in some rounds
+    * (read as long nanos, converted here) and timestamp[us] in others
+    * (arrives as TIMESTAMP_NTZ — cast to the session-zone timestamp the
+    * rest of the catalog and the UTC DuckDB oracle expect).
+    */
+  private[graft] def eventTs(raw: DataFrame): DataFrame =
+    raw.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType =>
+        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case _ =>
+        raw.withColumn("ts", col("ts").cast("timestamp"))
+    }
 
   private val months = Seq("jan", "feb", "mar", "apr", "may", "jun",
     "jul", "aug", "sep", "oct", "nov", "dec")

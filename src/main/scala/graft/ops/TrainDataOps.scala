@@ -399,12 +399,12 @@ object TrainDataOps {
     * Each round's k-row centroid frame is materialized eagerly (the
     * [[Fixpoint]] loop) so the next assignment's plan starts from a flat
     * k-row input instead of re-optimizing the whole accumulated
-    * trajectory (sf0.1 best-of-2: 1.89 s -> 1.53 s).
+    * trajectory (sf0.1 best-of-2: 1.89 s -> 1.53 s). The seeds stay
+    * lazy: only round 0 reads them, and its checkpoint materializes them.
     */
   private[graft] def kmeansCentroids(points: DataFrame, k: Int): DataFrame = {
     require(k > 0, s"k-means needs k > 0, got $k")
-    val init = kmeansSeeds(points, k).localCheckpoint(eager = true)
-    Fixpoint.iterate("kmeans", init, 2) { (c, _) =>
+    Fixpoint.iterate("kmeans", kmeansSeeds(points, k), 2) { (c, _) =>
       kmeansUpdate(kmeansAssign(points, c))
     }.frame
   }

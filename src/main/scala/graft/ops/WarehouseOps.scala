@@ -73,7 +73,7 @@ object WarehouseOps {
     // on both sides. The old shape paid Exchange(o, p) for the distinct
     // and Exchange(o) for the join. REPARTITION_BY_NUM at the
     // cluster-scaled conf, so AQE neither coalesces nor re-keys it.
-    val li = PartitionedCheckpoint.repartitionByConf(
+    val li = PinnedRepartition.repartitionByConf(
       table(s, dir, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
       col("o"))
@@ -109,16 +109,15 @@ object WarehouseOps {
   private[graft] def labelPropSettle(pairs: DataFrame,
       maxRounds: Int = 64): DataFrame = {
     val p2 = pairs.toDF("u", "v")
-    // Shuffled by `a` once and checkpointed; the checkpoint does not
-    // carry hash(a) into the rounds under AQE (see
-    // PartitionedCheckpoint), so AQE owns each round's join layout.
-    val edges = PartitionedCheckpoint.byKeys(
-      p2.select(col("u").as("a"), col("v").as("b"))
-        .unionAll(p2.select(col("v").as("a"), col("u").as("b"))),
-      "a")
+    // Every flooding round reads the edges, so they are checkpointed
+    // once; each round exchanges them on `a` itself (a checkpoint leaf
+    // carries no layout under AQE, PartitionedCheckpointSpec). Only
+    // round 0 reads `init`, so round 0's checkpoint materializes it.
+    val edges = p2.select(col("u").as("a"), col("v").as("b"))
+      .unionAll(p2.select(col("v").as("a"), col("u").as("b")))
+      .localCheckpoint(eager = true)
     val init = edges.select(col("a").as("nd")).distinct()
       .select(col("nd"), col("nd").as("l"), lit(0).as("settle"))
-      .localCheckpoint(eager = true)
     // One flooding round as a UNION-formulated single aggregate (r15):
     // neighbor messages union the self rows, one min-keyed groupBy —
     // the old shape paid a join + aggregate + join-back per round.
@@ -157,8 +156,8 @@ object WarehouseOps {
     // check costs no extra action.
     val res = Fixpoint.iterate("labelprop", init, (maxRounds + 1) / 2 + 1,
         changed = Some(col("chg")),
-        observed = Seq(coalesce(max(col("settle")), lit(0)).as("max_settle")),
-        release = true) { (lbl, i) =>
+        observed = Seq(coalesce(max(col("settle")), lit(0)).as("max_settle"))
+    ) { (lbl, i) =>
       flood(flood(lbl, 2 * i + 1).drop("chg"), 2 * i + 2)
     }
     val maxSettle = res.metrics("max_settle") match {
@@ -182,7 +181,7 @@ object WarehouseOps {
     // Same fused single-exchange dedup+join layout as
     // coPurchasePairsPlan (r16, ProbeR16CoP 3/3 pairwise, ~-11%;
     // OPTIMIZATION_r16.md, probe code at commit 9916828).
-    val li = PartitionedCheckpoint.repartitionByConf(
+    val li = PinnedRepartition.repartitionByConf(
       table(s, dir, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
       col("o"))
@@ -340,12 +339,12 @@ object WarehouseOps {
     "q268_bfs_hops" -> Q(
       (s, dir) => {
         val w2 = repeatCoPurchasePairs(s, dir)
-        // Edge layout via PartitionedCheckpoint: each BFS round's
-        // frontier expansion joins on a.
-        val edges = PartitionedCheckpoint.byKeys(
-          w2.select(col("u").as("a"), col("v").as("b"))
-            .unionAll(w2.select(col("v").as("a"), col("u").as("b"))),
-          "a")
+        // Every BFS round's frontier expansion reads the edges, so
+        // they are checkpointed once; each round exchanges them on `a`
+        // itself (a checkpoint leaf carries no layout under AQE).
+        val edges = w2.select(col("u").as("a"), col("v").as("b"))
+          .unionAll(w2.select(col("v").as("a"), col("u").as("b")))
+          .localCheckpoint(eager = true)
         // One checkpoint per BFS round (r15): only the new FRONTIER is
         // materialized; `visited` stays a lazy union of the <= 5
         // checkpointed frontiers (each a LogicalRDD leaf, so the union
@@ -407,7 +406,7 @@ object WarehouseOps {
     // path halving would turn settle rounds into an implementation
     // artifact, plain flooding makes them data. 100 TB posture: each
     // round is one vertex-keyed equi-join + a min-agg with the CC
-    // discipline (edges pre-partitioned + checkpointed once, eager
+    // discipline (edges checkpointed once, eager
     // localCheckpoint per round so lineage never grows, convergence
     // read from an `observe` aggregate during the checkpoint job — no
     // extra action per round); rounds are bounded by seed eccentricity
@@ -1043,11 +1042,11 @@ object WarehouseOps {
 
     // k-core decomposition (k=3) of the co-purchase graph by iterative
     // peeling: drop every vertex with degree < 3, recompute degrees,
-    // repeat — 4 rounds, each checkpointed (q118/q129's
-    // checkpoint-or-lose-partitioning discipline keeps the loop's plan
-    // flat), with the oracle unrolling the same 4 rounds as chained
-    // CTEs. 4 rounds reaches the fixpoint on the gate corpora — the
-    // spec asserts a 5th round changes nothing, so every surviving
+    // repeat — 4 rounds, each checkpointed so no round replays the
+    // earlier ones (lineage truncation keeps the loop's plan flat),
+    // with the oracle unrolling the same 4 rounds as chained CTEs.
+    // 4 rounds reaches the fixpoint on the gate corpora — the spec
+    // asserts a 5th round changes nothing, so every surviving
     // vertex has core degree >= 3. The k-core is the standard
     // "dense-enough neighborhood" filter before community detection or
     // embedding training on a 100 TB interaction graph: each round is
@@ -1058,8 +1057,8 @@ object WarehouseOps {
         val edges0 = pairs0.select(col("u").as("a"), col("v").as("b"))
           .unionAll(pairs0.select(col("v").as("a"), col("u").as("b")))
           .localCheckpoint(eager = true)
+        // Only round 0 reads deg0; round 0's checkpoint materializes it.
         val deg0 = edges0.groupBy("a").agg(count(lit(1)).as("deg"))
-          .localCheckpoint(eager = true)
         // FLAT peeling (r15): every round filters the ONE checkpointed
         // edge list by the current alive set instead of threading a
         // lazily nested semi-join chain — alive shrinks monotonically
@@ -1328,7 +1327,7 @@ object WarehouseOps {
         // three recomputes of the shingle scan) and REPARTITION_BY_NUM
         // on the join key before the exploding self-join, as in
         // jaccardPairsFromHashed (r15).
-        val ssP = PartitionedCheckpoint.repartitionByConf(ss, col("h"))
+        val ssP = PinnedRepartition.repartitionByConf(ss, col("h"))
         val shared = ssP.as("a")
           .join(ssP.as("b"),
             col("a.h") === col("b.h") && col("a.source") < col("b.source"))
@@ -1606,7 +1605,7 @@ object WarehouseOps {
         // everything anyway) and q234 (1/3 — its basket frame fans
         // into three heavier self-joins where the checkpoint still
         // pays) and left alone there.
-        val li = PartitionedCheckpoint.repartitionByConf(
+        val li = PinnedRepartition.repartitionByConf(
           table(s, dir, "lineitem")
             .select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
           col("o"))

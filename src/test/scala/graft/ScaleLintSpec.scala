@@ -120,6 +120,21 @@ class ScaleLintSpec extends SparkSpec {
     out.toString
   }
 
+  test("no repartition feeds a localCheckpoint in main code") {
+    // Under AQE a checkpoint leaf keeps no layout
+    // (PartitionedCheckpointSpec), so a shuffle straight before one is a
+    // full exchange whose result every reader exchanges again. `args`
+    // is a call's argument list, up to three parentheses deep.
+    val args = """\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*\)"""
+    val feed = ("""\.(repartition\w*""" + args + """)\s*\.localCheckpoint\(""").r
+    val offenders = for {
+      (path, text) <- scalaSources("src/main")
+      m <- feed.findAllMatchIn(stripComments(text))
+    } yield s"${java.nio.file.Paths.get(path).getFileName}: ${m.group(1)}"
+    assert(offenders.isEmpty,
+      s"repartition straight into localCheckpoint: ${offenders.mkString(", ")}")
+  }
+
   test("main code reads exactly the listed session options and environment knobs") {
     // Adding a knob is a decision: it edits this list.
     val text = scalaSources("src/main").map(_._2).mkString("\n")
