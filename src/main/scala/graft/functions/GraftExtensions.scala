@@ -21,13 +21,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         DotProduct(children.head, children(1))
       }))
     ext.injectFunction((
-      FunctionIdentifier("graft_lev_leq"),
-      new ExpressionInfo(classOf[LevWithin].getName, "graft_lev_leq"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3, "graft_lev_leq takes exactly 3 arguments")
-        LevWithin(children.head, children(1), children(2))
-      }))
-    ext.injectFunction((
       FunctionIdentifier("graft_jaro_winkler"),
       new ExpressionInfo(classOf[JaroWinklerSim].getName, "graft_jaro_winkler"),
       (children: Seq[Expression]) => {

@@ -8,9 +8,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   * components, PageRank, label propagation, k-core, k-means).
   *
   * Round `r` (from 0) builds `step(prev, r)` over the previous round's
-  * state (`init` for round 0), dumps the plan ([[dumpRoundPlan]]) and
-  * materializes it with ONE eager localCheckpoint: the lineage never
-  * grows, so Catalyst never re-optimizes the accumulated trajectory.
+  * state (`init` for round 0) and materializes it with ONE eager
+  * localCheckpoint: the lineage never grows, so Catalyst never
+  * re-optimizes the accumulated trajectory.
   * A step may run several propagation rounds of its own before the
   * checkpoint (CC and label propagation run two). The step's output is
   * the next state as it stands, so a column that only the `changed`
@@ -56,7 +56,6 @@ private[graft] object Fixpoint {
       val obs = aggs.headOption.map(_ => Observation(s"${tag}_changed_$round"))
       val built = step(cur, round)
       val state = obs.fold(built)(o => built.observe(o, aggs.head, aggs.tail: _*))
-      dumpRoundPlan(state, s"${tag}_round")
       val ck = state.localCheckpoint(eager = true)
       obs.foreach(o => metrics = o.get)
       if (changed.isDefined) left = metrics("changed").asInstanceOf[Long]
@@ -68,22 +67,4 @@ private[graft] object Fixpoint {
       s"$tag failed to converge in $maxRounds rounds")
     Result(cur, metrics)
   }
-
-  /** Plan-evidence hook: when `graft.dump_round_plans` is set to a
-    * directory, write the round's `.explain("formatted")` to
-    * `<dir>/<tag>.txt` (first round only — the file-exists check makes
-    * later rounds no-ops) so the per-round plan shape is a committed
-    * artifact instead of a by-construction claim. Unset (the default,
-    * and always in the bench/driver path) this is one conf lookup per
-    * round.
-    */
-  private def dumpRoundPlan(df: DataFrame, tag: String): Unit =
-    df.sparkSession.conf.getOption("graft.dump_round_plans").foreach { d =>
-      val p = java.nio.file.Paths.get(d, s"$tag.txt")
-      if (!java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.createDirectories(p.getParent)
-        java.nio.file.Files.writeString(p, df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-      }
-    }
 }

@@ -17,34 +17,6 @@ object WarehouseOps {
     */
   private val BinBytes = 8192L
 
-  /** Broadcast hint for graph-side frames (adjacency arrays, survivor
-    * vertex lists), gated by `graft.broadcast_graph_frames` (default
-    * ON — right at bench scale, where these frames are single-digit
-    * MBs). The frames GROW WITH THE GRAPH (Σ|nbrs| = E longs for q129's
-    * adjacency, |V| longs for q152's survivor list), so an
-    * unconditional hint at 100× is a driver OOM, not a graceful
-    * degrade. With the flag off the hint is withheld and the identical
-    * logical plan runs as shuffled hash/semi-joins — AQE can still
-    * promote a side to broadcast at runtime if its MEASURED size
-    * allows, which is the decision a 1000-executor cluster should be
-    * making, not a hardcoded hint. The value is exactly true/false in
-    * any case; anything else is an error naming the key, never a silent
-    * fallback to the default.
-    */
-  private[graft] def graphBroadcastOn(s: SparkSession): Boolean = {
-    val key = "graft.broadcast_graph_frames"
-    s.conf.getOption(key) match {
-      case None => true
-      case Some(v) if v.equalsIgnoreCase("true") => true
-      case Some(v) if v.equalsIgnoreCase("false") => false
-      case Some(v) => throw new IllegalArgumentException(
-        s"$key must be true/false, got '$v'")
-    }
-  }
-
-  private[graft] def graphHint(df: DataFrame): DataFrame =
-    if (graphBroadcastOn(df.sparkSession)) broadcast(df) else df
-
   /** The co-purchase graph's undirected edge set — distinct part pairs
     * sharing an order — deduped and checkpointed ONCE. Shared base
     * stage of q129 (triangle counting) and q152 (k-core) so each graph
@@ -242,18 +214,15 @@ object WarehouseOps {
 
   /** One k-core peeling round: filter `edges(a, b)` to endpoints whose
     * degree (in `deg(a, deg)`) is >= k. The survivor list derives from
-    * the checkpointed deg (no checkpoint of its own); under the default
-    * config it is broadcast into both semi-joins so the round filters
-    * the edge list in place — edges never re-shuffle and the whole
-    * filter pipeline is one stage. The list is |V| longs — it GROWS
-    * with the graph — so the hint rides graphHint: with
-    * graft.broadcast_graph_frames=false the round degrades to shuffled
-    * semi-joins instead of pushing a multi-GB list through the driver
-    * at 100×. Exposed for PlanSpec, which pins BOTH shapes.
+    * the checkpointed deg (no checkpoint of its own) and is broadcast
+    * into both semi-joins, so the round filters the edge list in place:
+    * edges never re-shuffle and the whole filter pipeline is one stage.
+    * The list is |V| longs, so it grows with the graph; at the scales
+    * run here it is a few MB. Exposed for PlanSpec, which pins the shape.
     */
   private[graft] def kcorePeel(edges: DataFrame, deg: DataFrame,
       k: Int): DataFrame = {
-    val alive = graphHint(
+    val alive = broadcast(
       deg.where(col("deg") >= k).select(col("a").as("vv")))
     edges
       .join(alive, col("a") === col("vv"), "left_semi")
@@ -464,21 +433,16 @@ object WarehouseOps {
           .unionAll(pairs.select(col("v").as("n")))
           .groupBy("n").agg(count(lit(1)).as("deg"))
           .localCheckpoint(eager = true)
-        // The oriented edge list stays LAZY under the default gate
-        // (r16/ProbeR16Tri, same record): its orientation joins are
-        // broadcasts of the deg checkpoint over the pairs checkpoint —
-        // pure map work — so materializing it bought nothing but a
-        // blocking barrier; its two consumers (adjacency build, probe
-        // side of the closing join) each re-run the map over the same
-        // materialized leaves.
-        // With graft.broadcast_graph_frames=false the orientation joins
-        // degrade to SHUFFLED joins, and re-running those twice is
-        // O(E) shuffle traffic — so the degraded mode checkpoints e
-        // once, exactly the trade the gate exists to make.
-        val e0 = pairs
-          .join(graphHint(deg.select(col("n").as("u"), col("deg").as("du"))),
+        // The oriented edge list stays LAZY (r16/ProbeR16Tri, same
+        // record): its orientation joins are broadcasts of the deg
+        // checkpoint over the pairs checkpoint — pure map work — so
+        // materializing it bought nothing but a blocking barrier; its
+        // two consumers (adjacency build, probe side of the closing
+        // join) each re-run the map over the same materialized leaves.
+        val e = pairs
+          .join(broadcast(deg.select(col("n").as("u"), col("deg").as("du"))),
             "u")
-          .join(graphHint(deg.select(col("n").as("v"), col("deg").as("dv"))),
+          .join(broadcast(deg.select(col("n").as("v"), col("deg").as("dv"))),
             "v")
           .select(
             when(col("du") < col("dv") ||
@@ -487,8 +451,6 @@ object WarehouseOps {
             when(col("du") < col("dv") ||
               (col("du") === col("dv") && col("u") < col("v")),
               col("v")).otherwise(col("u")).as("dst"))
-        val e = if (graphBroadcastOn(s)) e0
-                else e0.localCheckpoint(eager = true)
         // Close triangles by ADJACENCY INTERSECTION, not a wedge join:
         // collapse the oriented edges to per-source sorted neighbor
         // arrays (|V| rows, Σ|nbrs| = E longs — ~19 MB at sf0.1, well
@@ -498,16 +460,15 @@ object WarehouseOps {
         // is never materialized as join rows: each edge row scans two
         // neighbor arrays inside one codegen stage and emits only true
         // triangles. Same O(E^1.5) work bound, join-row constant gone.
-        // The adjacency frame grows with E, so its broadcast is gated
-        // by `graft.broadcast_graph_frames` (graphHint): flag off →
-        // the same plan degrades to two shuffled hash joins on src/dst.
+        // The broadcast adjacency frame grows with E; no workload here
+        // runs at a scale where it outgrows a broadcast.
         val adj = e.groupBy(col("src"))
           .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
           .localCheckpoint(eager = true)
         val tri = e
-          .join(graphHint(adj.select(col("src").as("ju"), col("nbrs").as("nu"))),
+          .join(broadcast(adj.select(col("src").as("ju"), col("nbrs").as("nu"))),
             col("src") === col("ju"))
-          .join(graphHint(adj.select(col("src").as("jv"), col("nbrs").as("nv"))),
+          .join(broadcast(adj.select(col("src").as("jv"), col("nbrs").as("nv"))),
             col("dst") === col("jv"))
           .select(col("src").as("ta"), col("dst").as("tb"),
             explode(graft.functions.SortedIntersect
@@ -1416,9 +1377,9 @@ object WarehouseOps {
     // common neighbors come from array_intersect over the same
     // per-node sorted adjacency arrays as q129 — one codegen stage per
     // edge row, no three-way join. Degree floor >= 3 keeps the
-    // leaderboard off trivial degree-1 ties. The adjacency frame grows
-    // with the graph, so both joins ride graphHint (q129/q152's gate);
-    // the third consumer of the shared coPurchasePairs base stage.
+    // leaderboard off trivial degree-1 ties. Both adjacency joins are
+    // broadcasts, as in q129; the third consumer of the shared
+    // coPurchasePairs base stage.
     "q158_neighbor_similarity" -> Q(
       (s, dir) => {
         val pairs = coPurchasePairs(s, dir)
@@ -1429,9 +1390,9 @@ object WarehouseOps {
             count(lit(1)).as("deg"))
           .localCheckpoint(eager = true)
         pairs
-          .join(graphHint(adj.select(col("a").as("ju"),
+          .join(broadcast(adj.select(col("a").as("ju"),
             col("nbrs").as("nu"), col("deg").as("du"))), col("u") === col("ju"))
-          .join(graphHint(adj.select(col("a").as("jv"),
+          .join(broadcast(adj.select(col("a").as("jv"),
             col("nbrs").as("nv"), col("deg").as("dv"))), col("v") === col("jv"))
           .where(col("du") >= 3 && col("dv") >= 3)
           .select(col("u"), col("v"), col("du"), col("dv"),

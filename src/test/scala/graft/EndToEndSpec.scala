@@ -187,20 +187,26 @@ class EndToEndSpec extends SparkSpec {
     // One GC leaves behind what it only made collectable: Spark's context
     // cleaner releases earlier suites' state after the collector reports
     // it, so a reading after one GC sat 28 MB above the next in a
-    // multi-suite run. Collect until two readings agree within 0.5 MB.
+    // multi-suite run. Collect until two readings in a row sit within
+    // 0.5 MB of the lowest one seen, and return that lowest: a reading
+    // above it still holds garbage, and a baseline that holds garbage
+    // hides a leak of the same size.
     def settledHeap(): Long = {
       def usedAfterGc(): Long = {
         System.gc()
         Thread.sleep(200)
         java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed
       }
+      val slack = 512 * 1024
       var (prev, cur, rounds) = (usedAfterGc(), usedAfterGc(), 2)
-      while (math.abs(cur - prev) > 512 * 1024 && rounds < 20) {
+      var low = math.min(prev, cur)
+      while ((prev - low > slack || cur - low > slack) && rounds < 20) {
         prev = cur
         cur = usedAfterGc()
+        low = math.min(low, cur)
         rounds += 1
       }
-      cur
+      low
     }
     val heapBefore = settledHeap()
     (1 to 20).foreach(runOnce)

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
 import org.apache.spark.sql.functions._
 import graft.ops.TestData
 
@@ -16,12 +13,6 @@ class PlanSpec extends SparkSpec {
 
   private def executed(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
-
-  /** Every node of a physical plan, through AQE wrappers and subqueries. */
-  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
-    case _ => p +: (p.children ++ p.subqueries).flatMap(planNodes)
-  }
 
   test("filter + projection push down to the parquet scan") {
     val df = TestData.table(spark, sf, "lineitem")
@@ -478,43 +469,17 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
-  test("q129 adjacency joins broadcast by default, degrade to shuffles with the flag off") {
-    // graphHint gate (VERDICT r6 #3): the adjacency frame grows with E,
-    // so the broadcast must be opt-out-able. Default: both closing
-    // joins are broadcast hash joins. Flag off: the hint is withheld —
-    // checkpointed leaves carry no size stats, so the same plan runs as
-    // shuffled equi-joins (what a 100x cluster should get).
+  test("q129 adjacency joins are broadcasts") {
+    // Both closing joins are broadcast hash joins over the adjacency
+    // checkpoint.
     val on = executed("q129_triangle_count")
     assert("BroadcastHashJoin".r.findAllIn(on).size >= 2,
-      s"adjacency not broadcast under the default:\n$on")
-    spark.conf.set("graft.broadcast_graph_frames", "false")
-    try {
-      val offPlan = SparkEntry.queries("q129_triangle_count")(spark, sf)
-        .queryExecution.executedPlan
-      val off = offPlan.toString
-      // r16: the final deg join's probe side is now the top-20 LIMIT
-      // (20 rows, scale-free), which the PLANNER auto-broadcasts from
-      // its own size estimate — that one broadcast is correct at any
-      // scale and allowed in degraded mode. No GRAPH frame (adjacency,
-      // deg) may broadcast: every other BroadcastExchange is a failure.
-      val bx = "BroadcastExchange".r.findAllIn(off).size
-      assert(bx <= 1, s"flag off but $bx broadcasts survive:\n$off")
-      if (bx == 1) {
-        val broadcasts = planNodes(offPlan).collect {
-          case b: BroadcastExchangeLike => b
-        }
-        assert(broadcasts.size == 1 && broadcasts.head.child.exists(
-          _.isInstanceOf[TakeOrderedAndProjectExec]),
-          s"flag off and the surviving broadcast is not the top-20 limit:\n$off")
-      }
-      assert(off.contains("SortMergeJoin") || off.contains("ShuffledHashJoin"),
-        s"no shuffled equi-join in degraded mode:\n$off")
-    } finally spark.conf.unset("graft.broadcast_graph_frames")
+      s"adjacency not broadcast:\n$on")
   }
 
-  test("q152 peel round broadcasts the survivor list by default, shuffles with the flag off") {
-    // The final q152 plan truncates at the last checkpoint, so the gate
-    // is pinned on one peeling round directly.
+  test("q152 peel round broadcasts the survivor list") {
+    // The final q152 plan truncates at the last checkpoint, so the
+    // shape is pinned on one peeling round directly.
     import graft.ops.WarehouseOps
     val pairs = WarehouseOps.coPurchasePairs(spark, sf)
     val edges = pairs.select(col("u").as("a"), col("v").as("b"))
@@ -528,15 +493,6 @@ class PlanSpec extends SparkSpec {
       s"survivor list not broadcast into both semi-joins:\n$on")
     assert(!on.contains("Exchange hashpartitioning"),
       s"a broadcast round must filter edges in place, not re-shuffle:\n$on")
-    spark.conf.set("graft.broadcast_graph_frames", "false")
-    try {
-      val off = WarehouseOps.kcorePeel(edges, deg, 3)
-        .queryExecution.executedPlan.toString
-      assert(!off.contains("BroadcastExchange"),
-        s"flag off but a broadcast survives:\n$off")
-      assert(off.contains("SortMergeJoin") || off.contains("ShuffledHashJoin"),
-        s"no shuffled semi-join in degraded mode:\n$off")
-    } finally spark.conf.unset("graft.broadcast_graph_frames")
   }
 
   test("q152 k-core rounds truncate to a checkpoint scan") {
@@ -577,18 +533,11 @@ class PlanSpec extends SparkSpec {
       p156.contains("TopKPerGroupFinal"), p156)
   }
 
-  test("q158 similarity joins are gated broadcasts over checkpointed graph frames") {
+  test("q158 similarity joins are broadcasts over checkpointed graph frames") {
     val on = executed("q158_neighbor_similarity")
     assert(!on.contains("BroadcastNestedLoopJoin") &&
       !on.contains("CartesianProduct"), on)
     assert("BroadcastHashJoin".r.findAllIn(on).size >= 2, on)
-    spark.conf.set("graft.broadcast_graph_frames", "false")
-    try {
-      val off = executed("q158_neighbor_similarity")
-      assert(!off.contains("BroadcastExchange"), off)
-      assert(off.contains("SortMergeJoin") || off.contains("ShuffledHashJoin"),
-        off)
-    } finally spark.conf.unset("graft.broadcast_graph_frames")
   }
 
   test("q159 ranks ride chunked scans; leaderboard cut is TopKPerGroup") {

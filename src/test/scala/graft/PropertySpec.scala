@@ -232,52 +232,6 @@ class PropertySpec extends SparkSpec {
     got.foreach(v => assert(v >= -0.075 && v <= 1.0, s"out of bounds: $v"))
   }
 
-  test("graft_lev_leq equals levenshtein(a,b) <= k on random pairs") {
-    // the banded early-exit expression must agree with the builtin for
-    // every (a, b, k): random ASCII pairs (including near-duplicates
-    // built by mutating a shared base, so both sides of the threshold
-    // are well represented) plus directed edge cases.
-    val alpha = Gen.alphaNumChar
-    val strGen = for {
-      n <- Gen.chooseNum(0, 24)
-      cs <- Gen.listOfN(n, alpha)
-    } yield cs.mkString
-    val mutGen = for {
-      base <- strGen
-      edits <- Gen.chooseNum(0, 4)
-      seedChars <- Gen.listOfN(edits, alpha)
-      positions <- Gen.listOfN(edits, Gen.chooseNum(0, 23))
-    } yield {
-      var s = base
-      seedChars.zip(positions).foreach { case (c, p) =>
-        s = if (s.isEmpty) c.toString
-        else s.updated(p % s.length, c)
-      }
-      (base, s)
-    }
-    val pairs = sample(Gen.zip(strGen, strGen), 400) ++
-      sample(mutGen, 400) ++
-      Seq(("", ""), ("", "ab"), ("abc", "abc"), ("abc", "acb"),
-        ("abc", "abcd"), ("abcd", "dcba"), ("a", "aaaa"))
-    for (k <- 0 to 3) {
-      val rows = pairs.toDF("a", "b")
-        .select(col("a"), col("b"),
-          graft.functions.LevWithin.levWithin(col("a"), col("b"), k),
-          levenshtein(col("a"), col("b")) <= k)
-        .collect()
-      rows.foreach { r =>
-        assert(r.getBoolean(2) == r.getBoolean(3),
-          s"k=$k: (${r.getString(0)}, ${r.getString(1)}) " +
-            s"graft=${r.getBoolean(2)} builtin=${r.getBoolean(3)}")
-      }
-    }
-    // SQL registration works too
-    assert(spark.sql(
-      "SELECT graft_lev_leq('kitten', 'sitting', 3)").head().getBoolean(0))
-    assert(!spark.sql(
-      "SELECT graft_lev_leq('kitten', 'sitting', 2)").head().getBoolean(0))
-  }
-
   test("graft_sorted_inter_count equals size(array_intersect) on sorted arrays") {
     // The two-pointer expression must agree with the builtin's SET
     // semantics for every pair of SORTED long arrays — including
@@ -475,18 +429,6 @@ class PropertySpec extends SparkSpec {
 
     assert(rowSet(graft.ops.DedupOps.hashedShingles(docs)) ==
       rowSet(shingleHashOracle(docs)), "hashed shingles diverged")
-  }
-
-  test("a bad graft.* option value is a loud error naming the key") {
-    // A bare NumberFormatException or "For input string" doesn't say
-    // which option was bad; every parse names its key.
-    def withFlag[A](k: String, v: String)(f: => A): A =
-      try { spark.conf.set(k, v); f } finally spark.conf.unset(k)
-    val e1 = intercept[IllegalArgumentException] {
-      withFlag("graft.broadcast_graph_frames", "yes")(
-        graft.ops.WarehouseOps.graphBroadcastOn(spark))
-    }
-    assert(e1.getMessage.contains("graft.broadcast_graph_frames"))
   }
 
   test("graft_simhash equals the exploded bit-majority aggregate") {
